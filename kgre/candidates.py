@@ -1,10 +1,15 @@
 """Candidate-instance generation: mention chunking, entity-pair generation,
 shortest-dependency-path feature construction.
 
-Spark analog of W1/W3/W4 + J3 + G1/G2/G3 + F1/F4 (SURVEY.md §2): one
-``mapInPandas`` stage, 1 sentence row -> N candidate rows.  All graph work
-is sentence-local (graphs are <= ~100 nodes), so it lives inside the Arrow
-UDF — no shuffle, no distributed graph (SURVEY.md §2.9).
+Spark analog of W1/W3/W4 + J3 + G1/G2/G3 + F1/F4 (SURVEY.md §2): 1
+sentence -> N candidate rows.  All graph work is sentence-local (graphs
+are <= ~100 nodes), so it lives inside the Arrow UDF — no shuffle, no
+distributed graph (SURVEY.md §2.9).
+
+``sentence_stage`` is the ONE per-text Python stage every ingest path
+runs (pages, documents, CoreNLP XML, sentence rows): one ``mapInPandas``
+whose callers plug in a sentence source and an emitter
+(``candidate_emitter`` here; mentions and sentence rows elsewhere).
 
 This is an independent implementation of the reference semantics
 (sentence_structure.py:86-152, instances.py:4-163), verified against the
@@ -328,51 +333,79 @@ def allowlist_filter(cands: DataFrame, allow1=None, allow2=None) -> DataFrame:
     return cands.filter(keep)
 
 
-def candidates_from_sentences(sentences: DataFrame, entity_a: str,
-                              entity_b: str, stop_ids,
-                              allow1=None, allow2=None) -> DataFrame:
-    """sentences rows -> candidate rows (mapInPandas; stop list and
-    optional S5/F3 allowlists are tiny and ship inside the serialized
-    closure — map-side anti/semi joins).  Entry point for pre-parsed
-    corpora (e.g. CoreNLP XML via kgre.corenlp)."""
-    stop = frozenset(stop_ids)
-    a1 = frozenset(allow1) if allow1 is not None else None
-    a2 = frozenset(allow2) if allow2 is not None else None
-
-    has_text = "sent_text" in sentences.columns
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            texts = pdf["sent_text"] if has_text else [None] * len(pdf)
-            for url, sid, toks, deps, st in zip(
-                pdf["url"], pdf["sent_id"], pdf["tokens"], pdf["deps"],
-                texts,
-            ):
-                rows.extend(
-                    sentence_candidates(url, int(sid), toks, deps, entity_a,
-                                        entity_b, stop, a1, a2,
-                                        sent_text=st)
-                )
-            yield rows_to_pdf(rows)
-
-    return sentences.mapInPandas(run, schema=CANDIDATES_SCHEMA)
-
-
 SLIM_COLS = [c for c in _COLS
              if c not in ("sent_text", "start_tok", "end_tok")]
 
 
 def rows_to_pdf(rows, cols=None) -> pd.DataFrame:
-    """list-of-dict candidate rows -> pandas frame, built COLUMNAR (dict of
+    """list-of-dict rows -> pandas frame, built COLUMNAR (dict of
     lists). pd.DataFrame(list_of_dicts) re-infers per row and is the
-    slowest constructor — this is the hot Arrow boundary.  ``cols``
-    selects a reduced column set (SLIM_COLS) for consumers that never
-    read the S14 sentence columns."""
-    if cols is None:
-        cols = _COLS
+    slowest constructor — this is the hot Arrow boundary.  ``cols`` names
+    the output columns: candidate rows by default, SLIM_COLS for
+    consumers that never read the S14 sentence columns, or another
+    stage's row shape (sentences, mentions)."""
+    cols = _COLS if cols is None else cols
     if not rows:
         # empty columns MUST be object-dtype: a bare [] infers float64,
         # which Arrow cannot convert to list<string> fields
         return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
     return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+
+
+def sentence_stage(slim: DataFrame, sentences, emit,
+                   schema: str = CANDIDATES_SCHEMA, cols=None) -> DataFrame:
+    """The one per-text Python stage: a single ``mapInPandas`` over the
+    already-projected (and lang-filtered) ``slim`` frame.  Every input
+    row goes through ``sentences(*row)``, which yields ``(url, sentence)``
+    pairs; every sentence through ``emit(url, sentence)``, which returns
+    row dicts; each batch's rows leave as one ``rows_to_pdf(rows, cols)``
+    frame.  Callers own only their projection, their sentence source
+    (html extract+parse, document text, CoreNLP XML, ready-made sentence
+    rows) and their emitter (candidates, mentions, sentence rows)."""
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                for url, sentence in sentences(*row):
+                    rows.extend(emit(url, sentence))
+            yield rows_to_pdf(rows, cols)
+
+    return slim.mapInPandas(run, schema=schema)
+
+
+def candidate_emitter(entity_a: str, entity_b: str, stop_ids,
+                      allow1=None, allow2=None):
+    """``emit`` for ``sentence_stage``: one parsed sentence -> its candidate
+    rows.  The stop list and the optional S5/F3 allowlists are frozen once
+    here; they are tiny and ship inside the serialized closure (map-side
+    anti/semi joins)."""
+    stop = frozenset(stop_ids)
+    a1 = frozenset(allow1) if allow1 is not None else None
+    a2 = frozenset(allow2) if allow2 is not None else None
+
+    def emit(url, s):
+        return sentence_candidates(url, s["sent_id"], s["tokens"], s["deps"],
+                                   entity_a, entity_b, stop, a1, a2,
+                                   sent_text=s.get("sent_text"))
+
+    return emit
+
+
+def candidates_from_sentences(sentences: DataFrame, entity_a: str,
+                              entity_b: str, stop_ids,
+                              allow1=None, allow2=None) -> DataFrame:
+    """sentences rows -> candidate rows.  Entry point for pre-parsed
+    corpora (e.g. CoreNLP XML via kgre.corenlp); ``sent_text`` is
+    optional (rebuilt from the token words when absent)."""
+    # in table order: a no-op projection over SENTENCES_SCHEMA rows
+    cols = [c for c in sentences.columns
+            if c in ("url", "sent_id", "tokens", "deps", "sent_text")]
+
+    def rows(*row):
+        s = dict(zip(cols, row))
+        s["sent_id"] = int(s["sent_id"])
+        yield s["url"], s
+
+    return sentence_stage(sentences.select(*cols), rows, candidate_emitter(
+        entity_a, entity_b, stop_ids, allow1, allow2))

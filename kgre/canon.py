@@ -5,8 +5,9 @@ counterpart, SURVEY.md §7.4).
 Algorithm: iterative min-label propagation with POINTER JUMPING —
     label(v) <- min(label(v), min over neighbors u of label(u))
     label(v) <- label(label(v))          # path-halving jump
-expressed as DataFrame joins/aggregations, driver loop with
-``localCheckpoint`` every iteration to cut lineage (SURVEY.md §7.4.4).
+expressed as DataFrame joins/aggregations, driver loop with a stage
+checkpoint every iteration to cut lineage (SURVEY.md §7.4.4; the flavor
+follows ``spark.kgre.reliableCheckpoint``, see ``session.stage_checkpoint``).
 Plain neighbor-min converges in O(diameter) rounds (a 10^6-node chain at
 corpus scale would need 10^6 shuffles); the jump composes the label map
 with itself each round, so convergence is O(log diameter) — the same
@@ -26,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgre.session import stage_checkpoint
+
 
 def connected_components(edges: DataFrame, max_iters: int = 50,
                          n_salts: int = 8, stats: dict | None = None) -> DataFrame:
@@ -34,18 +37,16 @@ def connected_components(edges: DataFrame, max_iters: int = 50,
 
     ``stats``: optional dict that receives {'iterations': n} (tests
     assert the O(log diameter) bound)."""
-    sym = (
+    sym = stage_checkpoint(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = stage_checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
     it = 0
     for it in range(1, max_iters + 1):
@@ -83,14 +84,14 @@ def connected_components(edges: DataFrame, max_iters: int = 50,
         # pass (old label threaded through the join), the checkpoint is
         # lazy, and the count below materializes it — no separate
         # convergence join+count job
-        new_labels = (
+        new_labels = stage_checkpoint(
             stepped.join(jump, stepped.component == F.col("pj_node"), "left")
             .select(
                 "node",
                 final_comp.alias("component"),
                 (final_comp != F.col("old_component")).alias("changed"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = new_labels.filter(F.col("changed")).count()
         labels = new_labels.drop("changed")

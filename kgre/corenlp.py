@@ -31,8 +31,11 @@ the reader emits every sentence — same end-to-end result, and the
 sentences table stays reusable for other entity-type pairs.
 
 Scale shape: ``binaryFile`` scan (file listing prunes by glob before any
-bytes are read, like S2/F5) -> one ``mapInPandas`` XML parse (Arrow
-batches; each file is parsed once, sentence rows stream out columnar).
+bytes are read, like S2/F5) -> the shared per-text stage
+(``candidates.sentence_stage``, one ``mapInPandas``) with the XML parse
+as its sentence source: each file is parsed once, and its sentences go
+straight to the emitter — sentence rows (``corenlp_xml_to_sentences``) or
+candidate rows (``corenlp_files_to_candidates``).
 """
 
 from __future__ import annotations
@@ -42,7 +45,8 @@ import xml.etree.ElementTree as ET
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from kgre.parse import SENTENCES_SCHEMA
+from kgre.candidates import candidate_emitter, sentence_stage
+from kgre.parse import SENTENCE_COLS, SENTENCES_SCHEMA, sentence_row
 
 
 def sentences_from_corenlp_xml(content: bytes | str) -> list[dict]:
@@ -122,22 +126,16 @@ def sentence_rows_to_xml(rows: list[dict]) -> bytes:
     return ET.tostring(root)
 
 
+def _xml_sentences(content):
+    """``sentences`` source: one CoreNLP XML file -> its sentences (parsed
+    eagerly, so a malformed file raises at the call)."""
+    return [(s["url"], s) for s in sentences_from_corenlp_xml(content)]
+
+
 def corenlp_xml_to_sentences(files: DataFrame) -> DataFrame:
     """(path, content) file rows -> sentences rows (one mapInPandas)."""
-
-    def run(batches):
-        cols = ("url", "sent_id", "sent_text", "tokens", "deps")
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                rows.extend(sentences_from_corenlp_xml(content))
-            if rows:
-                yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
-            else:
-                yield pd.DataFrame({c: pd.Series([], dtype=object)
-                                    for c in cols})
-
-    return files.select("content").mapInPandas(run, schema=SENTENCES_SCHEMA)
+    return sentence_stage(files.select("content"), _xml_sentences,
+                          sentence_row, SENTENCES_SCHEMA, SENTENCE_COLS)
 
 
 def _binary_reader(spark: SparkSession, glob: str, recursive: bool):
@@ -186,51 +184,35 @@ def corenlp_files_to_candidates(files: DataFrame, entity_a: str,
                                 entity_b: str, stop_ids,
                                 allow1=None, allow2=None,
                                 on_error: str = "fail") -> DataFrame:
-    """FUSED XML parse + candidate generation — the CoreNLP twin of
-    ``pipeline.pages_to_candidates``: one Python crossing for the whole
-    per-file path.  Chaining ``corenlp_xml_to_sentences`` into
-    ``candidates_from_sentences`` instead costs a second mapInPandas
-    stage whose (tokens, deps) array-of-struct rows round-trip through
-    Arrow — measured 2.4x the pages path on a 5k-doc corpus, vs ~1.2x
-    fused.  The composable sentence reader stays for sentence-level
-    consumers (eval-data mentions, ad-hoc analysis).
+    """XML parse + candidate generation in ONE Python crossing — the
+    shared per-text stage with the XML parse as its sentence source, as
+    ``pipeline.pages_to_candidates`` uses html extract+parse.  Chaining
+    ``corenlp_xml_to_sentences`` into ``candidates_from_sentences``
+    instead costs a second mapInPandas stage whose (tokens, deps)
+    array-of-struct rows round-trip through Arrow — measured 2.4x the
+    pages path on a 5k-doc corpus, vs ~1.2x in one stage.  The
+    composable sentence reader stays for sentence-level consumers
+    (eval-data mentions, ad-hoc analysis).
 
     ``on_error``: 'fail' (default — reference parity, one bad file kills
     the job with its path in the error) or 'skip' (permissive web-scale
     mode: unparseable files contribute zero rows; audit what was dropped
     with ``corenlp_corrupt_files``)."""
-    from kgre.candidates import (CANDIDATES_SCHEMA, rows_to_pdf,
-                                 sentence_candidates)
-
     if on_error not in ("fail", "skip"):
         raise ValueError("on_error must be 'fail' or 'skip'")
-    stop = frozenset(stop_ids)
-    a1 = frozenset(allow1) if allow1 is not None else None
-    a2 = frozenset(allow2) if allow2 is not None else None
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    sents = sentences_from_corenlp_xml(content)
-                except Exception as exc:
-                    if on_error == "fail":
-                        raise ValueError(
-                            "corenlp ingest failed on %s" % path) from exc
-                    continue
-                for s in sents:
-                    rows.extend(
-                        sentence_candidates(
-                            s["url"], s["sent_id"], s["tokens"], s["deps"],
-                            entity_a, entity_b, stop, a1, a2,
-                            sent_text=s["sent_text"],
-                        )
-                    )
-            yield rows_to_pdf(rows)
+    def sentences(path, content):
+        try:
+            return _xml_sentences(content)
+        except Exception as exc:
+            if on_error == "fail":
+                raise ValueError(
+                    "corenlp ingest failed on %s" % path) from exc
+            return ()
 
-    return files.select("path", "content").mapInPandas(
-        run, schema=CANDIDATES_SCHEMA)
+    return sentence_stage(files.select("path", "content"), sentences,
+                          candidate_emitter(entity_a, entity_b, stop_ids,
+                                            allow1, allow2))
 
 
 def read_corenlp_candidates(spark: SparkSession, path: str, entity_a: str,

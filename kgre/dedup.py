@@ -186,6 +186,8 @@ def jaccard_pairs(docs: DataFrame, n: int = 1, threshold: float = 0.6) -> DataFr
 
 def _minhash_signatures_from_shingles(sh: DataFrame,
                                       n_hashes: int = 8) -> DataFrame:
+    """(doc_id, sig array<string>): per seed, the lexicographic min of
+    md5(shingle || '#' || seed) — engine-portable MinHash."""
     mins = [
         F.min(F.md5(F.concat_ws("#", "shingle", F.lit(str(i))))).alias("h%d" % i)
         for i in range(n_hashes)
@@ -194,14 +196,6 @@ def _minhash_signatures_from_shingles(sh: DataFrame,
     return agg.select(
         "doc_id", F.array(*[F.col("h%d" % i) for i in range(n_hashes)]).alias("sig")
     )
-
-
-def minhash_signatures(docs: DataFrame, n_hashes: int = 8,
-                       shingle_n: int = 3) -> DataFrame:
-    """(doc_id, sig array<string>): per seed, the lexicographic min of
-    md5(shingle || '#' || seed) — engine-portable MinHash."""
-    return _minhash_signatures_from_shingles(shingles(docs, shingle_n),
-                                             n_hashes)
 
 
 def _lsh_candidates_from_shingles(sh: DataFrame, n_hashes: int, bands: int,

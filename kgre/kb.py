@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgre.session import stage_checkpoint
+
 KB_SCHEMA = "rel string, e1 string, e2 string, rel_text string"
 ONTOLOGY_SCHEMA = "term string, is_a string"
 
@@ -48,7 +50,7 @@ def ontology_closure_df(onto: DataFrame) -> DataFrame:
         .distinct()
     )
     closure = terms.select(F.col("term"), F.col("term").alias("anc")).union(edges)
-    closure = closure.distinct().localCheckpoint()
+    closure = stage_checkpoint(closure.distinct())
     prev_count = closure.count()
     for _ in range(_MAX_CLOSURE_ITERS):
         step = (
@@ -56,7 +58,7 @@ def ontology_closure_df(onto: DataFrame) -> DataFrame:
             .join(F.broadcast(edges.alias("e")), F.col("c.anc") == F.col("e.term"))
             .select(F.col("c.term"), F.col("e.anc"))
         )
-        nxt = closure.union(step).distinct().localCheckpoint()
+        nxt = stage_checkpoint(closure.union(step).distinct())
         n = nxt.count()
         closure = nxt
         if n == prev_count:

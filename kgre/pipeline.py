@@ -4,10 +4,12 @@ Physical plan (SURVEY.md §4.3):
 
   scan pages (lang filter pushed to scan, html pruned into extract only)
    -> [optional repartition(url-hash)] even work units before Python
-   -> mapInPandas: extract html->text + sentence split/parse + candidate
-      features  (ONE fused Arrow stage — a single JVM->Python crossing for
-      the whole per-row path; parse.py / candidates.py remain separately
-      composable + tested)
+   -> candidates.sentence_stage (ONE mapInPandas, a single JVM->Python
+      crossing for the whole per-row path): html -> text -> sentence
+      split/parse (the sentence source) -> candidate features (the
+      emitter).  Every ingest path runs this same stage with its own
+      source and emitter: documents text, CoreNLP XML, sentence rows;
+      mentions and sentence rows instead of candidates
    -> checkpoint: candidates parquet (the reference's TFRecord boundary,
       S10) — consumed twice (vocab agg + scoring) without recompute
    -> groupBy vocab counts (single shuffle, map-side partial agg)
@@ -17,18 +19,30 @@ Physical plan (SURVEY.md §4.3):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgre import kb as kbmod
-from kgre import nlp
-from kgre.candidates import (CANDIDATES_SCHEMA, SLIM_CANDIDATES_SCHEMA,
-                             SLIM_COLS, rows_to_pdf, sentence_candidates)
+from kgre.candidates import (SLIM_CANDIDATES_SCHEMA, SLIM_COLS,
+                             candidate_emitter, sentence_stage,
+                             sentence_mention_rows)
 from kgre.extract import extract_text_from_html
+from kgre.parse import text_sentences
 from kgre.score import score_candidates
 from kgre.util import ensure_min_partitions
 from kgre.vocab import collect_vocab_sets, two_phase_dense_ids, vocab_counts
+
+
+def _lang_pages(pages: DataFrame, lang: str, min_partitions) -> DataFrame:
+    # lang filter first => predicate pushdown to the scan; only url+html
+    # survive into the Python stage (column pruning keeps the blob out of
+    # every later exchange)
+    slim = pages.filter(F.col("lang") == lang).select("url", "html")
+    return ensure_min_partitions(slim, cols=("url",), target=min_partitions)
+
+
+def _page_sentences(url, html):
+    return text_sentences(url, extract_text_from_html(html))
 
 
 def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
@@ -48,31 +62,9 @@ def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
     load_data.py:436-453, :553-567) applied inside the fused stage —
     broadcast-sized sets shipped in the closure, a map-side semi+anti join.
     """
-    stop = frozenset(stop_ids)
-    a1 = frozenset(allow1) if allow1 is not None else None
-    a2 = frozenset(allow2) if allow2 is not None else None
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text_from_html(html)
-                for s in nlp.parse_text(text):
-                    rows.extend(
-                        sentence_candidates(
-                            url, s["sent_id"], s["tokens"], s["deps"],
-                            entity_a, entity_b, stop, a1, a2,
-                            sent_text=s["sent_text"],
-                        )
-                    )
-            yield rows_to_pdf(rows)
-
-    # lang filter first => predicate pushdown to the scan; only url+html
-    # survive into the Python stage (column pruning keeps the blob out of
-    # every later exchange)
-    slim = pages.filter(F.col("lang") == lang).select("url", "html")
-    slim = ensure_min_partitions(slim, cols=("url",), target=min_partitions)
-    return slim.mapInPandas(run, schema=CANDIDATES_SCHEMA)
+    emit = candidate_emitter(entity_a, entity_b, stop_ids, allow1, allow2)
+    return sentence_stage(_lang_pages(pages, lang, min_partitions),
+                          _page_sentences, emit)
 
 
 def documents_to_candidates(docs: DataFrame, entity_a: str, entity_b: str,
@@ -101,45 +93,35 @@ def documents_to_candidates(docs: DataFrame, entity_a: str, entity_b: str,
     end_tok) from the OUTPUT schema, so the widest column never crosses
     the Arrow boundary when the consumer is the TEST-mode scorer.
     """
-    from kgre.extract import extract_text_from_html
     from kgre.webtext import doc_to_page, page_text
 
-    stop = frozenset(stop_ids)
-    a1 = frozenset(allow1) if allow1 is not None else None
-    a2 = frozenset(allow2) if allow2 is not None else None
-    cols = None if with_sentence else SLIM_COLS
+    def sentences(doc_id, dtext):
+        doc_id = int(doc_id)
+        text = page_text(doc_id, dtext)
+        if "</p></article>" in text:   # pragma: no cover
+            page = doc_to_page(doc_id, dtext, "")
+            text = extract_text_from_html(page["html"])
+        return text_sentences("https://docs.example/d%d" % doc_id, text)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, dtext in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                url = "https://docs.example/d%d" % doc_id
-                text = page_text(doc_id, dtext)
-                if "</p></article>" in text:   # pragma: no cover
-                    page = doc_to_page(doc_id, dtext, "")
-                    text = extract_text_from_html(page["html"])
-                for s in nlp.parse_text(text):
-                    rows.extend(
-                        sentence_candidates(
-                            url, s["sent_id"], s["tokens"], s["deps"],
-                            entity_a, entity_b, stop, a1, a2,
-                            sent_text=s["sent_text"],
-                        )
-                    )
-            yield rows_to_pdf(rows, cols=cols)
-
-    slim = docs.select("doc_id", "text", "lang")
     if lang is not None:
-        slim = slim.filter(F.col("lang") == lang)
-    slim = slim.select("doc_id", "text")
-    slim = ensure_min_partitions(slim, cols=("doc_id",),
-                                 target=min_partitions)
-    schema = CANDIDATES_SCHEMA if with_sentence else SLIM_CANDIDATES_SCHEMA
-    return slim.mapInPandas(run, schema=schema)
+        docs = docs.filter(F.col("lang") == lang)
+    slim = ensure_min_partitions(docs.select("doc_id", "text"),
+                                 cols=("doc_id",), target=min_partitions)
+    out = () if with_sentence else (SLIM_CANDIDATES_SCHEMA, SLIM_COLS)
+    return sentence_stage(slim, sentences, candidate_emitter(
+        entity_a, entity_b, stop_ids, allow1, allow2), *out)
 
 
 MENTIONS_SCHEMA = "url string, side string, entity_key string"
+
+
+def _mentions(slim: DataFrame, sentences, entity_a: str,
+              entity_b: str) -> DataFrame:
+    def emit(url, s):
+        return sentence_mention_rows(url, s["tokens"], entity_a, entity_b)
+
+    return sentence_stage(slim, sentences, emit, MENTIONS_SCHEMA,
+                          ("url", "side", "entity_key"))
 
 
 def pages_to_mentions(pages: DataFrame, entity_a: str, entity_b: str,
@@ -149,50 +131,18 @@ def pages_to_mentions(pages: DataFrame, entity_a: str, entity_b: str,
     load_data.py:828-871): one row per counted mention occurrence;
     ``entity_a``/``entity_b`` are EXACT NER keys here (the reference's
     dict-membership test), unlike the substring match of pair generation."""
-    from kgre.candidates import sentence_mention_rows
-
-    def run(batches):
-        cols = ("url", "side", "entity_key")
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text_from_html(html)
-                for s in nlp.parse_text(text):
-                    rows.extend(sentence_mention_rows(url, s["tokens"],
-                                                      entity_a, entity_b))
-            if rows:
-                yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
-            else:
-                yield pd.DataFrame({c: pd.Series([], dtype=object)
-                                    for c in cols})
-
-    slim = pages.filter(F.col("lang") == lang).select("url", "html")
-    slim = ensure_min_partitions(slim, cols=("url",), target=min_partitions)
-    return slim.mapInPandas(run, schema=MENTIONS_SCHEMA)
+    return _mentions(_lang_pages(pages, lang, min_partitions),
+                     _page_sentences, entity_a, entity_b)
 
 
 def sentences_to_mentions(sentences: DataFrame, entity_a: str,
                           entity_b: str) -> DataFrame:
     """EVAL_DATA mention rows from pre-parsed sentences (the CoreNLP-XML
-    ingest path of ``pages_to_mentions`` — same ``sentence_mention_rows``
-    core, no extract/parse stage)."""
-    from kgre.candidates import sentence_mention_rows
-
-    def run(batches):
-        cols = ("url", "side", "entity_key")
-        for pdf in batches:
-            rows = []
-            for url, toks in zip(pdf["url"], pdf["tokens"]):
-                rows.extend(sentence_mention_rows(url, toks,
-                                                  entity_a, entity_b))
-            if rows:
-                yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
-            else:
-                yield pd.DataFrame({c: pd.Series([], dtype=object)
-                                    for c in cols})
-
-    return sentences.select("url", "tokens").mapInPandas(
-        run, schema=MENTIONS_SCHEMA)
+    ingest path of ``pages_to_mentions`` — same stage and emitter, with
+    each sentence row as its own source instead of extract/parse)."""
+    return _mentions(sentences.select("url", "tokens"),
+                     lambda url, tokens: ((url, {"tokens": tokens}),),
+                     entity_a, entity_b)
 
 
 class KgPipeline:

@@ -199,6 +199,17 @@ def test_cli_corenlp_xml_routes_all_modes(spark, tmp_path, monkeypatch):
     cli.main(["eval-data", "--corenlp-xml", str(xml_dir), "--out", out_e])
     assert spark.read.parquet(out_e + "/dist_subj").count() > 0
     assert spark.read.parquet(out_e + "/dist_phrases").count() > 0
+    # both mention paths (pages_to_mentions over the synthetic pages,
+    # sentences_to_mentions over the XML of the same corpus) and both
+    # candidate paths give the same distributions
+    out_ep = str(tmp_path / "eval_pages")
+    cli.main(["eval-data", "--synth", "40", "--out", out_ep])
+    for dist in ("dist_phrases", "dist_subj"):
+        want = sorted(map(tuple, spark.read.parquet(
+            f"{out_ep}/{dist}").collect()))
+        got = sorted(map(tuple, spark.read.parquet(
+            f"{out_e}/{dist}").collect()))
+        assert got == want and want, dist
 
     with pytest.raises(SystemExit, match="clean mode"):
         cli.main(["clean", "--corenlp-xml", str(xml_dir),

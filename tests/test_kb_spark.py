@@ -98,6 +98,15 @@ def test_parse_sentences_roundtrip(spark):
             assert [d.asDict() for d in r["deps"]] == s["deps"]
             n_sent += 1
     assert n_sent == len(rows) > 0
+    # pages whose html has no article body extract to "": a batch of
+    # only such rows parses to zero sentences and must still convert
+    ts = pages[0]["warc_ts"]
+    empty_df = spark.createDataFrame(
+        [("https://empty.example/%d" % i, ts, b"", "", "en")
+         for i in range(2)],
+        schema=synthgen.PAGES_SCHEMA,
+    ).coalesce(1)
+    assert parse_sentences(empty_df).collect() == []
 
 
 def test_label_join_hub_entity_partition_balance(spark):

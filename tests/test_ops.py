@@ -660,8 +660,14 @@ def test_cap_warning_without_stats(spark):
 
 def test_stage_checkpoint_flavors_equivalent(spark, tmp_path):
     """VERDICT r4 #3: the checkpoint flavor is a session config; both
-    flavors must produce identical dense ids and clean survivors, and
-    the reliable flavor without a checkpoint dir fails loudly."""
+    flavors must produce identical dense ids, clean survivors, connected
+    components and ontology closure, the reliable flavor without a
+    checkpoint dir fails loudly, and with the flag on connected
+    components really writes reliable checkpoint files."""
+    import os
+
+    from kgre import kb as kbmod
+    from kgre import synthgen
     from kgre.clean import clean_documents
     from kgre.session import stage_checkpoint
     from kgre.vocab import two_phase_dense_ids
@@ -671,15 +677,24 @@ def test_stage_checkpoint_flavors_equivalent(spark, tmp_path):
         + [("b", "g%02d" % i, i) for i in range(20)],
         "kind string, feature string, cnt long")
     docs = _docs_df(spark)
+    edges = spark.createDataFrame(
+        [("n%d" % i, "n%d" % (i + 1)) for i in range(6)]
+        + [("m3", "m1"), ("m2", "m3"), ("x", "x")],
+        "src string, dst string")
+    onto = kbmod.ontology_df(spark, synthgen.ontology_rows())
 
     def run_both():
         ids = sorted(map(tuple, two_phase_dense_ids(
             feats, ["kind"], [F.desc("cnt"), F.asc("feature")]).collect()))
         surv = sorted(r["doc_id"] for r in clean_documents(
             docs, min_quality=0.0, lang_threshold=0.02).collect())
-        return ids, surv
+        comps = sorted(map(tuple, canon.connected_components(edges)
+                           .collect()))
+        closure = sorted(map(tuple, kbmod.ontology_closure_df(onto)
+                             .collect()))
+        return ids, surv, comps, closure
 
-    local_ids, local_surv = run_both()
+    local_ids, local_surv, local_comps, local_closure = run_both()
     spark.conf.set("spark.kgre.reliableCheckpoint", "true")
     try:
         if spark.sparkContext.getCheckpointDir() is None:
@@ -689,10 +704,21 @@ def test_stage_checkpoint_flavors_equivalent(spark, tmp_path):
             with pytest.raises(ValueError, match="checkpoint"):
                 stage_checkpoint(docs)
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        rel_ids, rel_surv = run_both()
+        rel_ids, rel_surv, rel_comps, rel_closure = run_both()
+        # connected components alone, into a fresh dir: its iterative
+        # labels must land in reliable checkpoint files, not only in
+        # executor-local blocks
+        cc_dir = tmp_path / "cc_ckpt"
+        spark.sparkContext.setCheckpointDir(str(cc_dir))
+        canon.connected_components(edges).collect()
+        written = [f for _, _, fs in os.walk(cc_dir) for f in fs]
     finally:
         spark.conf.set("spark.kgre.reliableCheckpoint", "false")
     assert rel_ids == local_ids and rel_surv == local_surv
+    assert rel_comps == local_comps and local_comps
+    assert dict(local_comps)["n6"] == "n0" and dict(local_comps)["m3"] == "m1"
+    assert rel_closure == local_closure and local_closure
+    assert written, "connected_components wrote no reliable checkpoint"
 
 
 def test_canonical_url_edge_cases(spark):

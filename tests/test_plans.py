@@ -2,10 +2,12 @@
 (predicate pushdown, column pruning, broadcast joins, single-scan vocab)
 must be visible in the optimized plan, not just assumed."""
 
+import re
+
 import pytest
 
 from kgre import synthgen
-from kgre.pipeline import pages_to_candidates
+from kgre.pipeline import documents_to_candidates, pages_to_candidates
 from kgre.vocab import vocab_counts
 
 SF = "/root/testdata/sf0.01"
@@ -51,7 +53,11 @@ def test_dimension_joins_broadcast(spark):
 def test_candidates_stage_prunes_page_columns(spark):
     """The html blob is consumed by the fused Python stage; text/warc_ts
     must never be read from the pages scan (at Common-Crawl scale the
-    unused columns dominate I/O)."""
+    unused columns dominate I/O).  Every fused entry point (pages,
+    documents, CoreNLP XML) plans exactly one Python crossing."""
+    from kgre import nlp
+    from kgre.corenlp import read_corenlp_candidates, sentence_rows_to_xml
+
     pages = synthgen.pages_df(spark, 10)
     cands = pages_to_candidates(pages, "GENE", "ONTOLOGY",
                                 synthgen.stop_entity_ids())
@@ -68,6 +74,29 @@ def test_candidates_stage_prunes_page_columns(spark):
         read = [ln for ln in plan2.splitlines() if "ReadSchema" in ln][0]
         assert "html" in read and "url" in read
         assert "warc_ts" not in read and "text" not in read
+        assert _python_stages(plan2) == 1, plan2
+    with tempfile.TemporaryDirectory() as d:
+        rows = [dict(s, url="u0") for s in nlp.parse_text(
+            synthgen.gen_pages_rows(2)[0]["text"])]
+        with open(f"{d}/d0.txt", "wb") as f:
+            f.write(sentence_rows_to_xml(rows))
+        plan_x = _plan(read_corenlp_candidates(
+            spark, d, "GENE", "ONTOLOGY", synthgen.stop_entity_ids()))
+        assert _python_stages(plan_x) == 1, plan_x
+    # the documents entry point reads only what it parses (+ the lang
+    # predicate) from the scan, in one Python crossing
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan3 = _plan(documents_to_candidates(docs, "GENE", "ONTOLOGY",
+                                          synthgen.stop_entity_ids()))
+    reads = [ln for ln in plan3.splitlines() if "ReadSchema" in ln]
+    assert len(reads) == 1, plan3
+    read_cols = re.findall(r"(\w+):", reads[0].split("ReadSchema:")[1])
+    assert sorted(read_cols) == ["doc_id", "lang", "text"], reads[0]
+    assert _python_stages(plan3) == 1, plan3
+
+
+def _python_stages(plan: str) -> int:
+    return len(set(re.findall(r"\((\d+)\) MapInPandas", plan)))
 
 
 def test_vocab_is_single_scan(spark):
