@@ -98,7 +98,7 @@ def _kg_scored(spark, docs):
     pipe = KgPipeline(spark, occur_count=2)
     scored, _, _ = pipe.run_from_candidates(
         cands, synthgen.kb_rows(), synthgen.ontology_rows(),
-        emit_threshold=0.5, need_vocab_ids=False)
+        emit_threshold=0.5)
     return scored
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,9 +90,11 @@ def run_stage_with_resume(
         rows_out = spark.read.parquet(f"{out_dir}/bucket={b}").count()
         wall_ms = int((time.time() - t0) * 1000)
         with manifest_lock:
+            # pandas, not a list: a list-built frame starts a plain-RDD
+            # Python worker pool just to convert this row
             spark.createDataFrame(
-                [(stage, b, rows_in, rows_out, int(fingerprint), wall_ms,
-                  "ok")],
+                pd.DataFrame([(stage, b, rows_in, rows_out, int(fingerprint),
+                               wall_ms, "ok")]),
                 schema=MANIFEST_SCHEMA,
             ).write.mode("append").parquet(manifest_dir)
 

@@ -10,9 +10,11 @@ Physical plan (SURVEY.md §4.3):
       emitter).  Every ingest path runs this same stage with its own
       source and emitter: documents text, CoreNLP XML, sentence rows;
       mentions and sentence rows instead of candidates
-   -> checkpoint: candidates parquet (the reference's TFRecord boundary,
-      S10) — consumed twice (vocab agg + scoring) without recompute
-   -> groupBy vocab counts (single shuffle, map-side partial agg)
+   -> candidates boundary: parquet (the reference's TFRecord boundary,
+      S10) or a stage checkpoint — consumed twice (vocab agg +
+      scoring) without recompute
+   -> groupBy vocab counts (single shuffle, map-side partial agg) ->
+      one Arrow collect, dense ids ranked on the driver
    -> mapInPandas score over broadcast {weights, vocab, KB} -> triples
    -> triples sink partitioned by rel
 """
@@ -29,8 +31,9 @@ from kgre.candidates import (SLIM_CANDIDATES_SCHEMA, SLIM_COLS,
 from kgre.extract import extract_text_from_html
 from kgre.parse import text_sentences
 from kgre.score import score_candidates
+from kgre.session import stage_checkpoint
 from kgre.util import ensure_min_partitions
-from kgre.vocab import collect_vocab_sets, two_phase_dense_ids, vocab_counts
+from kgre.vocab import build_vocab, collect_vocab_sets
 
 
 def _lang_pages(pages: DataFrame, lang: str, min_partitions) -> DataFrame:
@@ -167,8 +170,7 @@ class KgPipeline:
             checkpoint_dir: str | None = None,
             repartition: int | None = None,
             allow1=None, allow2=None, with_sentence: bool = False,
-            emit_threshold: float | None = None,
-            need_vocab_ids: bool = True):
+            emit_threshold: float | None = None):
         """pages -> (scored triples DF, vocab DF, key_order).
 
         ``emit_threshold=0.5`` pushes the emitted-triple gate into the
@@ -179,27 +181,16 @@ class KgPipeline:
                                     stop_ids, allow1=allow1, allow2=allow2)
         return self.run_from_candidates(
             cands, kb_rows_list, onto_rows, checkpoint_dir=checkpoint_dir,
-            with_sentence=with_sentence, emit_threshold=emit_threshold,
-            need_vocab_ids=need_vocab_ids)
+            with_sentence=with_sentence, emit_threshold=emit_threshold)
 
     def run_from_candidates(self, cands: DataFrame, kb_rows_list, onto_rows,
                             checkpoint_dir: str | None = None,
                             with_sentence: bool = False,
-                            emit_threshold: float | None = None,
-                            need_vocab_ids: bool = True):
+                            emit_threshold: float | None = None):
         """candidates -> (scored triples DF, vocab DF, key_order) — the
         vocab + scoring tail of ``run``, exposed so pre-parsed corpora
         (CoreNLP XML via kgre.corenlp -> candidates_from_sentences) enter
-        the same plan after the ingest stage.
-
-        ``need_vocab_ids=False`` (r6): scoring only needs the vocabulary
-        feature SETS (weights are keyed by feature string, kgre/model.py)
-        — the dense-id RANKING (two-phase rank: range shuffle + eager
-        checkpoint + count job + window) is built only when the caller
-        consumes the vocab table (CLI vocab sink, CV folds).  With False
-        the returned vocab DF is the pruned (kind, feature, cnt) counts
-        without ids, and the flagship scoring path runs two jobs instead
-        of four."""
+        the same plan after the ingest stage."""
         fwd, rev, key_order = self.prepare_kb(kb_rows_list, onto_rows)
         if checkpoint_dir:
             # materialized stage boundary (reference: per-file TFRecord
@@ -208,30 +199,19 @@ class KgPipeline:
             cands.write.mode("overwrite").parquet(checkpoint_dir)
             cands = self.spark.read.parquet(checkpoint_dir)
         else:
-            if not with_sentence and "sent_text" in cands.columns:
-                # TEST mode over a full-schema candidates table: the S14
-                # sentence columns (the widest ones) stay out of the
-                # cached batches.  When the input is already the slim
-                # fused stage there is nothing to drop — and adding an
-                # identity projection here would break analyzed-plan
-                # equality with other consumers of the same candidates
-                # plan, losing the in-session cache match.
+            if not with_sentence:
+                # TEST mode: the S14 sentence columns (the widest ones)
+                # stay out of the checkpointed blocks
                 cands = cands.select(*[c for c in SLIM_COLS
                                        if c in cands.columns])
-            # cache is materialized by the (single-scan) vocab job and
-            # reused by the scoring job
-            cands = cands.persist()
-        counts = vocab_counts(cands).filter(
-            F.col("cnt") >= self.occur_count)
-        if need_vocab_ids:
-            vocab_df = two_phase_dense_ids(
-                counts, ["kind"], [F.desc("cnt"), F.asc("feature")])
-        else:
-            vocab_df = counts
-        # collect_vocab_sets only reads (kind, feature): with ids it
-        # reads the two-phase checkpoint; without, the pruned counts
-        vocabs = collect_vocab_sets(vocab_df)
-        scored = score_candidates(cands, vocabs, key_order, fwd, rev,
+            # computed once, read by the vocab count and the scoring job;
+            # unlike a persist it leaves no CacheManager entry (its blocks
+            # are freed with the frames).  Eager, so the stage runs inside
+            # a SQL execution and its operator metrics are recorded
+            cands = stage_checkpoint(cands)
+        vocab_df = build_vocab(cands, self.occur_count)
+        scored = score_candidates(cands, collect_vocab_sets(vocab_df),
+                                  key_order, fwd, rev,
                                   with_sentence=with_sentence,
                                   emit_threshold=emit_threshold)
         return scored, vocab_df, key_order

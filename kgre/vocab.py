@@ -13,12 +13,15 @@ scored).
 
 Plan shape: four projections of the candidates table union into one
 groupBy — a single shuffle keyed by (kind, feature) with map-side partial
-aggregation; the ranking window partitions by kind (3 tiny partitions
-after the count filter).
+aggregation.  The pruned counts reach the driver in one Arrow ``toPandas``
+(the table every scorer broadcasts anyway) and are ranked there in pandas;
+the vocab DataFrame is rebuilt from that frame through Arrow, so no Spark
+job ranks and no plain-RDD Python worker starts.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -107,7 +110,10 @@ def two_phase_dense_ids(df: DataFrame, partition_cols, order_cols,
         [T.StructField("_opid", T.IntegerType())]
         + [T.StructField("_og_" + c, df.schema[c].dataType) for c in gcols]
         + [T.StructField("_off", T.LongType())])
-    off_df = spark.createDataFrame(offs, off_schema)
+    # pandas, not a list: a list-built frame starts a plain-RDD Python
+    # worker pool just to convert these rows
+    off_df = spark.createDataFrame(pd.DataFrame(offs, dtype=object),
+                                   off_schema)
     w = Window.partitionBy("_pid", *gcols).orderBy(*order_cols)
     # null-safe group-key join: row_number() OVER (PARTITION BY g) ranks
     # the NULL group too, so a plain inner join would silently drop
@@ -120,13 +126,23 @@ def two_phase_dense_ids(df: DataFrame, partition_cols, order_cols,
             .drop("_pid", "_opid", "_off", *["_og_" + c for c in gcols]))
 
 
+VOCAB_SCHEMA = ("kind string not null, feature string, cnt bigint not null, "
+                "id bigint")
+
+
 def build_vocab(candidates: DataFrame, occur_count: int) -> DataFrame:
-    """(kind, feature, cnt, id) with min-count pruning and deterministic
-    dense ids per kind (two-phase rank — per-kind groups never collapse
-    to one task when min-count is low at corpus scale)."""
-    counts = vocab_counts(candidates).filter(F.col("cnt") >= occur_count)
-    return two_phase_dense_ids(counts, ["kind"],
-                               [F.desc("cnt"), F.asc("feature")])
+    """(kind, feature, cnt, id) with min-count pruning and dense ids per
+    kind: ``row_number() OVER (PARTITION BY kind ORDER BY cnt DESC,
+    feature ASC) - 1``.  The pruned counts — the table every scorer
+    collects anyway — are collected once through Arrow and ranked on the
+    driver in pandas (nulls first, as Spark's ``asc``; Python ``str``
+    order is code-point order, which equals Spark's UTF-8 binary order)."""
+    pdf = (vocab_counts(candidates).filter(F.col("cnt") >= occur_count)
+           .toPandas()
+           .sort_values(["kind", "cnt", "feature"],
+                        ascending=[True, False, True], na_position="first"))
+    pdf["id"] = pdf.groupby("kind").cumcount()
+    return candidates.sparkSession.createDataFrame(pdf, VOCAB_SCHEMA)
 
 
 def collect_vocab_sets(vocab: DataFrame) -> dict[str, set]:

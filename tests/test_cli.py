@@ -274,17 +274,19 @@ def test_cli_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
     surface), and the output equals the localCheckpoint default."""
     ckpt = str(tmp_path / "ckpt")
     plain, rel = str(tmp_path / "plain"), str(tmp_path / "rel")
-    _run(spark, monkeypatch, "build", plain)
+    # score without --checkpoint reuses its candidates through a stage
+    # checkpoint (the vocab count job and the scoring job both read it)
+    _run(spark, monkeypatch, "score", plain)
     try:
-        _run(spark, monkeypatch, "build", rel,
+        _run(spark, monkeypatch, "score", rel,
              extra=("--reliable-checkpoint", ckpt))
     finally:
         spark.conf.set("spark.kgre.reliableCheckpoint", "false")
     # reliable checkpoint files actually landed under the dir
     assert any(files for _, _, files in os.walk(ckpt))
-    # identical vocab (dense ids included) under either flavor
-    a = sorted(map(tuple, spark.read.parquet(plain + "/vocab").collect()))
-    b = sorted(map(tuple, spark.read.parquet(rel + "/vocab").collect()))
+    # identical triples under either flavor
+    a = sorted(map(tuple, spark.read.parquet(plain + "/triples").collect()))
+    b = sorted(map(tuple, spark.read.parquet(rel + "/triples").collect()))
     assert a == b and a
 
 

@@ -597,6 +597,104 @@ def test_two_phase_dense_ids_null_group_and_no_cache(spark):
     assert jcache.isEmpty(), "two_phase_dense_ids left a cached plan"
 
 
+def test_build_vocab_driver_rank_matches_window(spark):
+    """build_vocab ranks on the driver; its ids must equal row_number()
+    OVER (PARTITION BY kind ORDER BY cnt DESC, feature ASC) - 1 over the
+    same counts: cnt ties inside and across kinds, a null feature (first,
+    as in Spark's asc) and non-ASCII features (Python code-point order ==
+    Spark's UTF-8 binary order, unlike UTF-16), and an empty vocabulary
+    that keeps the bigint id."""
+    from pyspark.sql import Window
+
+    from kgre.vocab import build_vocab, collect_vocab_sets, vocab_counts
+
+    between = ["b", "a", "\u00e9", "Z", "\uff21", "\U0001f600", None]
+    rows = [([None, "p0", "p1"][i % 3], ["x", "y"],
+             ["e%d" % j for j in range(i)], between) for i in range(6)]
+    cands = spark.createDataFrame(
+        rows, "dep_path_string string, sdp_words array<string>, "
+              "sdp_elements array<string>, between_words array<string>")
+    counts = vocab_counts(cands).filter(F.col("cnt") >= 2)
+    w = Window.partitionBy("kind").orderBy(F.desc("cnt"), F.asc("feature"))
+    want = {(r["kind"], r["feature"]): (r["cnt"], r["id"])
+            for r in counts.withColumn("id", F.row_number().over(w) - 1)
+            .collect()}
+    vocab = build_vocab(cands, 2)
+    assert vocab.schema.simpleString() == (
+        "struct<kind:string,feature:string,cnt:bigint,id:bigint>")
+    got = {(r["kind"], r["feature"]): (r["cnt"], r["id"])
+           for r in vocab.collect()}
+    assert got == want
+    # the ties the ranking has to break really are there
+    assert want[("between", None)] == (6, 0)
+    assert want[("dep_word", "x")][0] == want[("between", "a")][0] == 6
+    assert want[("dep_path", None)] == (2, 0)
+    assert collect_vocab_sets(vocab)["between"] == set(between)
+    empty = build_vocab(cands, 100)
+    assert empty.count() == 0
+    assert empty.schema == vocab.schema
+
+
+def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
+                                                     monkeypatch):
+    """build_vocab, KgPipeline.run_from_candidates and the lineage
+    manifest hand createDataFrame pandas frames, never Python lists: a
+    list-built frame converts its rows in a plain-RDD Python worker pool,
+    a second pool beside the Arrow UDF workers.  Arrow fallback is off so
+    a frame Arrow cannot convert fails instead of taking the list path."""
+    from pyspark.sql import SparkSession
+
+    from kgre import synthgen
+    from kgre.pipeline import KgPipeline, pages_to_candidates
+    from kgre.vocab import build_vocab
+
+    inputs = spark.createDataFrame(
+        [("u%d" % i, i) for i in range(20)], "url string, v int")
+    cands = pages_to_candidates(synthgen.pages_df(spark, 30), "GENE",
+                                "ONTOLOGY", synthgen.stop_entity_ids())
+    seen = []
+    create = SparkSession.createDataFrame
+
+    def recording(self, data, *args, **kwargs):
+        seen.append(type(data))
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", recording)
+    fallback = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    spark.conf.set(fallback, "false")
+    try:
+        build_vocab(cands, 2).collect()
+        scored, vocab_df, _ = KgPipeline(spark, occur_count=2) \
+            .run_from_candidates(cands, synthgen.kb_rows(),
+                                 synthgen.ontology_rows())
+        scored.count()
+        vocab_df.collect()
+        run_stage_with_resume(spark, inputs, "s", lambda df: df,
+                              str(tmp_path / "out"), str(tmp_path / "man"),
+                              n_buckets=2).count()
+    finally:
+        spark.conf.unset(fallback)
+    assert seen and list not in seen, seen
+
+
+def test_kg_pipeline_leaves_no_cached_plan(spark):
+    """KgPipeline.run reuses its candidates through a lazy stage
+    checkpoint, not a persist: once its triples are forced the
+    CacheManager is empty, so a later query over the same plan measures
+    the candidates stage instead of reading a leftover cache."""
+    from kgre import synthgen
+    from kgre.pipeline import KgPipeline
+    from kgre.score import emitted_triples
+
+    spark.catalog.clearCache()
+    scored, _, _ = KgPipeline(spark, occur_count=2).run(
+        synthgen.pages_df(spark, 40), synthgen.kb_rows(),
+        synthgen.ontology_rows(), synthgen.stop_entity_ids(),
+        emit_threshold=0.5)
+    assert emitted_triples(scored).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_clean_extreme_doc_ids(spark):
     """ADVICE r4 (medium): the CC node encoding must be order-preserving
     over the FULL signed-64 doc_id range.  The old lpad(...,12) silently
