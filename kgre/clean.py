@@ -22,7 +22,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgre import dedup, textstats
+from kgre import decontam, dedup, lines, lm, sampling, textstats, urls
 from kgre.canon import connected_components
 from kgre.session import stage_checkpoint
 
@@ -63,205 +63,138 @@ def clean_documents(docs: DataFrame, neardup_threshold: float = 0.6,
                     token_budget: int | dict | None = None) -> DataFrame:
     """documents -> surviving documents (same schema).
 
-    0. (optional, ``url_col``) canonical-URL dedup — keep the min doc_id
-       per canonical URL (kgre.urls): on a crawl corpus the cheapest
-       collapse runs FIRST, before any byte-level hashing touches the
-       (much larger) text column;
-    1. exact dedup — keep the min doc_id per identical raw text;
-    2. near-dup collapse — MinHash-LSH pairs over the survivors,
-       connected components over the pair graph (zero-padded string ids
-       so the CC lexicographic min == numeric min), keep each
-       component's min doc_id;
-    3. quality + language — composite stopword/vowel score >=
-       ``min_quality`` AND stopword-density language-ID == 'en' at
-       ``lang_threshold``.
+    The recipe is an ordered list of ``(stage, fn)`` pairs, one loop
+    applying them; an optional stage is in the list when its argument is
+    not None.  In order (dedup -> doc-level quality -> corpus shaping, so
+    the cheap collapses run before any per-window work and the quota
+    stages see only the docs that survive quality):
 
-    Optional stages (each off by default; ordered dedup -> doc-level
-    quality -> corpus shaping, so the cheap collapses run before any
-    per-window work and the quota stages see only the docs that
-    survive quality):
+    - ``url_dedup`` (``url_col``): keep the min doc_id per canonical URL
+      (kgre.urls) — the cheapest collapse, before any byte-level hashing
+      touches the (much larger) text column;
+    - ``line_dedup`` (``line_dedup_min_count``): C4 line dedup
+      (kgre.lines) — every copy of any line occurring >= N times
+      corpus-wide is stripped and doc text rebuilt, so boilerplate never
+      pollutes the minhash shingles; docs left empty are dropped;
+    - ``exact_dedup``: keep the min doc_id per identical raw text;
+    - ``near_dedup``: MinHash-LSH pairs over the survivors, connected
+      components over the pair graph (zero-padded string ids so the CC
+      lexicographic min == numeric min), keep each component's min;
+    - ``quality_lang``: composite stopword/vowel score >= ``min_quality``
+      AND stopword-density language-ID == 'en' at ``lang_threshold``;
+    - ``repetition`` (``max_rep_frac``): Gopher filter — drop docs whose
+      duplicate-3-gram fraction exceeds it (too-short docs are kept);
+    - ``perplexity`` (``max_bits``): bigram-LM filter (kgre.lm), trained
+      on ``lm_train_docs`` or, when None, on the surviving docs
+      themselves (self-referential outlier pruning);
+    - ``decontaminate`` (``decontam_bench``): drop docs overlapping the
+      bench set by >= 3 5-gram window hits;
+    - ``host_cap`` (requires ``url_col``): at most ``host_cap`` docs per
+      canonical host (kgre.urls.cap_per_host);
+    - ``token_budget``: per-source token quotas
+      (kgre.sampling.token_budget_sample), int or {source: tokens}.
 
-    3a. (``line_dedup_min_count``) C4 line-level dedup (kgre.lines) —
-       runs FIRST among the text-rewriting stages, right after the
-       URL collapse: every copy of any line occurring >= N times
-       corpus-wide is stripped and doc text rebuilt, so boilerplate
-       lines never pollute the downstream minhash shingles; docs left
-       empty are dropped;
-    4. (``max_rep_frac``) Gopher repetition filter — drop docs whose
-       duplicate-3-gram fraction exceeds it (too-short-to-score docs
-       are kept; length rules are separate);
-    5. (``max_bits``) bigram-LM perplexity filter (kgre.lm), trained on
-       ``lm_train_docs`` or, when None, on the surviving docs
-       themselves (self-referential outlier pruning);
-    6. (``decontam_bench``) benchmark decontamination — anti-join docs
-       overlapping the bench set by >= 3 5-gram window hits;
-    7. (``host_cap``, requires ``url_col``) domain balancing — at most
-       ``host_cap`` docs per canonical host (kgre.urls.cap_per_host);
-    8. (``token_budget``) per-source token quotas
-       (kgre.sampling.token_budget_sample), int or {source: tokens}.
-
-    ``manifest``: optional list receiving one
-    ``(stage, rows_in, rows_out, wall_ms)`` tuple per stage (forces a
-    count per stage; leave None to keep the plan fully lazy apart from
-    the CC iteration).  When a manifest is collected it also receives a
-    ``near_dedup_caps`` row carrying (capped_buckets, capped_rows) from
-    the LSH hot-bucket guard — the cap is the right bounded-work
-    behavior at web scale, but recall loss is never silent (VERDICT r4
-    #2).  ``max_bucket``: LSH band-bucket width cap (None = uncapped
-    exact semantics, what the DuckDB oracle models)."""
-
-    def note(stage, rows_in, rows_out, t0):
-        if manifest is not None:
-            manifest.append((stage, rows_in, rows_out,
-                             int((time.time() - t0) * 1000)))
-
-    if url_col is not None:
-        from kgre import urls
-
-        nu0 = docs.count() if manifest is not None else None
-        t0 = time.time()
-        docs = (urls.dedup_by_canonical(docs, id_col="doc_id",
-                                        url_col=url_col)
-                .select(*docs.columns))
-        note("url_dedup", nu0, docs.count() if manifest is not None
-             else None, t0)
-
-    if line_dedup_min_count is not None:
-        from kgre import lines as lines_mod
-
-        nld0 = docs.count() if manifest is not None else None
-        t0 = time.time()
-        cols = docs.columns
-        rebuilt = lines_mod.dedup_lines(docs,
-                                        min_count=line_dedup_min_count)
-        docs = (docs.drop("text").join(rebuilt, "doc_id")
-                .filter(F.length("text") > 0).select(*cols))
-        if manifest is not None:
-            docs = stage_checkpoint(docs, eager=False)
-        note("line_dedup", nld0, docs.count() if manifest is not None
-             else None, t0)
-
-    n0 = docs.count() if manifest is not None else None
-    t0 = time.time()
-    # lazy stage checkpoint, not persist: reps is consumed twice (pair
-    # graph + anti-join) but must leave nothing in the CacheManager —
-    # a bench re-run of the same plan would warn "already cached" and
-    # the entry would outlive the call (same reasoning as
-    # vocab.two_phase_dense_ids, ADVICE r3); checkpoint blocks free on
-    # GC, and the flavor (local vs reliable) is a session config
-    # (session.stage_checkpoint, VERDICT r4 #3)
-    reps = stage_checkpoint(dedup.collapse_exact_docs(docs), eager=False)
-    n1 = reps.count() if manifest is not None else None
-    note("exact_dedup", n0, n1, t0)
-
-    t0 = time.time()
+    Count/cut rule.  ``manifest`` None: the plan stays lazy; only the
+    exact-dedup output is cut (a lazy stage checkpoint — near_dedup reads
+    it twice), apart from the CC iteration.  ``manifest`` a list: every
+    stage's output is cut once and counted once, appending
+    ``(stage, rows_in, rows_out, wall_ms)`` — so the counts are linear,
+    not a recompute of the chain per stage — plus, right after
+    near_dedup, a ``near_dedup_caps`` row carrying (capped_buckets,
+    capped_rows) from the LSH hot-bucket guard: the cap is the right
+    bounded-work behavior at web scale, but recall loss is never silent
+    (VERDICT r4 #2).  ``max_bucket``: LSH band-bucket width cap (None =
+    uncapped exact semantics, what the DuckDB oracle models)."""
+    if host_cap is not None and url_col is None:
+        raise ValueError("host_cap requires url_col")
     cap_stats: dict = {}
-    pairs = dedup.minhash_near_dups(reps, threshold=neardup_threshold,
-                                    collapse_exact=False,
-                                    max_bucket=max_bucket, stats=cap_stats)
 
-    # CC works on strings and picks the LEXICOGRAPHIC min per component,
-    # so the encoding must be order-preserving over the FULL signed-64
-    # doc_id range (hash-derived ids are routinely >= 10^12 and can be
-    # negative; a fixed-width pad of the raw digits would truncate the
-    # former and mis-order the latter — ADVICE r4).  Bias by 2^63 into
-    # [0, 2^64) and zero-pad to 20 digits: numeric order == byte order.
-    comp = connected_components(
-        pairs.select(_encode_id("d1").alias("src"),
-                     _encode_id("d2").alias("dst")))
-    drop = (comp.filter(F.col("node") != F.col("component"))
-            .select(_decode_id("node").alias("doc_id")))
-    deduped = reps.join(drop, "doc_id", "left_anti")
-    n2 = deduped.count() if manifest is not None else None
-    note("near_dedup", n1, n2, t0)
-    if manifest is not None:
-        # accounting row, not a flow stage: rows_in = buckets the width
-        # cap excluded from pair expansion, rows_out = rows inside them
-        manifest.append(("near_dedup_caps",
-                         cap_stats.get("capped_buckets", 0),
-                         cap_stats.get("capped_rows", 0), 0))
+    def line_dedup(df):
+        rebuilt = lines.dedup_lines(df, min_count=line_dedup_min_count)
+        return (df.drop("text").join(rebuilt, "doc_id")
+                .filter(F.length("text") > 0).select(*df.columns))
 
-    t0 = time.time()
-    # quality and language-ID are row-local expressions (quality_col is
-    # the fusible column exposed in r5) — apply them as ONE map-side
-    # filter instead of deriving two doc_id-keyed tables and joining
-    # them back (r6: two shuffle joins removed, and `deduped` is
-    # referenced once instead of three times, so the anti-join above is
-    # not re-executed per reference).  Predicate identity: lang_pred ==
-    # 'en' iff the unrounded stopword density >= lang_threshold, exactly
-    # lang_id's gate.
+    def near_dedup(reps):
+        pairs = dedup.minhash_near_dups(reps, threshold=neardup_threshold,
+                                        collapse_exact=False,
+                                        max_bucket=max_bucket,
+                                        stats=cap_stats)
+        # CC works on strings and picks the LEXICOGRAPHIC min per
+        # component, so the encoding must be order-preserving over the
+        # FULL signed-64 doc_id range (hash-derived ids are routinely
+        # >= 10^12 and can be negative; a fixed-width pad of the raw
+        # digits would truncate the former and mis-order the latter —
+        # ADVICE r4).  Bias by 2^63 into [0, 2^64) and zero-pad to 20
+        # digits: numeric order == byte order.
+        comp = connected_components(
+            pairs.select(_encode_id("d1").alias("src"),
+                         _encode_id("d2").alias("dst")))
+        drop = (comp.filter(F.col("node") != F.col("component"))
+                .select(_decode_id("node").alias("doc_id")))
+        return reps.join(drop, "doc_id", "left_anti")
+
+    # quality and language-ID are row-local expressions — ONE map-side
+    # filter (r6: two doc_id-keyed shuffle joins removed).  Predicate
+    # identity: lang_id says 'en' iff the unrounded stopword density >=
+    # lang_threshold.
     toks = textstats.tokens_col()
     en_score = (F.size(F.filter(toks,
                                 lambda t: t.isin(textstats.EN_STOPWORDS)))
                 / F.size(toks))
-    clean = deduped.filter((textstats.quality_col() >= min_quality)
-                           & (en_score >= lang_threshold))
-    if manifest is not None:
-        # with a manifest every optional stage counts its output; cut
-        # the lineage here (and after each optional stage below) so the
-        # per-stage counts are linear, not a quadratic recompute of the
-        # whole dedup/CC chain per stage
-        clean = stage_checkpoint(clean, eager=False)
-    n3 = clean.count() if manifest is not None else None
-    note("quality_lang", n2, n3, t0)
-    prev = n3
+    quality_ok = ((textstats.quality_col() >= min_quality)
+                  & (en_score >= lang_threshold))
 
-    def cut(df):
-        return stage_checkpoint(df, eager=False) \
-            if manifest is not None else df
+    def repetition(df):
+        noisy = (textstats.repetition_stats(df, n=3)
+                 .filter(F.col("dup_frac") > max_rep_frac).select("doc_id"))
+        return df.join(noisy, "doc_id", "left_anti")
 
-    if max_rep_frac is not None:
+    def cap_hosts(df):
+        hosted = df.withColumn("_host", urls.canonical_host(url_col))
+        return urls.cap_per_host(hosted, host_cap,
+                                 host_col="_host").drop("_host")
+
+    stages = [(name, fn) for name, fn, arg in (
+        ("url_dedup", lambda df: urls.dedup_by_canonical(
+            df, id_col="doc_id", url_col=url_col).select(*df.columns),
+         url_col),
+        ("line_dedup", line_dedup, line_dedup_min_count),
+        ("exact_dedup", dedup.collapse_exact_docs, True),
+        ("near_dedup", near_dedup, True),
+        ("quality_lang", lambda df: df.filter(quality_ok), True),
+        ("repetition", repetition, max_rep_frac),
+        ("perplexity", lambda df: lm.perplexity_filter(
+            df, df if lm_train_docs is None else lm_train_docs, max_bits),
+         max_bits),
+        ("decontaminate", lambda df: decontam.drop_contaminated(
+            df, decontam_bench, n=5, min_hits=3), decontam_bench),
+        ("host_cap", cap_hosts, host_cap),
+        ("token_budget",
+         lambda df: sampling.token_budget_sample(df, token_budget),
+         token_budget),
+    ) if arg is not None]
+
+    rows = docs.count() if manifest is not None else None
+    for name, fn in stages:
         t0 = time.time()
-        rep = textstats.repetition_stats(clean, n=3)
-        noisy = (rep.filter(F.col("dup_frac") > max_rep_frac)
-                 .select("doc_id"))
-        clean = cut(clean.join(noisy, "doc_id", "left_anti"))
-        cur = clean.count() if manifest is not None else None
-        note("repetition", prev, cur, t0)
-        prev = cur
-
-    if max_bits is not None:
-        from kgre import lm
-
-        t0 = time.time()
-        train = lm_train_docs if lm_train_docs is not None else clean
-        bigrams, ctx, vocab = lm.train_bigram_lm(train)
-        scores = lm.bits_per_token(clean, bigrams, ctx, vocab)
-        bad = scores.filter(F.col("bits") > max_bits).select("doc_id")
-        clean = cut(clean.join(bad, "doc_id", "left_anti"))
-        cur = clean.count() if manifest is not None else None
-        note("perplexity", prev, cur, t0)
-        prev = cur
-
-    if decontam_bench is not None:
-        from kgre import decontam
-
-        t0 = time.time()
-        clean = cut(decontam.drop_contaminated(clean, decontam_bench,
-                                               n=5, min_hits=3))
-        cur = clean.count() if manifest is not None else None
-        note("decontaminate", prev, cur, t0)
-        prev = cur
-
-    if host_cap is not None:
-        from kgre import urls
-
-        if url_col is None:
-            raise ValueError("host_cap requires url_col")
-        t0 = time.time()
-        hosted = clean.withColumn("_host", urls.canonical_host(url_col))
-        clean = cut(urls.cap_per_host(hosted, host_cap,
-                                     host_col="_host").drop("_host"))
-        cur = clean.count() if manifest is not None else None
-        note("host_cap", prev, cur, t0)
-        prev = cur
-
-    if token_budget is not None:
-        from kgre import sampling
-
-        t0 = time.time()
-        clean = cut(sampling.token_budget_sample(clean, token_budget))
-        cur = clean.count() if manifest is not None else None
-        note("token_budget", prev, cur, t0)
-
-    return clean
+        docs = fn(docs)
+        # lazy stage checkpoint, not persist: it leaves nothing in the
+        # CacheManager (a re-run of the same plan would warn "already
+        # cached" and the entry would outlive the call); the flavor
+        # (local vs reliable) is a session config (VERDICT r4 #3).  The
+        # exact-dedup output is cut even without a manifest: near_dedup
+        # reads it twice (pair graph + anti-join)
+        if manifest is not None or name == "exact_dedup":
+            docs = stage_checkpoint(docs, eager=False)
+        if manifest is not None:
+            rows_in, rows = rows, docs.count()
+            manifest.append((name, rows_in, rows,
+                             int((time.time() - t0) * 1000)))
+            if name == "near_dedup":
+                # accounting row, not a flow stage: rows_in = buckets the
+                # width cap excluded from pair expansion, rows_out = rows
+                # inside them
+                manifest.append(("near_dedup_caps",
+                                 cap_stats.get("capped_buckets", 0),
+                                 cap_stats.get("capped_rows", 0), 0))
+    return docs

@@ -34,13 +34,14 @@ from __future__ import annotations
 import argparse
 import sys
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from kgre import kb as kbmod
 from kgre import synthgen, webtext
 from kgre.pipeline import KgPipeline, pages_to_candidates, write_triples
 from kgre.score import emitted_triples
-from kgre.session import get_spark
+from kgre.session import get_spark, stage_checkpoint
 from kgre.vocab import build_vocab
 
 
@@ -114,77 +115,61 @@ def mode_build(spark, args):
         cands.count(), spark.read.parquet(args.out + "/vocab").count()))
 
 
+def _resumable_candidates(spark, args, pages, a1, a2):
+    """Lineage-manifest resume (north_rule): the candidates stage runs per
+    url-hash bucket; a rerun recomputes ONLY buckets missing from the
+    manifest, and the returned frame reads the materialized stage output
+    (the reference's skip-if-.tfrecord-exists, relation_extraction.py:
+    393-399, made per-partition + crash-safe)."""
+    from kgre.lineage import run_stage_with_resume
+
+    stop = synthgen.stop_entity_ids()
+    return run_stage_with_resume(
+        spark, pages, "candidates",
+        lambda part: pages_to_candidates(part, args.entity_a, args.entity_b,
+                                         stop, min_partitions=0,
+                                         allow1=a1, allow2=a2),
+        args.out + "/candidates", args.out + "/manifest",
+        n_buckets=args.buckets)
+
+
+def _write_emitted(spark, args, cands, checkpoint_dir=None):
+    """candidates -> vocab -> score (TEST mode, the 0.5 gate inside the
+    scorer) -> triples sink; returns (emitted rows, relation count)."""
+    scored, _, key_order = _pipe(spark, args).run_from_candidates(
+        cands, synthgen.kb_rows(), synthgen.ontology_rows(),
+        checkpoint_dir=checkpoint_dir, emit_threshold=0.5)
+    write_triples(emitted_triples(scored), args.out + "/triples")
+    return spark.read.parquet(args.out + "/triples").count(), len(key_order)
+
+
 def mode_score(spark, args):
-    pipe = _pipe(spark, args)
     a1, a2 = _allowlists(args)
-    if args.corenlp_xml:
-        if args.resume:
+    if args.resume:
+        if args.corenlp_xml:
             raise SystemExit(
                 "--resume buckets by page url; not supported with "
                 "--corenlp-xml (run without --resume)")
-        cands = _load_candidates(spark, args, a1, a2)
-        scored, _, key_order = pipe.run_from_candidates(
-            cands, synthgen.kb_rows(), synthgen.ontology_rows(),
-            checkpoint_dir=(args.out + "/candidates") if args.checkpoint
-            else None,
-            emit_threshold=0.5)
-        write_triples(emitted_triples(scored), args.out + "/triples")
-        n = spark.read.parquet(args.out + "/triples").count()
-        print("SCORE ok: emitted=%d rels=%d" % (n, len(key_order)))
-        return
-    pages = _load_pages(spark, args)
-    if args.resume:
-        # lineage-manifest resume (north_rule): the candidates stage runs
-        # per url-hash bucket; a rerun recomputes ONLY buckets missing
-        # from the manifest, then vocab/scoring read the materialized
-        # stage output (the reference's skip-if-.tfrecord-exists,
-        # relation_extraction.py:393-399, made per-partition + crash-safe)
-        from kgre.lineage import run_stage_with_resume
-        from kgre.score import score_candidates
-        from kgre.vocab import build_vocab, collect_vocab_sets
-
-        fwd, rev, key_order = pipe.prepare_kb(synthgen.kb_rows(),
-                                              synthgen.ontology_rows())
-        stop = synthgen.stop_entity_ids()
-        cands = run_stage_with_resume(
-            spark, pages, "candidates",
-            lambda part: pages_to_candidates(part, args.entity_a,
-                                             args.entity_b, stop,
-                                             min_partitions=0,
-                                             allow1=a1, allow2=a2),
-            args.out + "/candidates", args.out + "/manifest",
-            n_buckets=args.buckets)
-        vocabs = collect_vocab_sets(build_vocab(cands, args.occur_count))
-        scored = score_candidates(cands, vocabs, key_order, fwd, rev,
-                                  emit_threshold=0.5)
+        # no checkpoint_dir: the candidates already are the lineage
+        # parquet, which --checkpoint would overwrite while reading it
+        n, n_rels = _write_emitted(spark, args, _resumable_candidates(
+            spark, args, _load_pages(spark, args), a1, a2))
     else:
-        scored, vocab_df, key_order = pipe.run(
-            pages, synthgen.kb_rows(), synthgen.ontology_rows(),
-            synthgen.stop_entity_ids(),
-            checkpoint_dir=(args.out + "/candidates") if args.checkpoint
-            else None,
-            allow1=a1, allow2=a2, emit_threshold=0.5)
-    write_triples(emitted_triples(scored), args.out + "/triples")
-    n = spark.read.parquet(args.out + "/triples").count()
-    print("SCORE ok: emitted=%d rels=%d" % (n, len(key_order)))
+        n, n_rels = _write_emitted(
+            spark, args, _load_candidates(spark, args, a1, a2),
+            (args.out + "/candidates") if args.checkpoint else None)
+    print("SCORE ok: emitted=%d rels=%d" % (n, n_rels))
 
 
 def mode_predict(spark, args):
     from kgre.score import highlight_sentences
 
-    pipe = _pipe(spark, args)
+    # XML sentences carry sent_text, so the highlight sink works
+    # identically off either ingest path
     a1, a2 = _allowlists(args)
-    if args.corenlp_xml:
-        # XML sentences carry sent_text, so the highlight sink works
-        # identically off the pre-parsed path
-        scored, _, _ = pipe.run_from_candidates(
-            _load_candidates(spark, args, a1, a2), synthgen.kb_rows(),
-            synthgen.ontology_rows(), with_sentence=True)
-    else:
-        scored, _, _ = pipe.run(_load_pages(spark, args), synthgen.kb_rows(),
-                                synthgen.ontology_rows(),
-                                synthgen.stop_entity_ids(),
-                                allow1=a1, allow2=a2, with_sentence=True)
+    scored, _, _ = _pipe(spark, args).run_from_candidates(
+        _load_candidates(spark, args, a1, a2), synthgen.kb_rows(),
+        synthgen.ontology_rows(), with_sentence=True)
     # rich sink S14: all pairs with probabilities, no 0.5 gate; label is
     # -1 in predict mode (build_instances_predict, load_data.py:336-338),
     # and each row carries the ***entity***-highlighted sentence in the
@@ -233,13 +218,13 @@ def mode_train(spark, args):
     from kgre import train
     from kgre.vocab import collect_vocab_sets
 
-    cands = _load_candidates(spark, args, None, None).persist()
+    cands = stage_checkpoint(_load_candidates(spark, args, None, None),
+                             eager=False)
     vocab_df = build_vocab(cands, args.occur_count)
     vocab_df.write.mode("overwrite").parquet(args.out + "/vocab")
     vocabs = collect_vocab_sets(vocab_df)
-    closure = kbmod.ontology_closure_dict(synthgen.ontology_rows())
-    fwd, rev = kbmod.load_kb_sets(synthgen.kb_rows(), closure)
-    key_order = sorted(fwd)
+    fwd, rev, key_order = _pipe(spark, args).prepare_kb(
+        synthgen.kb_rows(), synthgen.ontology_rows())
     wt, losses = train.train_model(cands, vocabs, key_order, fwd, rev,
                                    epochs=args.epochs)
     train.weights_to_df(spark, wt, key_order).write.mode(
@@ -256,13 +241,13 @@ def mode_train_lstm(spark, args):
     from kgre import lstm, lstm_train
 
     a1, a2 = _allowlists(args)
-    cands = _load_candidates(spark, args, a1, a2).persist()
+    cands = stage_checkpoint(_load_candidates(spark, args, a1, a2),
+                             eager=False)
     # bounded distributed vocab build — no unbounded driver collect
     dep_vocab, word_vocab = lstm.lstm_vocab_features(
         cands, max_words=args.lstm_max_words)
-    closure = kbmod.ontology_closure_dict(synthgen.ontology_rows())
-    fwd, rev = kbmod.load_kb_sets(synthgen.kb_rows(), closure)
-    key_order = sorted(fwd)
+    fwd, rev, key_order = _pipe(spark, args).prepare_kb(
+        synthgen.kb_rows(), synthgen.ontology_rows())
     params, losses = lstm_train.train_lstm_model(
         cands, dep_vocab, word_vocab, key_order, fwd, rev,
         epochs=args.epochs)
@@ -288,18 +273,15 @@ def mode_clean(spark, args):
       triples/          emitted triples partitioned by rel
     """
     from kgre.clean import clean_documents
-    from kgre.lineage import run_stage_with_resume
-    from kgre.score import score_candidates
-    from kgre.vocab import collect_vocab_sets
 
     if args.corenlp_xml:
         raise SystemExit("clean mode operates on --documents; "
                          "--corenlp-xml is not supported here")
     if not args.documents:
         raise SystemExit("clean mode requires --documents <parquet>")
-    docs = spark.read.parquet(args.documents).persist()
     if args.host_cap is not None and args.url_col is None:
         raise SystemExit("--host-cap requires --url-col")
+    docs = stage_checkpoint(spark.read.parquet(args.documents), eager=False)
     bench = (spark.read.parquet(args.decontam_bench)
              if args.decontam_bench else None)
     stages: list = []
@@ -322,27 +304,17 @@ def mode_clean(spark, args):
     n2, n3 = by_stage["near_dedup"][2], by_stage["quality_lang"][2]
     capped_b, capped_r = (by_stage["near_dedup_caps"][1],
                           by_stage["near_dedup_caps"][2])
+    # pandas, not a list: a list-built frame starts a plain-RDD Python
+    # worker pool just to convert these rows
     spark.createDataFrame(
-        stages, "stage string, rows_in long, rows_out long, wall_ms long"
+        pd.DataFrame(stages),
+        "stage string, rows_in long, rows_out long, wall_ms long"
     ).write.mode("overwrite").parquet(args.out + "/clean_manifest")
-    # 4. KG pipeline over the cleaned corpus, candidates stage bucketed
+    # KG pipeline over the cleaned corpus, candidates stage bucketed
     # through the lineage manifest (crash-safe resume)
-    pipe = _pipe(spark, args)
-    fwd, rev, key_order = pipe.prepare_kb(synthgen.kb_rows(),
-                                          synthgen.ontology_rows())
-    stop = synthgen.stop_entity_ids()
     pages = webtext.pages_from_documents(clean, lang="en")
-    cands = run_stage_with_resume(
-        spark, pages, "candidates",
-        lambda part: pages_to_candidates(part, args.entity_a, args.entity_b,
-                                         stop, min_partitions=0),
-        args.out + "/candidates", args.out + "/manifest",
-        n_buckets=args.buckets)
-    vocabs = collect_vocab_sets(build_vocab(cands, args.occur_count))
-    scored = score_candidates(cands, vocabs, key_order, fwd, rev,
-                              emit_threshold=0.5)
-    write_triples(emitted_triples(scored), args.out + "/triples")
-    n_triples = spark.read.parquet(args.out + "/triples").count()
+    n_triples, _ = _write_emitted(
+        spark, args, _resumable_candidates(spark, args, pages, None, None))
     url_note = ""
     if "url_dedup" in by_stage:
         url_note = ("url %d -> %d; "

@@ -102,12 +102,10 @@ def bits_per_token(docs: DataFrame, bigrams: DataFrame, ctx: DataFrame,
 def perplexity_filter(docs: DataFrame, train_docs: DataFrame,
                       max_bits: float, text_col: str = "text"
                       ) -> DataFrame:
-    """Convenience composition: train on ``train_docs``, keep only docs
-    scoring at most ``max_bits`` (docs too short to score are kept —
-    length filtering is a separate rule)."""
+    """Train on ``train_docs``, drop docs scoring above ``max_bits`` —
+    one anti-join, so docs too short to score are kept (length filtering
+    is a separate rule)."""
     bigrams, ctx, vocab = train_bigram_lm(train_docs, text_col)
     scores = bits_per_token(docs, bigrams, ctx, vocab, text_col)
-    keep = scores.filter(F.col("bits") <= max_bits).select("doc_id")
-    unscored = docs.join(scores.select("doc_id"), "doc_id", "left_anti") \
-                   .select("doc_id")
-    return docs.join(keep.unionByName(unscored), "doc_id", "left_semi")
+    bad = scores.filter(F.col("bits") > max_bits).select("doc_id")
+    return docs.join(bad, "doc_id", "left_anti")

@@ -3,7 +3,6 @@
 Physical plan (SURVEY.md §4.3):
 
   scan pages (lang filter pushed to scan, html pruned into extract only)
-   -> [optional repartition(url-hash)] even work units before Python
    -> candidates.sentence_stage (ONE mapInPandas, a single JVM->Python
       crossing for the whole per-row path): html -> text -> sentence
       split/parse (the sentence source) -> candidate features (the
@@ -167,16 +166,12 @@ class KgPipeline:
         return fwd, rev, sorted(fwd)
 
     def run(self, pages: DataFrame, kb_rows_list, onto_rows, stop_ids,
-            checkpoint_dir: str | None = None,
-            repartition: int | None = None,
-            allow1=None, allow2=None, with_sentence: bool = False,
-            emit_threshold: float | None = None):
+            checkpoint_dir: str | None = None, allow1=None, allow2=None,
+            with_sentence: bool = False, emit_threshold: float | None = None):
         """pages -> (scored triples DF, vocab DF, key_order).
 
         ``emit_threshold=0.5`` pushes the emitted-triple gate into the
         scoring UDF (TEST mode); leave None to keep every row (predict)."""
-        if repartition:
-            pages = pages.repartition(repartition, "url")
         cands = pages_to_candidates(pages, self.entity_a, self.entity_b,
                                     stop_ids, allow1=allow1, allow2=allow2)
         return self.run_from_candidates(

@@ -46,26 +46,31 @@ PREDICT_SCHEMA = TRIPLES_SCHEMA + (
 )
 
 
+def feature_index(vocabs: dict[str, set]):
+    """({kind: {feature: row}}, n_rows): one row per vocab feature, KINDS
+    order then sorted within a kind — the row layout of every weight
+    matrix (the frozen scorer's and the trained ones)."""
+    idx: dict[str, dict[str, int]] = {}
+    r = 0
+    for kind in KINDS:
+        idx[kind] = {feat: r + i
+                     for i, feat in enumerate(sorted(vocabs[kind]))}
+        r += len(idx[kind])
+    return idx, r
+
+
 def build_weight_table(vocabs: dict[str, set], key_order: list[str]):
     """({kind: {feature: row}}, W[n_feat, n_rel], bias[n_rel]) driver-side.
 
     One contiguous matrix + per-kind index dicts instead of one tiny array
     per feature: broadcast-pickles in one buffer and row lookups in the
     scorer are a single fancy-index."""
-    idx: dict[str, dict[str, int]] = {}
-    rows = []
-    r = 0
-    for kind in KINDS:
-        d = {}
-        for feat in sorted(vocabs[kind]):
-            d[feat] = r
-            rows.append((kind, feat))
-            r += 1
-        idx[kind] = d
-    w = np.empty((len(rows), len(key_order)), dtype=np.float64)
-    for i, (kind, feat) in enumerate(rows):
-        for j, rel in enumerate(key_order):
-            w[i, j] = feature_weight(kind, rel, feat)
+    idx, n_feat = feature_index(vocabs)
+    w = np.empty((n_feat, len(key_order)), dtype=np.float64)
+    for kind, rows in idx.items():
+        for feat, i in rows.items():
+            for j, rel in enumerate(key_order):
+                w[i, j] = feature_weight(kind, rel, feat)
     bias_vec = np.array([bias(rel) for rel in key_order], dtype=np.float64)
     return idx, w, bias_vec
 

@@ -28,24 +28,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgre.model import KINDS
+from kgre.score import feature_index
 
 SEED = 10          # tf_feed_forward.py:7-8
 BATCH = 128        # tf_feed_forward.py:97
 EPOCHS = 250       # tf_feed_forward.py:96
 LR = 0.001         # Adam default, tf.train.AdamOptimizer
-
-
-def _feature_index(vocabs: dict[str, set]):
-    idx: dict[str, dict[str, int]] = {}
-    r = 0
-    for kind in KINDS:
-        d = {}
-        for feat in sorted(vocabs[kind]):
-            d[feat] = r
-            r += 1
-        idx[kind] = d
-    return idx, r
 
 
 _HASH_BITS = 20
@@ -91,7 +79,7 @@ def collect_training_set(candidates: DataFrame, vocabs: dict[str, set],
 
     from kgre.pyoracle import label_instance
 
-    idx, n_feat = _feature_index(vocabs)
+    idx, n_feat = feature_index(vocabs)
     inst = hash_range_sample(
         candidates.filter((~F.col("is_reverse")) | F.col("gene_to_gene")),
         sample,
@@ -252,7 +240,7 @@ def train_model(candidates: DataFrame, vocabs: dict[str, set],
     model and returns the legacy (idx, W, bias) triple; a non-empty stack
     (e.g. [256, 64]) fits the general ReLU+dropout network
     (tf_feed_forward.py:32-63) and returns (idx, layers)."""
-    _, n_feat = _feature_index(vocabs)
+    _, n_feat = feature_index(vocabs)
     idx, hits, y = collect_training_set(candidates, vocabs, key_order,
                                         fwd_kb, rev_kb, sample)
     if hidden_array:
@@ -310,7 +298,7 @@ def ff_weights_from_df(df: DataFrame, vocabs: dict[str, set],
                        key_order: list[str]):
     """Inverse of ff_weights_to_df; layer-0 rows for features no longer in
     the vocab are dropped, new features get zero rows."""
-    idx, n_feat = _feature_index(vocabs)
+    idx, n_feat = feature_index(vocabs)
     rows = df.collect()
     n_layers = max(r["layer"] for r in rows) + 1
     kpos = {rel: k for k, rel in enumerate(key_order)}
@@ -341,7 +329,7 @@ def weights_from_df(df: DataFrame, vocabs: dict[str, set],
                     key_order: list[str]):
     """Inverse of weights_to_df (weights keyed by feature string survive
     any re-assignment of dense ids)."""
-    idx, n_feat = _feature_index(vocabs)
+    idx, n_feat = feature_index(vocabs)
     w = np.zeros((n_feat, len(key_order)))
     b = np.zeros(len(key_order))
     kpos = {rel: k for k, rel in enumerate(key_order)}

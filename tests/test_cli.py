@@ -14,8 +14,12 @@ def _run(spark, monkeypatch, mode, out, extra=()):
     monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
     # and keep it alive across modes
     monkeypatch.setattr(spark, "stop", lambda: None)
+    spark.catalog.clearCache()
     cli.main([mode, "--synth", "60", "--occur-count", "2",
               "--out", out, *extra])
+    # no mode leaves a CacheManager entry behind: its stage reuse goes
+    # through stage checkpoints, whose blocks free with the frames
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), mode
 
 
 def test_cli_score_and_build(spark, tmp_path, monkeypatch):
@@ -93,9 +97,15 @@ def test_cli_score_resume_matches_plain(spark, tmp_path, monkeypatch):
     assert a == b and a
     m1 = spark.read.parquet(res + "/manifest")
     assert m1.filter("status = 'ok'").count() == 4
-    # rerun: all buckets already in the manifest -> no new rows
-    _run(spark, monkeypatch, "score", res, extra=("--resume", "--buckets", "4"))
+    # rerun: all buckets already in the manifest -> no new rows; with
+    # --checkpoint too, which must not overwrite the lineage candidates
+    # the rerun reads
+    _run(spark, monkeypatch, "score", res,
+         extra=("--resume", "--buckets", "4", "--checkpoint"))
     assert spark.read.parquet(res + "/manifest").count() == 4
+    c = {tuple(r) for r in
+         spark.read.parquet(res + "/triples").select(*key).collect()}
+    assert c == a
 
 
 def test_load_id_list(tmp_path):

@@ -637,19 +637,26 @@ def test_build_vocab_driver_rank_matches_window(spark):
 
 def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
                                                      monkeypatch):
-    """build_vocab, KgPipeline.run_from_candidates and the lineage
-    manifest hand createDataFrame pandas frames, never Python lists: a
-    list-built frame converts its rows in a plain-RDD Python worker pool,
-    a second pool beside the Arrow UDF workers.  Arrow fallback is off so
-    a frame Arrow cannot convert fails instead of taking the list path."""
+    """build_vocab, KgPipeline.run_from_candidates, the lineage manifest
+    and CLI clean (its clean manifest) hand createDataFrame pandas
+    frames, never Python lists: a list-built frame converts its rows in a
+    plain-RDD Python worker pool, a second pool beside the Arrow UDF
+    workers.  Arrow fallback is off so a frame Arrow cannot convert fails
+    instead of taking the list path."""
     from pyspark.sql import SparkSession
 
-    from kgre import synthgen
+    from kgre import cli, synthgen
     from kgre.pipeline import KgPipeline, pages_to_candidates
     from kgre.vocab import build_vocab
 
     inputs = spark.createDataFrame(
         [("u%d" % i, i) for i in range(20)], "url string, v int")
+    docs_dir = str(tmp_path / "docs")
+    synthgen.pages_df(spark, 30).select(
+        F.monotonically_increasing_id().alias("doc_id"), "text", "lang") \
+        .write.parquet(docs_dir)
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
     cands = pages_to_candidates(synthgen.pages_df(spark, 30), "GENE",
                                 "ONTOLOGY", synthgen.stop_entity_ids())
     seen = []
@@ -672,6 +679,9 @@ def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
         run_stage_with_resume(spark, inputs, "s", lambda df: df,
                               str(tmp_path / "out"), str(tmp_path / "man"),
                               n_buckets=2).count()
+        cli.main(["clean", "--documents", docs_dir, "--occur-count", "2",
+                  "--lang-threshold", "0.02", "--buckets", "2",
+                  "--out", str(tmp_path / "clean")])
     finally:
         spark.conf.unset(fallback)
     assert seen and list not in seen, seen
