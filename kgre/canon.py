@@ -104,15 +104,18 @@ def connected_components(edges: DataFrame, max_iters: int = 50,
 
 def canonicalize_triples(triples: DataFrame, same_as: DataFrame) -> DataFrame:
     """Rewrite subj/obj through the component map built from SAME_AS-style
-    equivalence edges; entities outside any component map to themselves."""
+    equivalence edges; entities outside any component map to themselves.
+    The component maps grow with the SAME_AS nodes, so the joins carry no
+    broadcast hint: AQE broadcasts them when they are small and
+    shuffle-joins them when they are not."""
     comp = connected_components(same_as)
     c1 = comp.withColumnRenamed("node", "subj").withColumnRenamed(
         "component", "subj_canon")
     c2 = comp.withColumnRenamed("node", "obj").withColumnRenamed(
         "component", "obj_canon")
     return (
-        triples.join(F.broadcast(c1), "subj", "left")
-        .join(F.broadcast(c2), "obj", "left")
+        triples.join(c1, "subj", "left")
+        .join(c2, "obj", "left")
         .withColumn("subj_canon", F.coalesce("subj_canon", "subj"))
         .withColumn("obj_canon", F.coalesce("obj_canon", "obj"))
     )

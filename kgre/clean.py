@@ -137,10 +137,7 @@ def clean_documents(docs: DataFrame, neardup_threshold: float = 0.6,
     # filter (r6: two doc_id-keyed shuffle joins removed).  Predicate
     # identity: lang_id says 'en' iff the unrounded stopword density >=
     # lang_threshold.
-    toks = textstats.tokens_col()
-    en_score = (F.size(F.filter(toks,
-                                lambda t: t.isin(textstats.EN_STOPWORDS)))
-                / F.size(toks))
+    en_score = textstats.stopword_density()
     quality_ok = ((textstats.quality_col() >= min_quality)
                   & (en_score >= lang_threshold))
 

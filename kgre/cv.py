@@ -39,15 +39,6 @@ from kgre.score import score_candidates
 from kgre.vocab import build_vocab, collect_vocab_sets
 
 
-def pmid_fold_chunks(pmids: list, k: int) -> list[list]:
-    """cross_validation.py:14-16: ``[pmids[i:i+n//k] for i in
-    range(0, n, n//k)]`` — contiguous chunks; may yield MORE than k
-    chunks (the tail never becomes a test fold)."""
-    n = len(pmids)
-    length = max(1, n // k)
-    return [pmids[i:i + length] for i in range(0, n, length)]
-
-
 def fold_assignment(candidates: DataFrame, k: int) -> DataFrame:
     """(url, chunk): the reference's contiguous url-ordered chunks of
     length ``n // k`` (cross_validation.py:14-16) computed DISTRIBUTED —

@@ -22,8 +22,7 @@ in bucket width):
     per byte-identical text (``exact_rep_members``); a 10k-copy page
     contributes ONE row to every bucket instead of 10k rows and 50M
     self-join pairs.  Exact-duplicate membership itself is the linear
-    ``exact_dup_groups``/``exact_rep_members`` output — group-shaped,
-    never pair-shaped.
+    ``exact_rep_members`` output — group-shaped, never pair-shaped.
   * band-width cap: any (band, key) bucket still wider than
     ``max_bucket`` after the collapse (templated near-identical pages)
     is excluded from pair expansion and counted in the optional
@@ -41,20 +40,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # ------------------------------------------------------------------ exact
-
-
-def exact_dup_groups(docs: DataFrame) -> DataFrame:
-    """Content-hash groups with >1 member: (fp, n_docs, min_doc_id).
-    Normalization shares textstats.normalized_text (translate, not a
-    regex scan — this runs over the full corpus)."""
-    from kgre.textstats import normalized_text
-
-    return (
-        docs.select("doc_id", F.md5(normalized_text()).alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def exact_rep_members(docs: DataFrame) -> DataFrame:
@@ -237,23 +222,6 @@ def _lsh_candidates_from_shingles(sh: DataFrame, n_hashes: int, bands: int,
     )
 
 
-def lsh_candidate_pairs(docs: DataFrame, n_hashes: int = 8, bands: int = 4,
-                        shingle_n: int = 3, collapse_exact: bool = True,
-                        max_bucket: int | None = 10_000,
-                        stats: dict | None = None) -> DataFrame:
-    """Band the signature (rows = n_hashes/bands), bucket-join docs sharing
-    any band key -> distinct candidate pairs.
-
-    Hot-bucket guards (module docstring): ``collapse_exact`` runs the
-    banding over one representative per byte-identical text;
-    ``max_bucket`` excludes band buckets still wider than that from the
-    quadratic self-join (capped counts land in ``stats``)."""
-    if collapse_exact:
-        docs = collapse_exact_docs(docs)
-    return _lsh_candidates_from_shingles(shingles(docs, shingle_n),
-                                         n_hashes, bands, max_bucket, stats)
-
-
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
                       n_hashes: int = 8, bands: int = 4,
                       shingle_n: int = 3, collapse_exact: bool = True,
@@ -305,26 +273,6 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
 # ---------------------------------------------------------------- SimHash
 
 
-def _simhash64(tokens: list[str]) -> int:
-    """64-bit bit-majority simhash over md5 token hashes (pure python/numpy,
-    deterministic)."""
-    import hashlib
-
-    if not tokens:
-        return 0
-    acc = np.zeros(64, dtype=np.int64)
-    shifts = np.arange(64, dtype=np.uint64)
-    for t in set(tokens):
-        h = np.uint64(int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big"))
-        bits = (h >> shifts) & np.uint64(1)
-        acc += np.where(bits == 1, 1, -1)
-    out = 0
-    for i in range(64):
-        if acc[i] > 0:
-            out |= 1 << i
-    return out
-
-
 def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint) via a vectorized pandas UDF (Arrow batches).
 
@@ -332,11 +280,12 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     Python worker and cached as a precomputed ±1 int8[64] sign vector
     (corpus tokens are Zipf-distributed, so the cache hit rate is high);
     a document's fingerprint is then one numpy sum over its gathered
-    sign vectors — measured 8x faster than the per-token ``_simhash64``
-    loop on sf0.1 text, and faster than a batch-wide [tokens, 64] gather
-    + reduceat, whose giant intermediate thrashes memory.  ``_simhash64``
-    stays as the per-row oracle (tests assert batch == oracle).  Stored
-    as signed 64-bit (value - 2**63) for Spark LongType."""
+    sign vectors — measured 8x faster than a per-token md5 + bit loop
+    on sf0.1 text, and faster than a batch-wide [tokens, 64] gather
+    + reduceat, whose giant intermediate thrashes memory.  That per-token
+    loop is the per-row oracle in ``tests/helpers.py`` (tests assert
+    batch == oracle).  Stored as signed 64-bit (value - 2**63) for Spark
+    LongType."""
     import hashlib
 
     shifts = np.arange(64, dtype=np.uint64)

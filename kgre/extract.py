@@ -1,15 +1,15 @@
-"""S1-equivalent ingest stage: html -> extracted text, byte-identical per url.
+"""S1-equivalent ingest step: html -> extracted text, byte-identical per url.
 
 The reference ingests pre-parsed CoreNLP XML (load_data.py:352-396); at
-Common-Crawl scale the analogous first stage is boilerplate-stripping text
+Common-Crawl scale the analogous first step is boilerplate-stripping text
 extraction from ``pages.html``.  BASELINE.json's per-row invariant is
-byte-identical extracted text per url, verified by a SHA-256 manifest.
+byte-identical extracted text per url.
 
 Scale notes:
-  * runs as one ``mapInPandas`` pass (Arrow batches, no per-row Python in
-    the driver); at cluster scale the scan prunes ``html`` only into this
-    stage — downstream stages select ``text`` and never re-read the blob
-    (column pruning, SURVEY.md §4.2).
+  * the extractor runs inside the fused pages -> candidates stage
+    (``pipeline.pages_to_candidates``), so the html blob crosses into
+    Python once and the text never crosses back (column pruning,
+    SURVEY.md §4.2).
   * the extractor is a frozen deterministic function (version pinned by
     test goldens) so re-runs produce identical bytes (SURVEY.md §7.4.5).
 """
@@ -18,13 +18,7 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 _ARTICLE_RE = re.compile(r"<article><p>(.*?)</p></article>", re.S)
-
-EXTRACT_SCHEMA = "url string, warc_ts timestamp, text string, lang string"
 
 
 def extract_text_from_html(html: bytes) -> str:
@@ -35,32 +29,3 @@ def extract_text_from_html(html: bytes) -> str:
     # deterministic replacement keeps the function total AND pure
     m = _ARTICLE_RE.search(bytes(html).decode("utf-8", errors="replace"))
     return m.group(1) if m else ""
-
-
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (url, warc_ts, text, lang)
-    with text re-derived from html (the stored ``text`` column is only
-    used by tests to assert byte identity)."""
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "text": [extract_text_from_html(h) for h in pdf["html"]],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html", "lang").mapInPandas(
-        run, schema=EXTRACT_SCHEMA
-    )
-
-
-def text_sha_manifest(extracted: DataFrame) -> DataFrame:
-    """Per-url SHA-256 of extracted text — the golden manifest for the
-    byte-identity invariant.  Pure Catalyst (sha2 is JVM-side)."""
-    return extracted.select(
-        "url", F.sha2(F.col("text").cast("binary"), 256).alias("text_sha256")
-    )

@@ -1,38 +1,23 @@
-"""Distant-supervision KB: ontology-closure expansion and the label join.
+"""Distant-supervision KB: ontology closure and the expanded KB sets.
 
 Reference: S3/S4/S7 + J1/J2 (load_data.py:399-434, :487-516, :796-826,
 :275-286).  The KB is definitionally broadcast-sized (the reference holds
 it in driver RAM as Python sets), so the hot scoring path consumes it as a
 broadcast variable inside the Arrow UDF — a map-side broadcast hash join
-with zero shuffle.  This module also provides the equivalent declarative
-DataFrame join (``label_join``) used by the oracle-checked queries and
-available when the KB outgrows broadcast.
+with zero shuffle.  The one DataFrame operator here is the ontology
+closure (``ontology_closure_df``) that ``q_ontology_closure`` runs; the
+scoring path prepares the KB driver-side (``ontology_closure_dict`` ->
+``load_kb_sets``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgre.session import stage_checkpoint
 
-KB_SCHEMA = "rel string, e1 string, e2 string, rel_text string"
-ONTOLOGY_SCHEMA = "term string, is_a string"
-
 _MAX_CLOSURE_ITERS = 64
-
-
-def kb_df(spark: SparkSession, kb_rows_list) -> DataFrame:
-    return spark.createDataFrame(
-        [(r["rel"], r["e1"], r["e2"], r["rel_text"]) for r in kb_rows_list],
-        schema=KB_SCHEMA,
-    )
-
-
-def ontology_df(spark: SparkSession, onto_rows) -> DataFrame:
-    return spark.createDataFrame(
-        [(r["term"], r["is_a"]) for r in onto_rows], schema=ONTOLOGY_SCHEMA
-    )
 
 
 def ontology_closure_df(onto: DataFrame) -> DataFrame:
@@ -67,64 +52,6 @@ def ontology_closure_df(onto: DataFrame) -> DataFrame:
     return closure
 
 
-def expand_kb(kb: DataFrame, closure: DataFrame) -> DataFrame:
-    """Endpoint ontology-closure expansion (J2, load_data.py:419-427) via
-    two broadcast left joins; rows whose relation text ends with 'by' are
-    reverse-set rows (load_data.py:428-431)."""
-    c1 = closure.select(F.col("term").alias("_t1"), F.col("anc").alias("_a1"))
-    c2 = closure.select(F.col("term").alias("_t2"), F.col("anc").alias("_a2"))
-    return (
-        kb.join(F.broadcast(c1), kb.e1 == F.col("_t1"), "left")
-        .join(F.broadcast(c2), kb.e2 == F.col("_t2"), "left")
-        .select(
-            "rel",
-            F.coalesce(F.col("_a1"), kb.e1).alias("e1"),
-            F.coalesce(F.col("_a2"), kb.e2).alias("e2"),
-            F.col("rel_text").endswith("by").alias("is_reverse"),
-        )
-        .distinct()
-    )
-
-
-def collect_kb_sets(expanded: DataFrame):
-    """Expanded KB -> ({rel: fwd set}, {rel: rev set}) for broadcast.
-    Both dicts carry every relation key (reference initializes both,
-    load_data.py:498-514)."""
-    fwd: dict[str, set] = {}
-    rev: dict[str, set] = {}
-    for row in expanded.collect():
-        fwd.setdefault(row["rel"], set())
-        rev.setdefault(row["rel"], set())
-        (rev if row["is_reverse"] else fwd)[row["rel"]].add((row["e1"], row["e2"]))
-    return fwd, rev
-
-
-def label_join(candidates: DataFrame, expanded_kb: DataFrame) -> DataFrame:
-    """Declarative J1: distant labels via explode x explode -> broadcast
-    inner join -> per-candidate per-relation aggregation.  Returns one row
-    per (candidate key, rel) that matched, with fwd_hit / rev_hit flags.
-
-    Plan shape at scale: the exploded candidate side streams map-side into
-    a BroadcastHashJoin (KB is MBs); the groupBy shuffles only matched
-    rows, keyed by candidate id — skew on hot entities is handled by AQE
-    skew-join when the KB ever outgrows broadcast."""
-    exploded = candidates.select(
-        "url", "sent_id", "pair_idx",
-        F.explode("pair_e1_ids").alias("pe1"), "pair_e2_ids",
-    ).select(
-        "url", "sent_id", "pair_idx", "pe1",
-        F.explode("pair_e2_ids").alias("pe2"),
-    )
-    joined = exploded.join(
-        F.broadcast(expanded_kb),
-        (exploded.pe1 == expanded_kb.e1) & (exploded.pe2 == expanded_kb.e2),
-    )
-    return joined.groupBy("url", "sent_id", "pair_idx", "rel").agg(
-        F.max(F.when(~F.col("is_reverse"), 1).otherwise(0)).alias("fwd_hit"),
-        F.max(F.when(F.col("is_reverse"), 1).otherwise(0)).alias("rev_hit"),
-    )
-
-
 def load_id_list(path: str, column: int = 0, sep: str = "\t") -> set:
     """S5 id-list scan (load_data.py:436-453): one TSV column -> entity-id
     set.  Dictionary-sized like the reference's lists, so it is read
@@ -143,8 +70,7 @@ def load_id_list(path: str, column: int = 0, sep: str = "\t") -> set:
 # ------------------------------------------------------- driver-side prep
 # The KB and ontology are definitionally dictionary-sized (the reference
 # holds them in driver RAM as Python sets, load_data.py:399-434); preparing
-# them must not spend Spark jobs. The DataFrame twins above remain for the
-# declarative/oracle-checked path and for KBs that outgrow the driver.
+# them must not spend Spark jobs.
 
 
 def ontology_closure_dict(onto_rows) -> dict[str, set]:

@@ -1,9 +1,8 @@
-"""Line-level corpus cleaning (engine extension): the C4 rules (Raffel
-et al. 2020 §2.2) — dedup the corpus at LINE granularity (any line
-occurring at least ``min_count`` times across the corpus is boilerplate:
-navigation chrome, cookie banners, license footers — remove every copy)
-and the per-line keep heuristics (terminal punctuation, minimum word
-count, no code/placeholder markers).
+"""Line-level corpus cleaning (engine extension): the C4 line dedup
+(Raffel et al. 2020 §2.2) — dedup the corpus at LINE granularity (any
+line occurring at least ``min_count`` times across the corpus is
+boilerplate: navigation chrome, cookie banners, license footers — remove
+every copy).
 
 Shape: lines explode to a (doc_id, line_no, hash) stream — the same
 narrow-stream idiom as the n-gram ops; the hot-line set comes from one
@@ -15,7 +14,7 @@ end-to-end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,19 +25,6 @@ def line_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.posexplode(F.split(F.col(text_col), "\n"))
         .alias("line_no", "line"))
-
-
-def c4_keep_line(line: Column, min_words: int = 3) -> Column:
-    """The C4 per-line heuristics as one boolean expression: keep a line
-    iff it ends in terminal punctuation (. ! ? or closing quote), has at
-    least ``min_words`` whitespace words, and carries no code/
-    placeholder markers ({ } or 'lorem ipsum', case-insensitive)."""
-    lc = F.lower(line)
-    return (line.rlike('[.!?"]$')
-            & (F.size(F.filter(F.split(line, " "), lambda t: t != ""))
-               >= min_words)
-            & ~lc.contains("{") & ~lc.contains("}")
-            & ~lc.contains("lorem ipsum"))
 
 
 def _reassemble(lines: DataFrame, out_col: str = "text") -> DataFrame:
@@ -76,18 +62,6 @@ def dedup_lines(docs: DataFrame, min_count: int = 3,
     hot = (lines.groupBy("h").agg(F.count("*").alias("c"))
            .filter(F.col("c") >= min_count).select("h"))
     kept = lines.join(hot, "h", "left_anti").drop("h")
-    return (docs.select("doc_id")
-            .join(_reassemble(kept), "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce(F.col(text_col), F.lit("")).alias(text_col)))
-
-
-def c4_filter_lines(docs: DataFrame, min_words: int = 3,
-                    text_col: str = "text") -> DataFrame:
-    """Apply the per-line C4 heuristics and rebuild doc text from the
-    surviving lines.  Returns (doc_id, text)."""
-    kept = line_stream(docs, text_col).filter(
-        c4_keep_line(F.col("line"), min_words))
     return (docs.select("doc_id")
             .join(_reassemble(kept), "doc_id", "left")
             .select("doc_id",

@@ -266,31 +266,3 @@ def score_candidates_lstm(candidates: DataFrame, dep_vocab, word_vocab,
     ).select("url", "sent_id", "pair_idx", "is_reverse", "subj", "obj",
              "sdp_types", "sdp_words")
     return scorable.mapInPandas(run, schema=LSTM_TRIPLES_SCHEMA)
-
-
-# ------------------------------------------------------------------ oracle
-
-
-def oracle_score_instance(sdp_types, sdp_words, dep_vocab, word_vocab,
-                          dep_emb, word_emb, weights):
-    """Single-instance, per-step forward (independent code path from the
-    batched kernel; used by tests to validate the batch math)."""
-    t_ids, w_ids, lt, lw = encode_instance(sdp_types, sdp_words,
-                                           dep_vocab, word_vocab)
-    c = np.zeros(STATE)
-    h = np.zeros(STATE)
-    kernel, bias = weights["kernel"], weights["bias"]
-    for t in range(lt + lw):
-        if t % 2 == 0:
-            x = np.concatenate([word_emb[w_ids[t // 2]], np.zeros(DEP_DIM)])
-        else:
-            x = np.concatenate([np.zeros(WORD_DIM), dep_emb[t_ids[t // 2]]])
-        z = np.concatenate([x, h]) @ kernel + bias
-        i = _sigmoid(z[0:STATE])
-        g = np.tanh(z[STATE:2 * STATE])
-        f = _sigmoid(z[2 * STATE:3 * STATE] + 1.0)
-        o = _sigmoid(z[3 * STATE:4 * STATE])
-        c = f * c + i * g
-        h = o * np.tanh(c)
-    hidden = h @ weights["w1"] + weights["b1"]
-    return _sigmoid(hidden @ weights["w2"] + weights["b2"])

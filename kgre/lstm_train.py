@@ -33,6 +33,7 @@ tests/test_train.py; the trained weight dict drops into
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -297,26 +298,33 @@ def lstm_weights_to_df(spark, params, dep_vocab, word_vocab, key_order):
     """Persist trained weights KEYED BY STRING (feature / relation / layer
     name — never dense vocab id, SURVEY.md §7.4.2): embeddings keyed by
     their feature string, the output layer by relation string, structural
-    tensors by flat position."""
-    inv_w = {i: f for f, i in word_vocab.items()}
-    inv_d = {i: f for f, i in dep_vocab.items()}
-    rows = []
-    for r in range(params["word_emb"].shape[0]):
-        key = inv_w[r]
-        for c in range(WORD_DIM):
-            rows.append(("word_emb", key, c, float(params["word_emb"][r, c])))
-    for r in range(params["dep_emb"].shape[0]):
-        key = inv_d[r]
-        for c in range(DEP_DIM):
-            rows.append(("dep_emb", key, c, float(params["dep_emb"][r, c])))
+    tensors by flat position.  The (500k+) rows are built as numpy
+    columns of a pandas frame, never as a Python row list."""
+    blocks = []                     # (layer, keys, pos, weights) in order
+    for name, vocab, dim in (("word_emb", word_vocab, WORD_DIM),
+                             ("dep_emb", dep_vocab, DEP_DIM)):
+        n = params[name].shape[0]
+        inv = np.empty(n, object)
+        inv[list(vocab.values())] = list(vocab)
+        blocks.append((name, np.repeat(inv, dim), np.tile(np.arange(dim), n),
+                       params[name].ravel()))
     for name in ("kernel", "bias", "w1", "b1"):
         flat = params[name].ravel()
-        rows.extend((name, "", int(i), float(v)) for i, v in enumerate(flat))
+        blocks.append((name, np.full(flat.size, "", object),
+                       np.arange(flat.size), flat))
+    hidden = params["w2"].shape[0]
     for k, rel in enumerate(key_order):
-        for r in range(params["w2"].shape[0]):
-            rows.append(("w2", rel, r, float(params["w2"][r, k])))
-        rows.append(("b2", rel, 0, float(params["b2"][k])))
-    return spark.createDataFrame(rows, LSTM_WEIGHTS_SCHEMA)
+        blocks.append(("w2", np.full(hidden, rel, object), np.arange(hidden),
+                       params["w2"][:, k]))
+        blocks.append(("b2", np.array([rel], object), np.zeros(1, int),
+                       params["b2"][k:k + 1]))
+    return spark.createDataFrame(pd.DataFrame({
+        "layer": np.concatenate([np.full(len(wt), layer, object)
+                                 for layer, _, _, wt in blocks]),
+        "key": np.concatenate([keys for _, keys, _, _ in blocks]),
+        "pos": np.concatenate([pos for _, _, pos, _ in blocks]),
+        "weight": np.concatenate([wt for _, _, _, wt in blocks]),
+    }), LSTM_WEIGHTS_SCHEMA)
 
 
 def lstm_weights_from_df(df, dep_vocab, word_vocab, key_order):

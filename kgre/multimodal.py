@@ -1,11 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-The container has no image/audio libraries, so the *decode* step is a
-deterministic fake (or a clearly-marked NotImplementedError for real
-codecs) — but the Spark-side plumbing is real and tested: schemas, binary
-payload handling through Arrow batches, UDF signatures, batch shapes,
-frame sampling.
+kgre carries no image/audio codecs, so the *decode* step is a
+deterministic fake — but the Spark-side plumbing is real and tested:
+schemas, binary payload handling through Arrow batches, UDF signatures,
+batch shapes, frame sampling.
 
 Fake blob format (deterministic, self-describing):
     b'KGR1' | width:uint32be | height:uint32be | n_frames:uint32be | payload
@@ -181,13 +180,3 @@ def frame_features(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(
         run, schema="doc_id long, frame_idx int, n_px int, mean_px double, "
                     "var_px double, min_px int, max_px int")
-
-
-def extract_real_features(blobs: DataFrame):  # pragma: no cover - stub
-    """Real codec path (PIL/libav feature extraction).  STUB: the container
-    ships no media libraries; the deterministic fake above exercises all
-    Spark-side plumbing instead."""
-    raise NotImplementedError(
-        "real image/audio decode requires PIL/libav, not present in this "
-        "environment; use decode_metadata/frame_sample (deterministic fake)"
-    )

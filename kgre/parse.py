@@ -4,19 +4,16 @@ Spark analog of the reference's CoreNLP-XML scan (S1, load_data.py:352-396):
 one output row per sentence with 1-based tokens (implicit ROOT=0) and the
 dependency edge list.  FIXTURES.md §2 schema.
 
-Runs as the shared per-text stage (``candidates.sentence_stage``: 1 page
-row -> N sentence rows, Arrow batches) with ``text_sentences`` as the
-source and ``sentence_row`` as the emitter.  The language filter is
-applied *before* this stage so Catalyst pushes it into the parquet scan
-(predicate pushdown — never parse pages we won't use).
+The pieces here plug into the shared per-text stage
+(``candidates.sentence_stage``: 1 page row -> N sentence rows, Arrow
+batches): ``text_sentences`` is the source the fused html stage runs on
+extracted text, and ``sentence_row`` the emitter that writes sentence
+rows (the CoreNLP reader).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from kgre import nlp
-from kgre.candidates import sentence_stage
 
 SENTENCES_SCHEMA = (
     "url string, sent_id int, sent_text string, "
@@ -38,10 +35,3 @@ def sentence_row(url, s):
     per sentence, so it is keyed by ``url`` in place, not copied)."""
     s["url"] = url
     return (s,)
-
-
-def parse_sentences(extracted: DataFrame, lang: str = "en") -> DataFrame:
-    """extracted(url, text, lang, ...) -> sentences rows (lang-filtered)."""
-    slim = extracted.filter(extracted.lang == lang).select("url", "text")
-    return sentence_stage(slim, text_sentences, sentence_row,
-                          SENTENCES_SCHEMA, SENTENCE_COLS)

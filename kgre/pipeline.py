@@ -160,7 +160,6 @@ class KgPipeline:
 
     def prepare_kb(self, kb_rows_list, onto_rows):
         # dictionary-sized inputs -> pure driver-side prep, zero Spark jobs
-        # (kb.ontology_closure_df / expand_kb remain the declarative twins)
         closure = kbmod.ontology_closure_dict(onto_rows)
         fwd, rev = kbmod.load_kb_sets(kb_rows_list, closure)
         return fwd, rev, sorted(fwd)

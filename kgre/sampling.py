@@ -1,8 +1,8 @@
-"""Deterministic hash-based sampling and dataset splitting (engine
-extension): train/val/test assignment and subsampling that is a pure
-function of the row id — reproducible across engines, cluster sizes,
-partitionings and reruns, unlike ``rand()`` (whose stream depends on
-partition layout) or ``df.sample`` (seeded per-partition).
+"""Deterministic hash-based dataset splitting and token-budget sampling
+(engine extension): train/val/test assignment and per-source quotas that
+are a pure function of the row id — reproducible across engines, cluster
+sizes, partitionings and reruns, unlike ``rand()`` (whose stream depends
+on partition layout) or ``df.sample`` (seeded per-partition).
 
 Everything is one md5 projection — map-only, zero shuffles, zero
 Python; the same arithmetic is reproducible in DuckDB, so every split
@@ -50,15 +50,6 @@ def split_by_hash(df: DataFrame, id_col: str = "doc_id",
     expr = (F.lit(names[-1]) if expr is None
             else expr.otherwise(names[-1]))
     return df.withColumn("split", expr)
-
-
-def hash_sample(df: DataFrame, rate: float, id_col: str = "doc_id",
-                salt: str = "") -> DataFrame:
-    """Keep a deterministic ~``rate`` fraction of rows (id-hash < rate
-    cutoff) — the reproducible twin of ``df.sample(rate)``."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError("rate must be in [0, 1]")
-    return df.filter(hash_frac(id_col, salt) < int(round(rate * _BUCKETS)))
 
 
 def token_budget_sample(df: DataFrame, budgets, source_col: str = "source",

@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgre import kb as kbmod
-from kgre.candidates import CANDIDATES_SCHEMA
+from kgre.pipeline import KgPipeline, pages_to_candidates
 from kgre.score import emitted_triples, score_candidates
 from kgre.synthgen import PAGES_SCHEMA
 
@@ -81,11 +80,8 @@ def stream_triples(
     ``vocabs`` is the frozen vocabulary of a prior batch ``build`` run
     (mode_build in kgre/cli.py) — scoring state is broadcast once, never
     mutated by the stream."""
-    from kgre.pipeline import pages_to_candidates
-
-    closure = kbmod.ontology_closure_dict(onto_rows)
-    fwd, rev = kbmod.load_kb_sets(kb_rows_list, closure)
-    key_order = sorted(fwd)
+    fwd, rev, key_order = KgPipeline(spark, entity_a, entity_b).prepare_kb(
+        kb_rows_list, onto_rows)
 
     stream = read_page_stream(spark, pages_dir)
     cands = pages_to_candidates(stream, entity_a, entity_b, stop_ids,
@@ -163,8 +159,3 @@ def windowed_page_counts(pages_stream: DataFrame,
             .agg(F.count("*").alias("n_pages"))
             .select(F.col("win.start").alias("win_start"), "lang",
                     "n_pages"))
-
-
-__all__ = ["read_page_stream", "stream_triples", "batch_processor",
-           "dedup_page_stream", "windowed_page_counts",
-           "CANDIDATES_SCHEMA"]

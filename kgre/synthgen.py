@@ -133,8 +133,6 @@ REL_ACTIVATES = "activates.txt"
 REL_INHIBITED_BY = "inhibited_by.txt"
 REL_SYM_BINDS = "SYMMETRICbinds.txt"
 
-KEY_ORDER = sorted([REL_SYM_BINDS, REL_ACTIVATES, REL_INHIBITED_BY])
-
 
 def ontology_rows() -> list[dict]:
     """Acyclic is_a DAG over GO terms: parent index always < child index,

@@ -42,43 +42,46 @@ def token_count(docs: DataFrame) -> DataFrame:
     )
 
 
+def stopword_density(text_col: str = "text"):
+    """Share of the whitespace tokens that are EN_STOPWORDS (unrounded) —
+    the English signal of both the quality score and the language ID."""
+    toks = tokens_col(text_col)
+    hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
+    return hits / F.size(toks)
+
+
+def vowel_ratio(text_col: str = "text"):
+    """Share of the characters that are lowercase vowels (unrounded)."""
+    n_chars = F.length(text_col)
+    vowels = n_chars - F.length(
+        F.regexp_replace(F.col(text_col), "[aeiou]", ""))
+    return vowels / n_chars
+
+
 def quality_col(text_col: str = "text"):
     """The composite stopword/vowel quality score as a bare COLUMN
     expression, so it can fuse into any projection (a streaming select,
     the clean composition) without a join."""
-    toks = tokens_col(text_col)
-    n_chars = F.length(text_col)
-    vowels = n_chars - F.length(
-        F.regexp_replace(F.col(text_col), "[aeiou]", ""))
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
-    return F.round(
-        (stop_hits / F.size(toks)) * 0.5 + (vowels / n_chars) * 0.5, 4)
+    return F.round(stopword_density(text_col) * 0.5
+                   + vowel_ratio(text_col) * 0.5, 4)
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
     """Length / vowel-ratio / stopword-ratio quality features + a composite
     score; everything in built-in expressions."""
-    toks = tokens_col()
-    n_tokens = F.size(toks)
-    n_chars = F.length("text")
-    vowels = n_chars - F.length(F.regexp_replace(F.col("text"), "[aeiou]", ""))
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(EN_STOPWORDS))
-    )
     return docs.select(
         "doc_id",
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.round(vowels / n_chars, 4).alias("vowel_ratio"),
-        F.round(stop_hits / n_tokens, 4).alias("stopword_ratio"),
+        F.length("text").alias("n_chars"),
+        F.size(tokens_col()).alias("n_tokens"),
+        F.round(vowel_ratio(), 4).alias("vowel_ratio"),
+        F.round(stopword_density(), 4).alias("stopword_ratio"),
         quality_col().alias("quality"),
     )
 
 
 def lang_id(docs: DataFrame, threshold: float = 0.08) -> DataFrame:
     """N-gram-free language-ID heuristic: English stopword density."""
-    toks = tokens_col()
-    score = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS))) / F.size(toks)
+    score = stopword_density()
     return docs.select(
         "doc_id",
         F.round(score, 4).alias("en_score"),

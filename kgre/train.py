@@ -25,6 +25,7 @@ relation_extraction.py:374-385; we persist parquet).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -251,17 +252,21 @@ def train_model(candidates: DataFrame, vocabs: dict[str, set],
 
 
 def weights_to_df(spark, weight_table, key_order: list[str]) -> DataFrame:
-    """(kind, feature, rel, weight) rows — the persisted-model artifact."""
+    """(kind, feature, rel, weight) rows — the persisted-model artifact:
+    one row per (feature, relation), then one bias row per relation.
+    Columns are built with numpy into a pandas frame (a list-built frame
+    starts a plain-RDD Python worker pool just to convert the rows)."""
     idx, w, b = weight_table
-    rows = []
-    for kind, d in idx.items():
-        for feat, r in d.items():
-            for k, rel in enumerate(key_order):
-                rows.append((kind, feat, rel, float(w[r, k])))
-    for k, rel in enumerate(key_order):
-        rows.append(("__bias__", "", rel, float(b[k])))
-    return spark.createDataFrame(
-        rows, "kind string, feature string, rel string, weight double")
+    n_rel = len(key_order)
+    keys = [(kind, feat, r)
+            for kind, d in idx.items() for feat, r in d.items()]
+    kinds, feats, rows = zip(*keys) if keys else ((), (), ())
+    return spark.createDataFrame(pd.DataFrame({
+        "kind": np.repeat(np.array(kinds + ("__bias__",), object), n_rel),
+        "feature": np.repeat(np.array(feats + ("",), object), n_rel),
+        "rel": np.tile(np.array(key_order, object), len(keys) + 1),
+        "weight": np.concatenate([w[list(rows)].ravel(), b]),
+    }), "kind string, feature string, rel string, weight double")
 
 
 FF_WEIGHTS_SCHEMA = ("layer int, kind string, feature string, i int, "
@@ -271,27 +276,42 @@ FF_WEIGHTS_SCHEMA = ("layer int, kind string, feature string, i int, "
 def ff_weights_to_df(spark, weight_table, key_order: list[str]) -> DataFrame:
     """Persist a general FF stack: layer-0 rows keyed by FEATURE STRING,
     output columns keyed by RELATION STRING (id-assignment independent,
-    SURVEY.md §7.4.2); interior dims are structural integers."""
+    SURVEY.md §7.4.2); interior dims are structural integers.  Per layer:
+    the weight rows row-major, then one bias row per output column."""
     from kgre.score import ff_layers
 
     idx, layers = ff_layers(weight_table)
     last = len(layers) - 1
-    inv0 = [None] * layers[0][0].shape[0]
+    n0 = layers[0][0].shape[0]
+    kind0, feat0 = np.empty(n0, object), np.empty(n0, object)
     for kind, d in idx.items():
         for feat, r in d.items():
-            inv0[r] = (kind, feat)
-    rows = []
+            kind0[r], feat0[r] = kind, feat
+    cols: dict[str, list] = {c: [] for c in
+                             ("layer", "kind", "feature", "i", "rel", "j",
+                              "weight")}
     for li, (w, b) in enumerate(layers):
-        for r in range(w.shape[0]):
-            kind, feat, i = (("__dense__", "", r) if li
-                             else (*inv0[r], -1))
-            for c in range(w.shape[1]):
-                rel, j = (key_order[c], -1) if li == last else ("", c)
-                rows.append((li, kind, feat, i, rel, j, float(w[r, c])))
-        for c in range(b.shape[0]):
-            rel, j = (key_order[c], -1) if li == last else ("", c)
-            rows.append((li, "__bias__", "", -1, rel, j, float(b[c])))
-    return spark.createDataFrame(rows, FF_WEIGHTS_SCHEMA)
+        n_r, n_c = w.shape
+        if li:
+            kind, feat, i = (np.full(n_r, "__dense__", object),
+                             np.full(n_r, "", object), np.arange(n_r))
+        else:
+            kind, feat, i = kind0, feat0, np.full(n_r, -1)
+        if li == last:
+            rel, j = np.array(key_order, object), np.full(n_c, -1)
+        else:
+            rel, j = np.full(n_c, "", object), np.arange(n_c)
+        cols["layer"].append(np.full(n_r * n_c + n_c, li))
+        cols["kind"] += [np.repeat(kind, n_c),
+                         np.full(n_c, "__bias__", object)]
+        cols["feature"] += [np.repeat(feat, n_c), np.full(n_c, "", object)]
+        cols["i"] += [np.repeat(i, n_c), np.full(n_c, -1)]
+        cols["rel"].append(np.tile(rel, n_r + 1))
+        cols["j"].append(np.tile(j, n_r + 1))
+        cols["weight"] += [w.ravel(), b]
+    return spark.createDataFrame(
+        pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()}),
+        FF_WEIGHTS_SCHEMA)
 
 
 def ff_weights_from_df(df: DataFrame, vocabs: dict[str, set],

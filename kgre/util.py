@@ -35,10 +35,6 @@ def sigmoid(x: float) -> float:
     return 1.0 / (1.0 + math.exp(-x))
 
 
-def sha256_text(s: str) -> str:
-    return hashlib.sha256(s.encode("utf-8")).hexdigest()
-
-
 def ensure_min_partitions(df, cols=("url",), target=None):
     """Repartition ``df`` up to ``target`` partitions (default 2x the
     session's defaultParallelism) when the input layout yields fewer.

@@ -1,10 +1,20 @@
-"""Shared test helpers: hand-built sentences and an oracle-side candidate
+"""Shared test helpers: hand-built sentences, an oracle-side candidate
 row builder mirroring the reference pair loop (for row-level comparison
-against kgre.candidates.sentence_candidates)."""
+against kgre.candidates.sentence_candidates), and the independent
+oracles the tests check kgre against: the DataFrame KB expansion, the
+per-instance LSTM forward, the reference's fold chunks and the per-token
+SimHash."""
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from kgre import pyoracle
+from kgre.lstm import DEP_DIM, STATE, WORD_DIM, _sigmoid, encode_instance
 from kgre.nlp import tag_word
 
 
@@ -84,3 +94,106 @@ def oracle_candidate_rows(url, sent_id, tokens, deps, entity_a, entity_b,
             )
         pair_idx += 1
     return rows
+
+
+KB_SCHEMA = "rel string, e1 string, e2 string, rel_text string"
+ONTOLOGY_SCHEMA = "term string, is_a string"
+
+
+def kb_df(spark: SparkSession, kb_rows_list) -> DataFrame:
+    return spark.createDataFrame(
+        [(r["rel"], r["e1"], r["e2"], r["rel_text"]) for r in kb_rows_list],
+        schema=KB_SCHEMA,
+    )
+
+
+def ontology_df(spark: SparkSession, onto_rows) -> DataFrame:
+    return spark.createDataFrame(
+        [(r["term"], r["is_a"]) for r in onto_rows], schema=ONTOLOGY_SCHEMA
+    )
+
+
+def expand_kb(kb: DataFrame, closure: DataFrame) -> DataFrame:
+    """Declarative twin of kb.load_kb_sets: endpoint ontology-closure
+    expansion (J2, load_data.py:419-427) via two broadcast left joins;
+    rows whose relation text ends with 'by' are reverse-set rows
+    (load_data.py:428-431)."""
+    c1 = closure.select(F.col("term").alias("_t1"), F.col("anc").alias("_a1"))
+    c2 = closure.select(F.col("term").alias("_t2"), F.col("anc").alias("_a2"))
+    return (
+        kb.join(F.broadcast(c1), kb.e1 == F.col("_t1"), "left")
+        .join(F.broadcast(c2), kb.e2 == F.col("_t2"), "left")
+        .select(
+            "rel",
+            F.coalesce(F.col("_a1"), kb.e1).alias("e1"),
+            F.coalesce(F.col("_a2"), kb.e2).alias("e2"),
+            F.col("rel_text").endswith("by").alias("is_reverse"),
+        )
+        .distinct()
+    )
+
+
+def collect_kb_sets(expanded: DataFrame):
+    """Expanded KB -> ({rel: fwd set}, {rel: rev set}), the shape of
+    kb.load_kb_sets.
+    Both dicts carry every relation key (reference initializes both,
+    load_data.py:498-514)."""
+    fwd: dict[str, set] = {}
+    rev: dict[str, set] = {}
+    for row in expanded.collect():
+        fwd.setdefault(row["rel"], set())
+        rev.setdefault(row["rel"], set())
+        (rev if row["is_reverse"] else fwd)[row["rel"]].add((row["e1"], row["e2"]))
+    return fwd, rev
+
+
+def oracle_score_instance(sdp_types, sdp_words, dep_vocab, word_vocab,
+                          dep_emb, word_emb, weights):
+    """Single-instance, per-step LSTM forward (independent code path from
+    kgre.lstm's batched kernel; validates the batch math)."""
+    t_ids, w_ids, lt, lw = encode_instance(sdp_types, sdp_words,
+                                           dep_vocab, word_vocab)
+    c = np.zeros(STATE)
+    h = np.zeros(STATE)
+    kernel, bias = weights["kernel"], weights["bias"]
+    for t in range(lt + lw):
+        if t % 2 == 0:
+            x = np.concatenate([word_emb[w_ids[t // 2]], np.zeros(DEP_DIM)])
+        else:
+            x = np.concatenate([np.zeros(WORD_DIM), dep_emb[t_ids[t // 2]]])
+        z = np.concatenate([x, h]) @ kernel + bias
+        i = _sigmoid(z[0:STATE])
+        g = np.tanh(z[STATE:2 * STATE])
+        f = _sigmoid(z[2 * STATE:3 * STATE] + 1.0)
+        o = _sigmoid(z[3 * STATE:4 * STATE])
+        c = f * c + i * g
+        h = o * np.tanh(c)
+    hidden = h @ weights["w1"] + weights["b1"]
+    return _sigmoid(hidden @ weights["w2"] + weights["b2"])
+
+
+def pmid_fold_chunks(pmids: list, k: int) -> list[list]:
+    """Driver-side fold chunks, cross_validation.py:14-16:
+    ``[pmids[i:i+n//k] for i in range(0, n, n//k)]`` — contiguous chunks;
+    may yield MORE than k chunks (the tail never becomes a test fold)."""
+    n = len(pmids)
+    length = max(1, n // k)
+    return [pmids[i:i + length] for i in range(0, n, length)]
+
+
+def simhash64(tokens: list[str]) -> int:
+    """64-bit bit-majority simhash over md5 token hashes, one token at a
+    time (the per-row oracle of dedup.simhash_fingerprints)."""
+    if not tokens:
+        return 0
+    acc = np.zeros(64, dtype=np.int64)
+    shifts = np.arange(64, dtype=np.uint64)
+    for t in set(tokens):
+        h = np.uint64(int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big"))
+        bits = (h >> shifts) & np.uint64(1)
+        acc += np.where(bits == 1, 1, -1)
+    out = 0
+    for i in range(64):
+        if acc[i] > 0:
+            out |= 1 << i
+    return out

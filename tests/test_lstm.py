@@ -6,6 +6,7 @@ import pytest
 
 from kgre import lstm, synthgen
 from kgre.pipeline import pages_to_candidates
+from tests.helpers import oracle_score_instance
 
 KEYS = ["activates.txt", "inhibited_by.txt", "SYMMETRICbinds.txt"]
 
@@ -58,8 +59,8 @@ def test_batch_forward_matches_oracle():
     batch_probs = 1.0 / (1.0 + np.exp(-lstm.lstm_logits(h, weights)))
     # per-instance oracle path
     for r, (types, words) in enumerate(cases):
-        oracle = lstm.oracle_score_instance(types, words, dep, word,
-                                            de, we, weights)
+        oracle = oracle_score_instance(types, words, dep, word, de,
+                                       we, weights)
         np.testing.assert_allclose(batch_probs[r], oracle, atol=1e-12)
 
 

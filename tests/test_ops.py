@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from kgre import canon, dedup, linking, multimodal, similarity
 from kgre.lineage import run_stage_with_resume, completed_buckets
+from tests.helpers import ontology_df, simhash64
 
 
 def _docs_df(spark):
@@ -26,12 +27,6 @@ def _docs_df(spark):
 
 
 # ------------------------------------------------------------------ dedup
-
-
-def test_exact_dup_groups(spark):
-    groups = dedup.exact_dup_groups(_docs_df(spark)).collect()
-    assert len(groups) == 1
-    assert groups[0]["n_docs"] == 2 and groups[0]["keep_doc_id"] == 0
 
 
 def test_jaccard_pairs_vs_python(spark):
@@ -76,7 +71,7 @@ def test_simhash_vs_python_and_symmetry(spark):
     assert fps[0] == fps[1]
     # matches the pure-python reference
     for r in df.collect():
-        want = dedup._simhash64(r["text"].split(" "))
+        want = simhash64(r["text"].split(" "))
         assert fps[r["doc_id"]] == want - (1 << 63)
     pairs = {(r["d1"], r["d2"]): r["hamming"]
              for r in dedup.simhash_near_dups(df, max_hamming=10,
@@ -109,8 +104,10 @@ def test_near_dup_hot_bucket_guards(spark):
     # bounds flake in the degraded co-tenant windows BENCH/BASELINE.md
     # documents, ADVICE r4): the exact-collapse leaves 3 reps, so the
     # band self-join expands to at most C(3,2) candidate pairs, not the
-    # ~50M an uncollapsed 10k-wide bucket would produce
-    assert dedup.lsh_candidate_pairs(df, shingle_n=2).count() <= 3
+    # ~50M an uncollapsed 10k-wide bucket would produce (threshold 0
+    # keeps every candidate: a shared band key means a shared shingle)
+    assert dedup.minhash_near_dups(df, threshold=0.0,
+                                   shingle_n=2).count() <= 3
     # simhash: the 10k-group contributes only its representative, so no
     # pair may involve a collapsed member (whether the dog/cat pair
     # collides in a 16-bit band is a property of the hash, not asserted)
@@ -123,8 +120,8 @@ def test_near_dup_hot_bucket_guards(spark):
              for i in range(60)]
     vdf = spark.createDataFrame(vrows, "doc_id long, text string, lang string")
     stats: dict = {}
-    capped = dedup.lsh_candidate_pairs(vdf, shingle_n=2, max_bucket=10,
-                                       stats=stats)
+    capped = dedup.minhash_near_dups(vdf, threshold=0.0, shingle_n=2,
+                                     max_bucket=10, stats=stats)
     assert stats["capped_buckets"] >= 1
     assert capped.count() < 60 * 59 / 2
 
@@ -211,9 +208,25 @@ def test_canonicalize_triples(spark):
         [("e1", "r", "e9"), ("e2", "r", "e3")],
         "subj string, rel string, obj string")
     same_as = spark.createDataFrame([("e1", "e2")], "src string, dst string")
-    out = {(r["subj_canon"], r["obj_canon"])
-           for r in canon.canonicalize_triples(triples, same_as).collect()}
+
+    def run():
+        df = canon.canonicalize_triples(triples, same_as)
+        rows = {(r["subj_canon"], r["obj_canon"]) for r in df.collect()}
+        return rows, df._jdf.queryExecution().executedPlan().toString()
+
+    out, _ = run()
     assert out == {("e1", "e9"), ("e1", "e3")}
+    # the component maps grow with the SAME_AS nodes, so nothing may
+    # force them into a broadcast once the size gate says no
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        unbroadcast, plan = run()
+    finally:
+        spark.conf.set(key, old)
+    assert unbroadcast == out
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 # ------------------------------------------------------------ entity linking
@@ -302,11 +315,6 @@ def test_multimodal_roundtrip(spark):
     for r in frames:
         assert r["frame_idx"] % 2 == 0
         assert 0.0 <= r["mean_intensity"] <= 255.0
-
-
-def test_real_feature_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        multimodal.extract_real_features(None)
 
 
 # ------------------------------------------------------------------ lineage
@@ -637,9 +645,10 @@ def test_build_vocab_driver_rank_matches_window(spark):
 
 def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
                                                      monkeypatch):
-    """build_vocab, KgPipeline.run_from_candidates, the lineage manifest
-    and CLI clean (its clean manifest) hand createDataFrame pandas
-    frames, never Python lists: a list-built frame converts its rows in a
+    """build_vocab, KgPipeline.run_from_candidates, the lineage manifest,
+    CLI clean (its clean manifest) and CLI train / train-lstm (their
+    weight artifacts) hand createDataFrame pandas frames, never Python
+    lists: a list-built frame converts its rows in a
     plain-RDD Python worker pool, a second pool beside the Arrow UDF
     workers.  Arrow fallback is off so a frame Arrow cannot convert fails
     instead of taking the list path."""
@@ -682,6 +691,9 @@ def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
         cli.main(["clean", "--documents", docs_dir, "--occur-count", "2",
                   "--lang-threshold", "0.02", "--buckets", "2",
                   "--out", str(tmp_path / "clean")])
+        for mode in ("train", "train-lstm"):
+            cli.main([mode, "--synth", "30", "--occur-count", "2",
+                      "--epochs", "1", "--out", str(tmp_path / mode)])
     finally:
         spark.conf.unset(fallback)
     assert seen and list not in seen, seen
@@ -758,12 +770,15 @@ def test_cap_warning_without_stats(spark):
              for i in range(60)]
     vdf = spark.createDataFrame(vrows, "doc_id long, text string, lang string")
     with pytest.warns(RuntimeWarning, match="hot-bucket cap"):
-        dedup.lsh_candidate_pairs(vdf, shingle_n=2, max_bucket=10)
+        dedup.minhash_near_dups(vdf, threshold=0.0, shingle_n=2,
+                                max_bucket=10)
     # uncapped or unexceeded: no warning
     with _w.catch_warnings():
         _w.simplefilter("error")
-        dedup.lsh_candidate_pairs(vdf, shingle_n=2, max_bucket=None)
-        dedup.lsh_candidate_pairs(vdf, shingle_n=2, max_bucket=100_000)
+        dedup.minhash_near_dups(vdf, threshold=0.0, shingle_n=2,
+                                max_bucket=None)
+        dedup.minhash_near_dups(vdf, threshold=0.0, shingle_n=2,
+                                max_bucket=100_000)
 
 
 def test_stage_checkpoint_flavors_equivalent(spark, tmp_path):
@@ -789,7 +804,7 @@ def test_stage_checkpoint_flavors_equivalent(spark, tmp_path):
         [("n%d" % i, "n%d" % (i + 1)) for i in range(6)]
         + [("m3", "m1"), ("m2", "m3"), ("x", "x")],
         "src string, dst string")
-    onto = kbmod.ontology_df(spark, synthgen.ontology_rows())
+    onto = ontology_df(spark, synthgen.ontology_rows())
 
     def run_both():
         ids = sorted(map(tuple, two_phase_dense_ids(
@@ -1028,26 +1043,6 @@ def test_split_weights_and_salt(spark):
     two = sampling.split_by_hash(ids, "doc_id", {"l": 0.5, "r": 0.5})
     assert two.filter(~F.col("split").isin("l", "r")).count() == 0
 
-
-def test_hash_sample_subset_and_rate(spark):
-    from kgre import sampling
-
-    ids = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    with pytest.raises(ValueError):
-        sampling.hash_sample(ids, 1.5)
-    kept = sampling.hash_sample(ids, 0.25, "doc_id", salt="s1")
-    n = kept.count()
-    assert 0.20 * 2000 < n < 0.30 * 2000
-    # deterministic: second run returns the identical id set
-    again = sampling.hash_sample(ids, 0.25, "doc_id", salt="s1")
-    assert set(r["doc_id"] for r in kept.collect()) == \
-        set(r["doc_id"] for r in again.collect())
-    # rate 0 / 1 degenerate cases
-    assert sampling.hash_sample(ids, 0.0).count() == 0
-    assert sampling.hash_sample(ids, 1.0).count() == 2000
-
-
-# --------------------------------------------------------------- host ops
 
 
 def _hosted_df(spark, n=400, hot_hosts=2, rare_every=10):
@@ -1319,25 +1314,6 @@ def test_dedup_lines_c4(spark):
     assert got[2] == "delta four."
     assert got[3] == ""
     assert got[4] == "unique line stays."
-
-
-def test_c4_line_heuristics(spark):
-    from kgre import lines
-
-    rows = [(0, "\n".join([
-        "This line ends properly.",        # keep
-        "no terminal punctuation",         # drop: no . ! ? "
-        "Too short.",                      # drop: < 3 words
-        "Is this kept? Yes it is!",        # keep
-        "Contains a { brace } inside.",    # drop: code marker
-        "Some Lorem Ipsum filler text.",   # drop: lorem ipsum
-        'He said "stop here."',            # keep: closing quote
-    ]))]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = lines.c4_filter_lines(df).collect()[0]["text"]
-    assert got == ("This line ends properly.\n"
-                   "Is this kept? Yes it is!\n"
-                   'He said "stop here."')
 
 
 def test_clean_documents_line_dedup_stage(spark):

@@ -267,12 +267,10 @@ def test_r5_ops_empty_input(spark):
     empty = spark.createDataFrame(
         [], "doc_id long, text string, source string, host string")
     assert sampling.split_by_hash(empty).count() == 0
-    assert sampling.hash_sample(empty, 0.5).count() == 0
     assert sampling.token_budget_sample(empty, 100).count() == 0
     assert urls.host_stats(empty).count() == 0
     assert urls.cap_per_host(empty, 3).count() == 0
     assert dedup.cross_doc_span_stats(empty).count() == 0
     assert lines.dedup_lines(empty).count() == 0
-    assert lines.c4_filter_lines(empty).count() == 0
     bigrams, ctx, vocab = lm.train_bigram_lm(empty)
     assert lm.bits_per_token(empty, bigrams, ctx, vocab).count() == 0

@@ -9,6 +9,7 @@ from kgre import synthgen, train
 from kgre.pipeline import pages_to_candidates
 from kgre.score import emitted_triples, score_candidates
 from kgre.vocab import build_vocab, collect_vocab_sets
+from tests.helpers import pmid_fold_chunks
 
 
 def _setup(spark, n_pages=150):
@@ -303,10 +304,9 @@ def test_emit_threshold_inside_udf_matches_post_filter(spark):
 def test_pmid_fold_chunks_reference_quirk():
     """cross_validation.py:14-16: contiguous len//k chunks; a remainder
     forms extra chunks that never serve as a test fold."""
-    from kgre import cv
-    chunks = cv.pmid_fold_chunks(list(range(10)), 3)
+    chunks = pmid_fold_chunks(list(range(10)), 3)
     assert chunks == [[0, 1, 2], [3, 4, 5], [6, 7, 8], [9]]
-    assert cv.pmid_fold_chunks(list(range(9)), 3) == [
+    assert pmid_fold_chunks(list(range(9)), 3) == [
         [0, 1, 2], [3, 4, 5], [6, 7, 8]]
 
 
@@ -347,7 +347,7 @@ def test_fold_assignment_distributed_matches_chunk_protocol(spark, monkeypatch):
     assert all("url" not in cols for cols in collected_cols), collected_cols
     got = {r["url"]: r["chunk"] for r in fa.collect()}
     urls = sorted(got)
-    chunks = cv.pmid_fold_chunks(urls, 4)
+    chunks = pmid_fold_chunks(urls, 4)
     want = {u: ci for ci, chunk in enumerate(chunks) for u in chunk}
     assert got == want
     # remainder quirk preserved: any chunk >= k exists only when n % k != 0
