@@ -170,15 +170,8 @@ def _q_entity_distribution(spark, sf_dir):
 
 def _q_label_join(spark, sf_dir):
     kb = spark.createDataFrame(_KB_WORDS, "word string, rel string")
-    # row-local semi-join before the explode (guide §2.3 "project before
-    # the exchange"): only tokens matching the 5-word KB explode — the
-    # distinct-shuffle input drops from every token to <=|KB| rows/doc.
-    # array_distinct is safe because the output is DISTINCT (doc_id, rel).
-    kb_words = [w for w, _ in _KB_WORDS]
-    matched = F.array_distinct(
-        F.filter(F.split("text", " "), lambda t: t.isin(kb_words)))
     tok = _docs(spark, sf_dir).select(
-        "doc_id", F.explode(matched).alias("word"))
+        "doc_id", F.explode(F.split("text", " ")).alias("word"))
     return tok.join(F.broadcast(kb), "word").select("doc_id", "rel").distinct()
 
 

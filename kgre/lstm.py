@@ -93,7 +93,8 @@ def lstm_vocab_features(candidates: DataFrame, max_words: int = 500_000,
              .groupBy("f").agg(F.count("*").alias("cnt")))
     if w2v_words is not None:
         w2v_df = spark.createDataFrame(
-            [(w.lower(),) for w in w2v_words], "f string").distinct()
+            pd.DataFrame({"f": [w.lower() for w in w2v_words]}),
+            "f string").distinct()
         words = words.join(F.broadcast(w2v_df), "f", "left_semi")
     top = (words.orderBy(F.desc("cnt"), F.asc("f"))
            .limit(int(max_words)).collect())
@@ -110,6 +111,33 @@ def encode_instance(sdp_types, sdp_words, dep_vocab, word_vocab):
     for i, w in enumerate(sdp_words[:PAD_LEN]):
         w_ids[i] = word_vocab.get(w.lower(), unk_w)
     return t_ids, w_ids, min(len(sdp_types), PAD_LEN), min(len(sdp_words), PAD_LEN)
+
+
+def encode_batch(types_col, words_col, dep_vocab, word_vocab):
+    """X11 over a batch of SDP (type list, word list) pairs ->
+    (type_ids [B, PAD_LEN], word_ids [B, PAD_LEN], lens [B]) where
+    ``lens`` = type length + word length, the effective sequence length
+    (tf_lstm.py:197)."""
+    n = len(types_col)
+    t_ids = np.empty((n, PAD_LEN), dtype=np.int64)
+    w_ids = np.empty((n, PAD_LEN), dtype=np.int64)
+    lens = np.empty(n, dtype=np.int64)
+    for r, (types, words) in enumerate(zip(types_col, words_col)):
+        ti, wi, lt, lw = encode_instance(list(types), list(words),
+                                         dep_vocab, word_vocab)
+        t_ids[r], w_ids[r], lens[r] = ti, wi, lt + lw
+    return t_ids, w_ids, lens
+
+
+def interleave(word_rows, dep_rows):
+    """[B, L, WORD_DIM] word and [B, L, DEP_DIM] dep embedding rows ->
+    the [B, 2L, STATE] input sequence word0, dep0, word1, dep1, ...
+    (tf_lstm.py:194-195): word steps carry [emb | 0], dep steps [0 | emb]."""
+    n, steps = word_rows.shape[:2]
+    seq = np.zeros((n, 2 * steps, STATE))
+    seq[:, 0::2, :WORD_DIM] = word_rows
+    seq[:, 1::2, WORD_DIM:] = dep_rows
+    return seq
 
 
 # ------------------------------------------------------------------ weights
@@ -150,11 +178,13 @@ def _sigmoid(x):
     return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
 
 
-def lstm_forward_batch(seq, seq_len, weights):
+def lstm_forward_batch(seq, seq_len, weights, cache=None):
     """Batched fused-LSTM forward: seq [B, SEQ, STATE], seq_len [B] ->
     final hidden state [B, STATE].  Gate order [i g f o], forget_bias 1.0;
     steps at or past seq_len leave c/h untouched (fused-cell
-    sequence_length semantics)."""
+    sequence_length semantics).  ``cache``: optional list that receives
+    one (active, [x | h], i, g, f, o, c_prev, tanh(c)) tuple per step, for
+    backprop through time (kgre.lstm_train)."""
     kernel, bias = weights["kernel"], weights["bias"]
     n = seq.shape[0]
     c = np.zeros((n, STATE))
@@ -162,15 +192,18 @@ def lstm_forward_batch(seq, seq_len, weights):
     max_t = int(seq_len.max()) if n else 0
     for t in range(min(max_t, seq.shape[1])):
         active = (seq_len > t)[:, None]
-        z = np.concatenate([seq[:, t, :], h], axis=1) @ kernel + bias
+        xh = np.concatenate([seq[:, t, :], h], axis=1)
+        z = xh @ kernel + bias
         i = _sigmoid(z[:, 0:STATE])
         g = np.tanh(z[:, STATE:2 * STATE])
         f = _sigmoid(z[:, 2 * STATE:3 * STATE] + 1.0)
         o = _sigmoid(z[:, 3 * STATE:4 * STATE])
         c_new = f * c + i * g
-        h_new = o * np.tanh(c_new)
+        tc = np.tanh(c_new)
+        if cache is not None:
+            cache.append((active, xh, i, g, f, o, c, tc))
         c = np.where(active, c_new, c)
-        h = np.where(active, h_new, h)
+        h = np.where(active, o * tc, h)
     return h
 
 
@@ -226,22 +259,12 @@ def score_candidates_lstm(candidates: DataFrame, dep_vocab, word_vocab,
             for lo in range(0, n, CHUNK):
                 part = pdf.iloc[lo:lo + CHUNK]
                 k = len(part)
-                t_ids = np.empty((k, PAD_LEN), dtype=np.int64)
-                w_ids = np.empty((k, PAD_LEN), dtype=np.int64)
-                lens = np.empty(k, dtype=np.int64)
-                for r, (types, words) in enumerate(zip(part["sdp_types"],
-                                                       part["sdp_words"])):
-                    ti, wi, lt, lw = encode_instance(list(types),
-                                                     list(words), dv, wv)
-                    t_ids[r], w_ids[r] = ti, wi
-                    lens[r] = lt + lw
-                # word steps: [emb | 0]; dep steps: [0 | emb]; interleaved;
-                # buffer covers only the chunk's effective window (rounded
-                # up to a whole word/dep step pair)
-                half = min(PAD_LEN, (int(lens.max()) + 1) // 2) if k else 0
-                seq = np.zeros((k, 2 * half, STATE))
-                seq[:, 0::2, :WORD_DIM] = we[w_ids[:, :half]]
-                seq[:, 1::2, WORD_DIM:] = de[t_ids[:, :half]]
+                t_ids, w_ids, lens = encode_batch(
+                    part["sdp_types"], part["sdp_words"], dv, wv)
+                # the buffer covers only the chunk's effective window
+                # (rounded up to a whole word/dep step pair)
+                half = min(PAD_LEN, (int(lens.max()) + 1) // 2)
+                seq = interleave(we[w_ids[:, :half]], de[t_ids[:, :half]])
                 h = lstm_forward_batch(seq, lens, weights)
                 probs = _sigmoid(lstm_logits(h, weights))
                 out = pd.DataFrame({

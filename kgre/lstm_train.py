@@ -25,9 +25,13 @@ Reference fidelity:
     glorot-uniform, cell bias zeros with forget_bias 1.0 applied at the
     gate (LSTMBlockFusedCell defaults).
 
-The gradient math is verified against finite differences in
-tests/test_train.py; the trained weight dict drops into
-``lstm.score_candidates_lstm(weights=..., embeddings=...)``.
+Training reuses the scorer's pieces: instances and distant labels come
+from ``train.collect_instances``, the X11 encode and interleave from
+``lstm.encode_batch``/``lstm.interleave``, the forward pass is the
+scorer's ``lstm.lstm_forward_batch`` (which records each step's gates for
+BPTT), and the update is ``train.adam_step``.  The gradient math is
+verified against finite differences in tests/test_train.py; the trained
+weight dict drops into ``lstm.score_candidates_lstm(params=...)``.
 """
 
 from __future__ import annotations
@@ -35,10 +39,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from kgre.lstm import (DEP_DIM, PAD_LEN, SEQ, STATE, WORD_DIM,
-                       encode_instance)
+from kgre.lstm import (DEP_DIM, HIDDEN, PAD_LEN, STATE, WORD_DIM, _sigmoid,
+                       encode_batch, interleave, lstm_forward_batch)
+from kgre.train import adam_step, collect_instances
 
 SEED = 10
 BATCH = 128
@@ -54,35 +58,13 @@ KEEP_PROB = 0.5
 def collect_lstm_training_set(candidates: DataFrame, dep_vocab, word_vocab,
                               key_order, fwd_kb, rev_kb,
                               sample: int = 100_000):
-    """Scorable instances -> (t_ids, w_ids, lens, y) on the driver,
-    deterministically hash-range sampled (no global sort — the filter is
-    map-side; see train.collect_training_set)."""
-    import itertools
-
-    from kgre.pyoracle import label_instance
-    from kgre.train import hash_range_sample
-
-    inst = hash_range_sample(
-        candidates.filter((~F.col("is_reverse")) | F.col("gene_to_gene")),
-        sample,
-    ).select("is_reverse", "pair_e1_ids", "pair_e2_ids", "sdp_types",
-             "sdp_words")
-    # Arrow-path collect (toPandas) — see train.collect_training_set
-    pdf = inst.toPandas()
-    n = len(pdf)
-    t_ids = np.empty((n, PAD_LEN), dtype=np.int64)
-    w_ids = np.empty((n, PAD_LEN), dtype=np.int64)
-    lens = np.empty(n, dtype=np.int64)
-    y = np.zeros((n, len(key_order)))
-    for r in range(n):
-        ti, wi, lt, lw = encode_instance(list(pdf["sdp_types"].iat[r]),
-                                         list(pdf["sdp_words"].iat[r]),
-                                         dep_vocab, word_vocab)
-        t_ids[r], w_ids[r], lens[r] = ti, wi, lt + lw
-        combos = set(itertools.product(pdf["pair_e1_ids"].iat[r],
-                                       pdf["pair_e2_ids"].iat[r]))
-        fwd_l, rev_l = label_instance(combos, key_order, fwd_kb, rev_kb)
-        y[r] = rev_l if pdf["is_reverse"].iat[r] else fwd_l
+    """Scorable instances -> (t_ids, w_ids, lens, y) on the driver:
+    ``train.collect_instances`` encoded by the scorer's X11
+    ``encode_batch``."""
+    pdf, y = collect_instances(candidates, ["sdp_types", "sdp_words"],
+                               key_order, fwd_kb, rev_kb, sample)
+    t_ids, w_ids, lens = encode_batch(pdf["sdp_types"], pdf["sdp_words"],
+                                      dep_vocab, word_vocab)
     return t_ids, w_ids, lens, y
 
 
@@ -110,7 +92,6 @@ def init_lstm_params(dep_vocab, word_vocab, key_order, seed: int = SEED):
     lim = np.sqrt(6.0 / (2 * STATE + 4 * STATE))
     kernel = rng.uniform(-lim, lim, size=(2 * STATE, 4 * STATE))
     cbias = np.zeros(4 * STATE)
-    from kgre.lstm import HIDDEN
     w1 = truncated_normal(rng, (STATE, HIDDEN))
     b1 = np.zeros(HIDDEN)
     w2 = truncated_normal(rng, (HIDDEN, len(key_order)))
@@ -122,10 +103,6 @@ def init_lstm_params(dep_vocab, word_vocab, key_order, seed: int = SEED):
 _PARAM_ORDER = ("word_emb", "dep_emb", "kernel", "bias", "w1", "b1",
                 "w2", "b2")
 _L2_PARAMS = ("kernel", "bias", "w1", "w2")   # tf_lstm.py:235-238
-
-
-def _sigmoid(x):
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
 
 
 def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
@@ -148,30 +125,9 @@ def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
     xw = we[w_ids]                               # [B, PAD, WORD]
     if word_drop_mask is not None:
         xw = xw * word_drop_mask
-    xd = de[t_ids]                               # [B, PAD, DEP]
-    seq = np.zeros((n, SEQ, STATE))
-    seq[:, 0::2, :WORD_DIM] = xw
-    seq[:, 1::2, WORD_DIM:] = xd
-
-    max_t = int(lens.max()) if n else 0
-    max_t = min(max_t, SEQ)
-    c = np.zeros((n, STATE))
-    h = np.zeros((n, STATE))
+    seq = interleave(xw, de[t_ids])
     cache = []
-    for t in range(max_t):
-        m = (lens > t)[:, None]
-        xh = np.concatenate([seq[:, t, :], h], axis=1)
-        z = xh @ kernel + cbias
-        i = _sigmoid(z[:, 0:STATE])
-        g = np.tanh(z[:, STATE:2 * STATE])
-        f = _sigmoid(z[:, 2 * STATE:3 * STATE] + 1.0)
-        o = _sigmoid(z[:, 3 * STATE:4 * STATE])
-        c_cand = f * c + i * g
-        tc = np.tanh(c_cand)
-        h_new = np.where(m, o * tc, h)
-        cache.append((m, xh, i, g, f, o, c, tc))
-        c = np.where(m, c_cand, c)
-        h = h_new
+    h = lstm_forward_batch(seq, lens, params, cache)
 
     hidden = h @ w1 + b1                          # linear (tf_lstm.py:214-217)
     if hidden_drop_mask is not None:
@@ -197,7 +153,7 @@ def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
     g_kernel = np.zeros_like(kernel)
     g_cbias = np.zeros_like(cbias)
     dseq = np.zeros_like(seq)
-    for t in range(max_t - 1, -1, -1):
+    for t in range(len(cache) - 1, -1, -1):
         m, xh, i, g, f, o, c_prev, tc = cache[t]
         dh_cand = np.where(m, dh, 0.0)
         dh_pass = np.where(m, 0.0, dh)
@@ -243,9 +199,9 @@ def fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
     rng = np.random.RandomState(seed)
     if params is None:
         params = init_lstm_params(dep_vocab, word_vocab, key_order, seed)
-    m_st = {k: np.zeros_like(v) for k, v in params.items()}
-    v_st = {k: np.zeros_like(v) for k, v in params.items()}
-    b1m, b2m, eps = 0.9, 0.999, 1e-8
+    plist = [params[k] for k in _PARAM_ORDER]
+    state = {"m": [np.zeros_like(p) for p in plist],
+             "v": [np.zeros_like(p) for p in plist]}
     t_step = 0
     n = t_ids.shape[0]
     order = np.arange(n)
@@ -257,7 +213,6 @@ def fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
             sel = order[s:s + batch]
             mask = hmask = None
             if keep_prob < 1.0:
-                from kgre.lstm import HIDDEN
                 mask = ((rng.random_sample((len(sel), PAD_LEN, 1))
                          < keep_prob) / keep_prob)
                 hmask = ((rng.random_sample((len(sel), HIDDEN))
@@ -267,12 +222,8 @@ def fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
                 word_drop_mask=mask, hidden_drop_mask=hmask, l2=l2)
             ep += loss * len(sel)
             t_step += 1
-            for k in _PARAM_ORDER:
-                g = grads[k]
-                m_st[k] *= b1m; m_st[k] += (1 - b1m) * g
-                v_st[k] *= b2m; v_st[k] += (1 - b2m) * g * g
-                params[k] -= lr * (m_st[k] / (1 - b1m ** t_step)) / (
-                    np.sqrt(v_st[k] / (1 - b2m ** t_step)) + eps)
+            adam_step(state, [grads[k] for k in _PARAM_ORDER], plist, lr,
+                      t_step)
         losses.append(ep / max(n, 1))
     return params, losses
 
@@ -330,7 +281,6 @@ def lstm_weights_to_df(spark, params, dep_vocab, word_vocab, key_order):
 def lstm_weights_from_df(df, dep_vocab, word_vocab, key_order):
     """Inverse of lstm_weights_to_df under possibly RE-ASSIGNED dense ids
     (string keys survive vocab rebuilds; unseen features keep init zeros)."""
-    from kgre.lstm import HIDDEN
     params = {
         "word_emb": np.zeros((len(word_vocab), WORD_DIM)),
         "dep_emb": np.zeros((len(dep_vocab), DEP_DIM)),

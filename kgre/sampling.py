@@ -11,6 +11,8 @@ is oracle-checkable.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -91,7 +93,10 @@ def token_budget_sample(df: DataFrame, budgets, source_col: str = "source",
     if isinstance(budgets, dict):
         spark = df.sparkSession
         bdf = spark.createDataFrame(
-            [(s, int(t)) for s, t in budgets.items()],
+            pd.DataFrame({source_col: list(budgets),
+                          "_budget": np.array([int(t) for t in
+                                               budgets.values()],
+                                              dtype=np.int64)}),
             f"{source_col} string, _budget long")
         base = base.join(F.broadcast(bdf), source_col, "left")
     else:

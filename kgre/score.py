@@ -76,16 +76,39 @@ def build_weight_table(vocabs: dict[str, set], key_order: list[str]):
 
 
 def ff_layers(weight_table):
-    """Normalize a weight table to the general feed-forward layer stack of
+    """Normalize a weight table to the feed-forward layer stack of
     ``tf_feed_forward.py:32-63``: ``[(W1, b1), ..., (Wout, bout)]`` with
-    ReLU between layers (dropout is identity at test keep_prob=1).  The
-    legacy ``(idx, W, bias)`` triple is the shipped ``hidden_array=[]``
-    config — a single output layer, i.e. multi-label logistic."""
+    ReLU between layers (dropout is identity at test keep_prob=1).
+    Training and ``kgre.train.weights_from_df`` produce ``(idx, layers)``;
+    ``build_weight_table`` keeps returning the frozen model as the
+    ``(idx, W, bias)`` triple (the benchmark harness reads its W and
+    bias by position), and this is the one place that turns it into a
+    single output layer — the shipped ``hidden_array=[]`` config."""
     if len(weight_table) == 3:
         idx, w_mat, bias_vec = weight_table
         return idx, [(w_mat, bias_vec)]
     idx, layers = weight_table
     return idx, list(layers)
+
+
+def distant_labels(e1_ids, e2_ids, is_reverse, key_order, fwd_kb, rev_kb):
+    """J1 distant label of one instance per relation (load_data.py:275-286)
+    -> list of 0/1 in ``key_order``: any (e1, e2) id combination in the
+    relation's KB set.  A SYMMETRIC relation matches either direction; a
+    reverse instance is labeled only when the forward set did NOT match
+    (the reference's if/elif, load_data.py:283-286).  The scorer and the
+    training collector both label through this."""
+    combos = set(itertools.product(e1_ids, e2_ids))
+    out = []
+    for key in key_order:
+        fwd = not combos.isdisjoint(fwd_kb[key])
+        if "SYMMETRIC" in key:
+            out.append(int(fwd or not combos.isdisjoint(rev_kb[key])))
+        elif is_reverse:
+            out.append(int(not fwd and not combos.isdisjoint(rev_kb[key])))
+        else:
+            out.append(int(fwd))
+    return out
 
 
 def ff_forward_from_z1(z1, layers):
@@ -111,11 +134,11 @@ def score_candidates(
 ) -> DataFrame:
     """candidates -> scored triples (one row per instance x relation).
 
-    ``weight_table``: optional weights from an offline training run
-    (kgre/train.py, M2) — either the legacy logistic ``(idx, W, bias)``
-    or the general ``(idx, [(W1,b1),...,(Wout,bout)])`` hidden stack
-    (tf_feed_forward.py:32-63); defaults to the frozen deterministic
-    logistic model.
+    ``weight_table``: optional ``(idx, [(W1,b1),...,(Wout,bout)])`` layer
+    stack (tf_feed_forward.py:32-63) from an offline training run
+    (``kgre.train.train_model`` or ``kgre.train.weights_from_df``, M2);
+    defaults to the frozen deterministic logistic model of
+    ``build_weight_table`` (see ``ff_layers``).
     ``with_sentence``: carry (sent_text, start_tok, end_tok) through the
     scorer for the S14 rich predict sink (relation_extraction.py:70-80,
     :548-562); off for the TEST path so the hot Arrow boundary never moves
@@ -150,12 +173,12 @@ def score_candidates(
         idx_elem = st["idx"]["element"]
         idx_betw = st["idx"]["between"]
         keys, fwd, rev = st["key_order"], st["fwd"], st["rev"]
-        sym = np.array(["SYMMETRIC" in k for k in keys])
+        rels = np.array(keys, dtype=object)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            labels = np.zeros((n, n_rel), dtype=np.int32)
+            label_rows = []
             # one batch-wide scatter-add instead of a per-row fancy-index:
             # collect (row, feature-row) hit pairs, then z[rows] += W[feats]
             hit_rows: list[int] = []
@@ -178,53 +201,29 @@ def score_candidates(
                         if i is not None:
                             hit_rows.append(r)
                             hit_feats.append(i)
-                combos = set(itertools.product(pe1, pe2))
-                for k, key in enumerate(keys):
-                    if sym[k]:
-                        if combos & fwd[key] or combos & rev[key]:
-                            labels[r, k] = 1
-                    elif not is_rev:
-                        if combos & fwd[key]:
-                            labels[r, k] = 1
-                    else:
-                        # reference if/elif (load_data.py:283-286): the
-                        # reverse instance is labeled only when the forward
-                        # set did NOT match
-                        if not (combos & fwd[key]) and combos & rev[key]:
-                            labels[r, k] = 1
+                label_rows.append(
+                    distant_labels(pe1, pe2, is_rev, keys, fwd, rev))
+            labels = np.array(label_rows, dtype=np.int32).reshape(n, n_rel)
             if hit_rows:
                 np.add.at(z, np.asarray(hit_rows), W[np.asarray(hit_feats)])
             logits = ff_forward_from_z1(z, layers_l)
             probs = 1.0 / (1.0 + np.exp(-np.clip(logits, -60, 60)))
-            if emit_threshold is not None:
-                ri, ki = np.nonzero(probs > emit_threshold)
-                cols = {
-                    c: pdf[c].to_numpy()[ri]
-                    for c in ("url", "sent_id", "pair_idx", "is_reverse",
-                              "subj", "obj")
-                }
-                cols["rel"] = np.array(keys, dtype=object)[ki]
-                cols["label"] = labels[ri, ki]
-                cols["prob"] = probs[ri, ki]
-                if with_sentence:
-                    for c in ("sent_text", "start_tok", "end_tok"):
-                        cols[c] = pdf[c].to_numpy()[ri]
-                yield pd.DataFrame(cols)
-                continue
+            # (instance x relation) rows in row-major order: every pair in
+            # predict mode, the emitted ones under a threshold
+            keep = (np.ones(probs.shape, dtype=bool) if emit_threshold is None
+                    else probs > emit_threshold)
+            ri, ki = np.nonzero(keep)
             cols = {
-                "url": np.repeat(pdf["url"].to_numpy(), n_rel),
-                "sent_id": np.repeat(pdf["sent_id"].to_numpy(), n_rel),
-                "pair_idx": np.repeat(pdf["pair_idx"].to_numpy(), n_rel),
-                "is_reverse": np.repeat(pdf["is_reverse"].to_numpy(), n_rel),
-                "subj": np.repeat(pdf["subj"].to_numpy(), n_rel),
-                "obj": np.repeat(pdf["obj"].to_numpy(), n_rel),
-                "rel": np.tile(np.array(keys, dtype=object), n),
-                "label": labels.ravel(),
-                "prob": probs.ravel(),
+                c: pdf[c].to_numpy()[ri]
+                for c in ("url", "sent_id", "pair_idx", "is_reverse",
+                          "subj", "obj")
             }
+            cols["rel"] = rels[ki]
+            cols["label"] = labels[ri, ki]
+            cols["prob"] = probs[ri, ki]
             if with_sentence:
                 for c in ("sent_text", "start_tok", "end_tok"):
-                    cols[c] = np.repeat(pdf[c].to_numpy(), n_rel)
+                    cols[c] = pdf[c].to_numpy()[ri]
             yield pd.DataFrame(cols)
 
     # explicit projection: mapInPandas ships every input column through

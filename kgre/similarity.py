@@ -36,47 +36,23 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def _dot_and_sqnorm(a, b):
-    """(a . b, |a|^2) in ONE array-fold (r6): the per-row corpus pass
-    walks each embedding once instead of three times.  Both accumulators
-    add in the same element order as the separate ``_dot`` folds, so the
-    doubles are bit-identical."""
-    pair = F.zip_with(
-        a, b,
-        lambda x, y: F.struct(
-            (x.cast("double") * y.cast("double")).alias("xy"),
-            (x.cast("double") * x.cast("double")).alias("xx")))
-    return F.aggregate(
-        pair,
-        F.struct(F.lit(0.0).alias("dot"), F.lit(0.0).alias("n2")),
-        lambda acc, v: F.struct((acc["dot"] + v["xy"]).alias("dot"),
-                                (acc["n2"] + v["xx"]).alias("n2")))
-
-
 def cosine_topk(embs: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Top-k neighbors of one vector by cosine, excluding itself.
     Deterministic ordering: (sim desc, vec_id asc).
 
     The query norm is computed ONCE on the broadcast side (r6) — it is
-    constant across the corpus — and the corpus side folds dot product
-    and squared norm in one pass; same arithmetic per element, so
-    similarities are bit-identical to the three-fold form."""
+    constant across the corpus."""
     q = embs.filter(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"),
         _norm(F.col("embedding")).alias("q_norm"),
     )
-    acc = _dot_and_sqnorm(F.col("embedding"), F.col("q_emb"))
     scored = (
         embs.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != query_id)
-        # two-step projection: _acc is referenced twice below, and
-        # CollapseProject keeps the fold single-evaluated only because
-        # the alias is consumed more than once
-        .select("vec_id", acc.alias("_acc"), "q_norm")
         .select(
             "vec_id",
-            (F.col("_acc.dot") / (F.sqrt(F.col("_acc.n2"))
-                                  * F.col("q_norm"))).alias("_sim"),
+            (_dot(F.col("embedding"), F.col("q_emb"))
+             / (_norm(F.col("embedding")) * F.col("q_norm"))).alias("_sim"),
         )
     )
     # order by the UNROUNDED similarity (ties after rounding would make
@@ -284,6 +260,15 @@ def train_ivf_codebook(embs: DataFrame, n_cells: int = 16,
     return kmeans_codebook(X, n_cells, n_iters)
 
 
+def _first_cells(embs: DataFrame, n_cells: int) -> np.ndarray:
+    """The training-free codebook: the first ``n_cells`` vectors by
+    vec_id, normalized."""
+    cent = embs.filter(F.col("vec_id") < n_cells).orderBy("vec_id").collect()
+    mat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                    for r in cent])
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
 def ivf_cells(embs: DataFrame, n_cells: int = 16,
               codebook: np.ndarray | None = None) -> DataFrame:
     """(vec_id, cell): IVF coarse quantization.  ``codebook`` is a
@@ -293,16 +278,10 @@ def ivf_cells(embs: DataFrame, n_cells: int = 16,
     its max-cosine centroid (ties: lowest cell id, unreachable with real
     embeddings).  One Arrow-vectorized pass over a broadcast [n_cells,
     dim] matrix — map-only, no shuffle."""
-    spark = embs.sparkSession
-    if codebook is not None:
-        mat = np.asarray(codebook, dtype=np.float64)
-    else:
-        cent = (embs.filter(F.col("vec_id") < n_cells)
-                .orderBy("vec_id").collect())
-        mat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                        for r in cent])
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    b_c = spark.sparkContext.broadcast(mat)
+    if codebook is None:
+        codebook = _first_cells(embs, n_cells)
+    b_c = embs.sparkSession.sparkContext.broadcast(
+        np.asarray(codebook, dtype=np.float64))
 
     def run(batches):
         c = b_c.value
@@ -326,34 +305,20 @@ def ivf_topk(embs: DataFrame, query_id: int, k: int = 10,
     """IVF approximate top-k: exact cosine rerank within the query's
     ``n_probe`` closest cells.  The scale path's shape: the inverted file
     restricts the scan to n_probe/n_cells of the corpus; candidate
-    filtering is a broadcast semi-join on cell id (no shuffle of the
-    corpus).  With a trained ``codebook`` the probe set is computed
-    driver-side against the tiny centroid matrix (no extra Spark job)."""
+    filtering is a semi-join on cell id (no shuffle of the corpus).  The
+    probe set is computed driver-side against the tiny centroid matrix
+    (no extra Spark job) — the trained ``codebook``, or the training-free
+    one built once here when None."""
+    if codebook is None:
+        codebook = _first_cells(embs, n_cells)
     cells = ivf_cells(embs, n_cells, codebook)
-    if codebook is not None:
-        qv = np.asarray(
-            embs.filter(F.col("vec_id") == query_id)
-            .select("embedding").first()[0], dtype=np.float64)
-        sims = np.asarray(codebook, dtype=np.float64) @ (
-            qv / np.linalg.norm(qv))
-        order = np.argsort(-sims, kind="stable")[:n_probe]  # ties: low cell
-        in_cells = (cells.filter(
-            F.col("cell").isin([int(c) for c in order])).select("vec_id"))
-    else:
-        q = embs.filter(F.col("vec_id") == query_id).select(
-            F.col("embedding").alias("q_emb"))
-        cent = embs.filter(F.col("vec_id") < n_cells).select(
-            F.col("vec_id").alias("cell"), "embedding")
-        probe = (
-            cent.crossJoin(F.broadcast(q))
-            .select("cell",
-                    (_dot(F.col("embedding"), F.col("q_emb"))
-                     / (_norm(F.col("embedding")) * _norm(F.col("q_emb"))))
-                    .alias("sim"))
-            .orderBy(F.desc("sim"), F.asc("cell")).limit(n_probe)
-            .select("cell")
-        )
-        in_cells = cells.join(F.broadcast(probe), "cell").select("vec_id")
+    qv = np.asarray(
+        embs.filter(F.col("vec_id") == query_id)
+        .select("embedding").first()[0], dtype=np.float64)
+    sims = np.asarray(codebook, dtype=np.float64) @ (qv / np.linalg.norm(qv))
+    order = np.argsort(-sims, kind="stable")[:n_probe]  # ties: low cell
+    in_cells = (cells.filter(F.col("cell").isin([int(c) for c in order]))
+                .select("vec_id"))
     cand = embs.join(in_cells, "vec_id")
     return cosine_topk(cand, query_id, k)
 

@@ -79,7 +79,8 @@ def test_cli_train(spark, tmp_path, monkeypatch):
     _run(spark, monkeypatch, "train", out, extra=("--epochs", "5"))
     w = spark.read.parquet(out + "/weights")
     assert w.count() > 0
-    assert {"kind", "feature", "rel", "weight"} == set(w.columns)
+    assert {"layer", "kind", "feature", "i", "rel", "j",
+            "weight"} == set(w.columns)
     assert w.filter("kind = '__bias__'").count() > 0
 
 

@@ -646,15 +646,17 @@ def test_build_vocab_driver_rank_matches_window(spark):
 def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
                                                      monkeypatch):
     """build_vocab, KgPipeline.run_from_candidates, the lineage manifest,
-    CLI clean (its clean manifest) and CLI train / train-lstm (their
-    weight artifacts) hand createDataFrame pandas frames, never Python
-    lists: a list-built frame converts its rows in a
+    CLI clean (its clean manifest), CLI train / train-lstm (their
+    weight artifacts), token_budget_sample's per-source budgets and the
+    word2vec vocabulary of lstm_vocab_features hand createDataFrame
+    pandas frames, never Python lists: a list-built frame converts its
+    rows in a
     plain-RDD Python worker pool, a second pool beside the Arrow UDF
     workers.  Arrow fallback is off so a frame Arrow cannot convert fails
     instead of taking the list path."""
     from pyspark.sql import SparkSession
 
-    from kgre import cli, synthgen
+    from kgre import cli, lstm, sampling, synthgen
     from kgre.pipeline import KgPipeline, pages_to_candidates
     from kgre.vocab import build_vocab
 
@@ -694,6 +696,10 @@ def test_scoring_paths_never_build_frames_from_lists(spark, tmp_path,
         for mode in ("train", "train-lstm"):
             cli.main([mode, "--synth", "30", "--occur-count", "2",
                       "--epochs", "1", "--out", str(tmp_path / mode)])
+        sampling.token_budget_sample(
+            spark.read.parquet(docs_dir).withColumnRenamed("lang", "source"),
+            {"en": 50}).count()
+        lstm.lstm_vocab_features(cands, w2v_words=["binds", "Gene"])
     finally:
         spark.conf.unset(fallback)
     assert seen and list not in seen, seen

@@ -20,10 +20,9 @@ ROOT_MODULES = {"cli", "w2v"}       # w2v: the reference's embedding format
 # the restore half of train -> score, streaming, k-fold CV, the CoreNLP
 # corrupt-file report (named by --xml-on-error), sentence-row candidates
 # and the fixture generator
-KEEP = {"weights_from_df", "ff_weights_from_df", "ff_weights_to_df",
-        "lstm_weights_from_df", "stream_triples", "windowed_page_counts",
-        "k_fold_cv", "corenlp_corrupt_files", "candidates_from_sentences",
-        "gen_pages_rows"}
+KEEP = {"weights_from_df", "lstm_weights_from_df", "stream_triples",
+        "windowed_page_counts", "k_fold_cv", "corenlp_corrupt_files",
+        "candidates_from_sentences", "gen_pages_rows"}
 
 
 def _names(nodes) -> set[str]:

@@ -1,4 +1,4 @@
-"""Offline training (M2): Adam logistic fit on distantly-labeled
+"""Offline training (M2): Adam fit on distantly-labeled
 candidates — loss decreases, the trained model predicts distant labels far
 better than the frozen init, and the persisted weight table round-trips."""
 
@@ -53,16 +53,18 @@ def test_weight_table_roundtrip(spark):
     cands, vocabs, key_order, fwd, rev = _setup(spark, n_pages=60)
     wt, _ = train.train_model(cands, vocabs, key_order, fwd, rev, epochs=5)
     df = train.weights_to_df(spark, wt, key_order)
-    idx2, w2, b2 = train.weights_from_df(df, vocabs, key_order)
-    idx, w, b = wt
-    np.testing.assert_allclose(w2, w, atol=1e-12)
-    np.testing.assert_allclose(b2, b, atol=1e-12)
+    idx2, layers2 = train.weights_from_df(df, vocabs, key_order)
+    idx, layers = wt
+    assert len(layers2) == len(layers)
+    for (w, b), (w2, b2) in zip(layers, layers2):
+        np.testing.assert_allclose(w2, w, atol=1e-12)
+        np.testing.assert_allclose(b2, b, atol=1e-12)
     assert idx2 == idx
     # triples scored through the round-tripped table are identical
     a = emitted_triples(score_candidates(cands, vocabs, key_order, fwd, rev,
                                          weight_table=wt)).count()
     b_ = emitted_triples(score_candidates(cands, vocabs, key_order, fwd, rev,
-                                          weight_table=(idx2, w2, b2))).count()
+                                          weight_table=(idx2, layers2))).count()
     assert a == b_
     cands.unpersist()
 
@@ -127,8 +129,8 @@ def test_ff_hidden_layers_train_and_score(spark):
         checked += 1
     assert checked > 0
     # persistence roundtrip preserves scores exactly
-    df = train.ff_weights_to_df(spark, wt, key_order)
-    idx2, layers2 = train.ff_weights_from_df(df, vocabs, key_order)
+    df = train.weights_to_df(spark, wt, key_order)
+    idx2, layers2 = train.weights_from_df(df, vocabs, key_order)
     for (w, b), (w2, b2) in zip(layers, layers2):
         np.testing.assert_allclose(w2, w, atol=1e-12)
         np.testing.assert_allclose(b2, b, atol=1e-12)

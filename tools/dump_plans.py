@@ -1,8 +1,8 @@
 """Dump .explain('formatted') for declared queries to plans/<tag>/.
 
 Usage: python tools/dump_plans.py <tag> <suffix> [query ...]
-Writes plans/<tag>/<query>_<suffix>.txt for each query (default: the
-bench.py headline set + data-ops set).
+Writes plans/<tag>/<query>_<suffix>.txt under the checkout this script is
+in, for each query (default: the bench.py headline set + data-ops set).
 """
 
 from __future__ import annotations
@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from kgre.session import get_spark  # noqa: E402
@@ -32,7 +33,7 @@ def main():
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = f"/root/repo/plans/{tag}"
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("kgre-plans", master="local[8]", shuffle_partitions=32)
     qs = entry_mod.queries()

@@ -16,7 +16,8 @@ re-running regenerates byte-identical goldens (column values are
 deterministic; parquet metadata may differ).
 
 Usage: python tools/make_goldens.py [sf_dir] [out_dir]
-       defaults: /root/testdata/sf0.01 -> /root/repo/goldens/sf0.01
+       defaults: the sf0.01 test-data dir -> goldens/sf0.01 of the checkout
+       this script is in
 """
 
 from __future__ import annotations
@@ -24,7 +25,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 import pyarrow as pa  # noqa: E402
@@ -197,7 +199,8 @@ def golden_ivf_centroids(sf_dir, out_dir):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = (sys.argv[2] if len(sys.argv) > 2
-               else "/root/repo/goldens/" + os.path.basename(sf_dir.rstrip("/")))
+               else os.path.join(ROOT, "goldens",
+                                 os.path.basename(sf_dir.rstrip("/"))))
     os.makedirs(out_dir, exist_ok=True)
     docs = load_docs(sf_dir)
     golden_flagship(docs, out_dir)
