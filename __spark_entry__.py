@@ -229,7 +229,9 @@ def _q_window_tumbling(spark, sf_dir):
     # not per row (guide §2.3: narrower grouping key in the exchange, and
     # the date_format run count drops from |events| to |groups|);
     # date_format is deterministic per distinct truncated ts, so the
-    # result is identical
+    # result is identical.  date_trunc and date_format follow
+    # spark.sql.session.timeZone, which get_spark pins to UTC: the hour
+    # buckets and strings are UTC ones
     return (_events(spark, sf_dir)
             .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
                      "event_type")

@@ -20,6 +20,13 @@ Alongside the KG path sits a pure-Catalyst training-data-pipeline layer
 (dedup, similarity/ANN, textstats, urls, pii, decontam, sampling, lm,
 lines, clean) — the corpus-hygiene operators a web-scale crawl needs
 before construction, composed end-to-end by the `clean` CLI mode.
+
+Importing kgre inside a PySpark worker (any kgre UDF's closure does) runs
+`pyworker.install()`, so later tasks skip re-reading unchanged zip archives.
 """
 
+from kgre import pyworker
+
 __version__ = "0.1.0"
+
+pyworker.install()

@@ -280,7 +280,8 @@ def lstm_weights_to_df(spark, params, dep_vocab, word_vocab, key_order):
 
 def lstm_weights_from_df(df, dep_vocab, word_vocab, key_order):
     """Inverse of lstm_weights_to_df under possibly RE-ASSIGNED dense ids
-    (string keys survive vocab rebuilds; unseen features keep init zeros)."""
+    (string keys survive vocab rebuilds; unseen features keep init zeros).
+    One ``toPandas`` (Arrow) and one numpy scatter per layer."""
     params = {
         "word_emb": np.zeros((len(word_vocab), WORD_DIM)),
         "dep_emb": np.zeros((len(dep_vocab), DEP_DIM)),
@@ -291,26 +292,21 @@ def lstm_weights_from_df(df, dep_vocab, word_vocab, key_order):
         "w2": np.zeros((HIDDEN, len(key_order))),
         "b2": np.zeros(len(key_order)),
     }
-    kpos = {rel: k for k, rel in enumerate(key_order)}
-    for row in df.collect():
-        layer, key, pos, w = (row["layer"], row["key"], row["pos"],
-                              row["weight"])
-        if layer == "word_emb":
-            r = word_vocab.get(key)
-            if r is not None:
-                params["word_emb"][r, pos] = w
-        elif layer == "dep_emb":
-            r = dep_vocab.get(key)
-            if r is not None:
-                params["dep_emb"][r, pos] = w
-        elif layer in ("kernel", "bias", "w1", "b1"):
+    rel = {r: k for k, r in enumerate(key_order)}
+    keyed = {"word_emb": word_vocab, "dep_emb": dep_vocab, "w2": rel,
+             "b2": rel}
+    for layer, g in df.toPandas().groupby("layer", sort=False):
+        pos, w = g["pos"].to_numpy(), g["weight"].to_numpy()
+        if layer in ("kernel", "bias", "w1", "b1"):
             params[layer].ravel()[pos] = w
-        elif layer == "w2":
-            k = kpos.get(key)
-            if k is not None:
-                params["w2"][pos, k] = w
-        elif layer == "b2":
-            k = kpos.get(key)
-            if k is not None:
-                params["b2"][k] = w
+        elif layer in keyed:
+            r = g["key"].map(keyed[layer]).to_numpy()
+            hit = ~pd.isna(r)
+            r, pos, w = r[hit].astype(np.int64), pos[hit], w[hit]
+            if layer == "w2":
+                params["w2"][pos, r] = w
+            elif layer == "b2":
+                params["b2"][r] = w
+            else:
+                params[layer][r, pos] = w
     return params

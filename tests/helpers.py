@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgre import pyoracle
-from kgre.lstm import DEP_DIM, STATE, WORD_DIM, _sigmoid, encode_instance
+from kgre.lstm import (DEP_DIM, HIDDEN, STATE, WORD_DIM, _sigmoid,
+                       encode_instance)
 from kgre.nlp import tag_word
 
 
@@ -170,6 +171,34 @@ def oracle_score_instance(sdp_types, sdp_words, dep_vocab, word_vocab,
         h = o * np.tanh(c)
     hidden = h @ weights["w1"] + weights["b1"]
     return _sigmoid(hidden @ weights["w2"] + weights["b2"])
+
+
+def lstm_weights_from_rows(rows, dep_vocab, word_vocab, key_order):
+    """Per-row reference for lstm_train.lstm_weights_from_df over
+    (layer, key, pos, weight) tuples; keys the vocabs lack are skipped."""
+    params = {
+        "word_emb": np.zeros((len(word_vocab), WORD_DIM)),
+        "dep_emb": np.zeros((len(dep_vocab), DEP_DIM)),
+        "kernel": np.zeros((2 * STATE, 4 * STATE)),
+        "bias": np.zeros(4 * STATE),
+        "w1": np.zeros((STATE, HIDDEN)),
+        "b1": np.zeros(HIDDEN),
+        "w2": np.zeros((HIDDEN, len(key_order))),
+        "b2": np.zeros(len(key_order)),
+    }
+    kpos = {rel: k for k, rel in enumerate(key_order)}
+    for layer, key, pos, w in rows:
+        if layer == "word_emb" and key in word_vocab:
+            params["word_emb"][word_vocab[key], pos] = w
+        elif layer == "dep_emb" and key in dep_vocab:
+            params["dep_emb"][dep_vocab[key], pos] = w
+        elif layer in ("kernel", "bias", "w1", "b1"):
+            params[layer].ravel()[pos] = w
+        elif layer == "w2" and key in kpos:
+            params["w2"][pos, kpos[key]] = w
+        elif layer == "b2" and key in kpos:
+            params["b2"][kpos[key]] = w
+    return params
 
 
 def pmid_fold_chunks(pmids: list, k: int) -> list[list]:

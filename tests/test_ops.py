@@ -1382,3 +1382,34 @@ def test_quality_classifier_log_odds_hand_computed(spark):
     assert got[11]["quality_lr"] == round(math.log(5 / 12), 4)
     # reference-like text scores above background-like text
     assert got[10]["quality_lr"] > got[11]["quality_lr"]
+
+
+# ---------------------------------------------------------- python worker
+
+
+def test_worker_skips_rereading_unchanged_zip_archives(spark):
+    """PySpark calls importlib.invalidate_caches() at the start of every
+    task; once a kgre UDF runs on a worker, that call re-reads no
+    unchanged zip archive (pyspark.zip, py4j, the spark-core jar)."""
+    import importlib
+    import zipimport
+
+    import pandas as pd
+
+    def body(batches):
+        similarity.grow_cutoff        # unpickling this imports kgre
+        importlib.invalidate_caches()
+        read = zipimport._read_directory
+        reads = []
+        zipimport._read_directory = lambda p: reads.append(p) or read(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    got = (spark.range(0, 64, numPartitions=8)
+           .mapInPandas(body, "reads long").collect())
+    assert [r["reads"] for r in got] == [0] * 8

@@ -9,7 +9,7 @@ from kgre import synthgen, train
 from kgre.pipeline import pages_to_candidates
 from kgre.score import emitted_triples, score_candidates
 from kgre.vocab import build_vocab, collect_vocab_sets
-from tests.helpers import pmid_fold_chunks
+from tests.helpers import lstm_weights_from_rows, pmid_fold_chunks
 
 
 def _setup(spark, n_pages=150):
@@ -282,6 +282,30 @@ def test_lstm_training_reduces_loss_and_weights_roundtrip(spark):
     probs = 1.0 / (1.0 + np.exp(-lstm.lstm_logits(h, params)))
     assert abs(probs[0, 0] - row["prob"]) < 1e-9
     cands.unpersist()
+
+
+def test_lstm_weights_from_df_remaps_keys_like_a_row_loop(spark):
+    """String keys land at the reader's (re-assigned) dense ids and keys
+    it does not know are dropped, exactly as a per-row loop places them."""
+    from kgre import lstm_train
+
+    rows = [("word_emb", "w1", 3, 0.5), ("word_emb", "gone", 0, 9.0),
+            ("word_emb", "w0", 199, 1.25), ("dep_emb", "nsubj", 49, -1.5),
+            ("kernel", "", 1234, 2.0), ("bias", "", 7, 0.25),
+            ("w1", "", 24_999, 3.0), ("b1", "", 99, 4.0),
+            ("w2", "r1", 5, 6.0), ("w2", "rX", 5, 7.0),
+            ("b2", "r0", 0, 8.0), ("b2", "r1", 0, 9.5)]
+    df = spark.createDataFrame(rows, lstm_train.LSTM_WEIGHTS_SCHEMA)
+    vocabs = ({"dobj": 0, "nsubj": 1}, {"w1": 0, "w2": 1, "w0": 2},
+              ["r0", "r1"])
+    got = lstm_train.lstm_weights_from_df(df, *vocabs)
+    want = lstm_weights_from_rows(rows, *vocabs)
+    for k in lstm_train._PARAM_ORDER:
+        np.testing.assert_array_equal(got[k], want[k])
+    assert (got["word_emb"][0, 3], got["word_emb"][2, 199],
+            got["dep_emb"][1, 49], got["w2"][5, 1], got["b2"][1]) == (
+        0.5, 1.25, -1.5, 6.0, 9.5)
+    assert np.count_nonzero(got["word_emb"]) == 2
 
 
 def test_emit_threshold_inside_udf_matches_post_filter(spark):

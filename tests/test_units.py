@@ -388,3 +388,49 @@ def test_extract_total_on_hostile_bytes():
     hostile = b"<article><p>ok \xff\xfe body</p></article>"
     out1, out2 = (extract_text_from_html(hostile) for _ in range(2))
     assert out1 == out2 and "ok" in out1
+
+
+# ----------------------------------------------------------- python worker
+
+
+def test_pyworker_rereads_a_zip_archive_only_when_it_changes(tmp_path,
+                                                             monkeypatch):
+    import importlib
+    import os
+    import sys
+    import zipfile
+    import zipimport
+
+    import kgre  # noqa: F401  (installs the worker patch, if in a worker)
+    from kgre import pyworker
+
+    archive = tmp_path / "mods.zip"
+
+    def write(version):
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("kgre_zipmod.py", f"VERSION = {version!r}\n")
+
+    write("v1")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        mod = importlib.import_module("kgre_zipmod")
+        importer = mod.__loader__
+        assert isinstance(importer, zipimport.zipimporter)
+        pyworker._invalidate_caches(importer)        # first call stamps
+        files = importer._files
+        pyworker._invalidate_caches(importer)
+        assert importer._files is files              # unchanged: no re-read
+
+        write("v2")                                  # a later rewrite
+        st = os.stat(archive)
+        os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        pyworker._invalidate_caches(importer)
+        assert importer._files is not files
+        assert importlib.reload(mod).VERSION == "v2"
+    finally:
+        sys.modules.pop("kgre_zipmod", None)
+
+    # the driver (no TaskContext) keeps the stdlib method
+    pyworker.install()
+    assert zipimport.zipimporter.invalidate_caches is pyworker._reread
+    assert pyworker._reread.__module__ == "zipimport"
