@@ -730,10 +730,11 @@ def _q_lstm_scoring(spark, sf_dir):
     parity is enforced in tests/test_lstm.py)."""
     from kgre import lstm
     from kgre.pipeline import documents_to_candidates
+    from kgre.session import stage_checkpoint
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 60)
-    cands = documents_to_candidates(docs, "GENE", "ONTOLOGY",
-                                    synthgen.stop_entity_ids(),
-                                    with_sentence=False).persist()
+    cands = stage_checkpoint(documents_to_candidates(
+        docs, "GENE", "ONTOLOGY", synthgen.stop_entity_ids(),
+        with_sentence=False))
     # bounded distributed vocab build — no unbounded driver collect
     # (distributed count + top-N collect; VERDICT r2 #1)
     dep_vocab, word_vocab = lstm.lstm_vocab_features(cands)

@@ -37,12 +37,12 @@ weight dict drops into ``lstm.score_candidates_lstm(params=...)``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from kgre.lstm import (DEP_DIM, HIDDEN, PAD_LEN, STATE, WORD_DIM, _sigmoid,
                        encode_batch, interleave, lstm_forward_batch)
-from kgre.train import adam_step, collect_instances
+from kgre.train import (adam_step, collect_instances, tensors_from_df,
+                         tensors_to_df)
 
 SEED = 10
 BATCH = 128
@@ -242,71 +242,22 @@ def train_lstm_model(candidates: DataFrame, dep_vocab, word_vocab,
 
 # ---------------------------------------------------------------- persistence
 
-LSTM_WEIGHTS_SCHEMA = ("layer string, key string, pos int, weight double")
+_VECTORS = ("bias", "b1", "b2")
 
 
 def lstm_weights_to_df(spark, params, dep_vocab, word_vocab, key_order):
-    """Persist trained weights KEYED BY STRING (feature / relation / layer
-    name — never dense vocab id, SURVEY.md §7.4.2): embeddings keyed by
-    their feature string, the output layer by relation string, structural
-    tensors by flat position.  The (500k+) rows are built as numpy
-    columns of a pandas frame, never as a Python row list."""
-    blocks = []                     # (layer, keys, pos, weights) in order
-    for name, vocab, dim in (("word_emb", word_vocab, WORD_DIM),
-                             ("dep_emb", dep_vocab, DEP_DIM)):
-        n = params[name].shape[0]
-        inv = np.empty(n, object)
-        inv[list(vocab.values())] = list(vocab)
-        blocks.append((name, np.repeat(inv, dim), np.tile(np.arange(dim), n),
-                       params[name].ravel()))
-    for name in ("kernel", "bias", "w1", "b1"):
-        flat = params[name].ravel()
-        blocks.append((name, np.full(flat.size, "", object),
-                       np.arange(flat.size), flat))
-    hidden = params["w2"].shape[0]
-    for k, rel in enumerate(key_order):
-        blocks.append(("w2", np.full(hidden, rel, object), np.arange(hidden),
-                       params["w2"][:, k]))
-        blocks.append(("b2", np.array([rel], object), np.zeros(1, int),
-                       params["b2"][k:k + 1]))
-    return spark.createDataFrame(pd.DataFrame({
-        "layer": np.concatenate([np.full(len(wt), layer, object)
-                                 for layer, _, _, wt in blocks]),
-        "key": np.concatenate([keys for _, keys, _, _ in blocks]),
-        "pos": np.concatenate([pos for _, _, pos, _ in blocks]),
-        "weight": np.concatenate([wt for _, _, _, wt in blocks]),
-    }), LSTM_WEIGHTS_SCHEMA)
+    """Persist trained weights through ``train.tensors_to_df``: embedding
+    rows keyed by their feature string, the output layer's columns by
+    relation, everything else by position."""
+    keyed = {"word_emb": word_vocab, "dep_emb": dep_vocab}
+    return tensors_to_df(spark, [(k, params[k], keyed.get(k))
+                                 for k in _PARAM_ORDER], key_order)
 
 
 def lstm_weights_from_df(df, dep_vocab, word_vocab, key_order):
     """Inverse of lstm_weights_to_df under possibly RE-ASSIGNED dense ids
-    (string keys survive vocab rebuilds; unseen features keep init zeros).
-    One ``toPandas`` (Arrow) and one numpy scatter per layer."""
-    params = {
-        "word_emb": np.zeros((len(word_vocab), WORD_DIM)),
-        "dep_emb": np.zeros((len(dep_vocab), DEP_DIM)),
-        "kernel": np.zeros((2 * STATE, 4 * STATE)),
-        "bias": np.zeros(4 * STATE),
-        "w1": np.zeros((STATE, HIDDEN)),
-        "b1": np.zeros(HIDDEN),
-        "w2": np.zeros((HIDDEN, len(key_order))),
-        "b2": np.zeros(len(key_order)),
-    }
-    rel = {r: k for k, r in enumerate(key_order)}
-    keyed = {"word_emb": word_vocab, "dep_emb": dep_vocab, "w2": rel,
-             "b2": rel}
-    for layer, g in df.toPandas().groupby("layer", sort=False):
-        pos, w = g["pos"].to_numpy(), g["weight"].to_numpy()
-        if layer in ("kernel", "bias", "w1", "b1"):
-            params[layer].ravel()[pos] = w
-        elif layer in keyed:
-            r = g["key"].map(keyed[layer]).to_numpy()
-            hit = ~pd.isna(r)
-            r, pos, w = r[hit].astype(np.int64), pos[hit], w[hit]
-            if layer == "w2":
-                params["w2"][pos, r] = w
-            elif layer == "b2":
-                params["b2"][r] = w
-            else:
-                params[layer][r, pos] = w
-    return params
+    (string keys survive vocab rebuilds; unseen features get zero rows)."""
+    t = tensors_from_df(df, key_order,
+                        {"word_emb": word_vocab, "dep_emb": dep_vocab},
+                        {"w2", "b2"})
+    return {k: t[k][0] if k in _VECTORS else t[k] for k in _PARAM_ORDER}

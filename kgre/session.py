@@ -27,10 +27,8 @@ def stage_checkpoint(df, eager: bool = True):
     Both flavors produce identical data — only the storage/recovery
     story differs (tests/test_ops.py pins the equivalence)."""
     spark = df.sparkSession
-    flag = spark.conf.get(
-        "spark.kgre.reliableCheckpoint",
-        spark.conf.get("kgre.reliableCheckpoint", "false"))
-    if str(flag).lower() != "true":
+    flag = spark.conf.get("spark.kgre.reliableCheckpoint", "false")
+    if flag.lower() != "true":
         return df.localCheckpoint(eager=eager)
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:

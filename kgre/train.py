@@ -19,12 +19,16 @@ steps:
   2. driver: Adam steps (``adam_step``, shared with the LSTM fit) over the
      sparse hit lists.
 
-Output is ``(idx, layers)`` keyed by feature STRING (never dense id,
-SURVEY.md §7.4.2), consumable by ``score_candidates``, and one persisted
-format, the layered (layer, kind, feature, i, rel, j, weight) table of
-``weights_to_df`` — the trained model is a table like every other
-artifact (the reference pickles its dictionaries,
-relation_extraction.py:374-385; we persist parquet).
+Output is ``(idx, layers)``, consumable by ``score_candidates``.  Both
+models persist through one table, ``WEIGHTS_SCHEMA`` (tensor, key,
+values): one row per row of a 2-D parameter, keyed by feature STRING
+(never dense id, SURVEY.md §7.4.2) or by position, with relation columns
+re-mapped on read.  ``tensors_to_df``/``tensors_from_df`` are its one
+writer and reader; ``weights_to_df``/``weights_from_df`` (FF) and
+``lstm_train.lstm_weights_to_df``/``lstm_weights_from_df`` only name
+their tensors — the trained model is a table like every other artifact
+(the reference pickles its dictionaries, relation_extraction.py:374-385;
+we persist parquet).
 """
 
 from __future__ import annotations
@@ -213,75 +217,103 @@ def train_model(candidates: DataFrame, vocabs: dict[str, set],
     return (idx, layers), losses
 
 
-WEIGHTS_SCHEMA = ("layer int, kind string, feature string, i int, "
-                  "rel string, j int, weight double")
+WEIGHTS_SCHEMA = "tensor string, key string, values array<double>"
+
+
+def tensors_to_df(spark, tensors, key_order: list[str]) -> DataFrame:
+    """Persist named 2-D tensors as one row per tensor row.
+
+    ``tensors``: ``(name, array, keys)`` triples; a 1-D array is one row.
+    ``keys`` maps a feature string to its row (rows keyed by STRING, never
+    by dense id, SURVEY.md §7.4.2); ``None`` keys each row by its
+    position.  Columns that stand for relations are written in
+    ``key_order``, which the ``relations`` tensor records (relation ->
+    position) so a reader can re-map them."""
+    n_rel = len(key_order)
+    relations = ("relations", np.arange(n_rel, dtype=np.float64)[:, None],
+                 dict(zip(key_order, range(n_rel))))
+    names, keys, values = [], [], []
+    for name, arr, row_keys in [relations, *tensors]:
+        arr = np.atleast_2d(arr)
+        if row_keys is None:
+            row_keys = {str(r): r for r in range(len(arr))}
+        names.append(np.full(len(row_keys), name, object))
+        keys.append(np.array(list(row_keys), object))
+        values += list(arr[list(row_keys.values())])
+    return spark.createDataFrame(pd.DataFrame({
+        "tensor": np.concatenate(names), "key": np.concatenate(keys),
+        "values": values}), WEIGHTS_SCHEMA)
+
+
+def tensors_from_df(df: DataFrame, key_order: list[str], row_keys,
+                    rel_cols) -> dict[str, np.ndarray]:
+    """Inverse of ``tensors_to_df`` -> {name: 2-D array}, read through one
+    ``toPandas`` (Arrow).  A tensor in ``row_keys`` gets one row per entry
+    of its ``{key: row}`` map: rows for keys the map lacks are dropped,
+    keys with no stored row stay zero.  Any other tensor is keyed by
+    position.  Tensors in ``rel_cols`` get their columns moved to this
+    ``key_order``; relations the writer did not have stay zero."""
+    pdf = df.toPandas()
+    rel = pdf[pdf["tensor"] == "relations"]
+    wpos = dict(zip(rel["key"], (int(v[0]) for v in rel["values"])))
+    cols = np.array([wpos.get(r, -1) for r in key_order], dtype=np.int64)
+    out = {}
+    for name, g in pdf[pdf["tensor"] != "relations"].groupby("tensor"):
+        vals = np.stack(g["values"].to_numpy())
+        if name in row_keys:
+            rows = g["key"].map(row_keys[name]).to_numpy()
+            hit = ~pd.isna(rows)
+            rows, vals, n = (rows[hit].astype(np.int64), vals[hit],
+                             len(row_keys[name]))
+        else:
+            rows = g["key"].astype(np.int64).to_numpy()
+            n = rows.max() + 1
+        if name in rel_cols:
+            vals = np.where(cols >= 0, vals[:, cols], 0.0)
+        out[name] = np.zeros((n, vals.shape[1]))
+        out[name][rows] = vals
+    return out
+
+
+def _ff_names(n_layers: int) -> list[tuple[str, str]]:
+    """(weight, bias) tensor names per FF layer.  The output layer is
+    always ``w_out``/``b_out``, so a reader knows which tensors have
+    relation columns before it knows the depth."""
+    return ([(f"w{li}", f"b{li}") for li in range(n_layers - 1)]
+            + [("w_out", "b_out")])
+
+
+def _ff_keys(idx):
+    """(row_keys, rel_cols) of ``tensors_from_df`` for an FF table read
+    under the feature index ``idx``: layer-0 weights are one tensor per
+    feature kind (``w0/dep_path``, or ``w_out/dep_path`` without hidden
+    layers), each keyed by feature string."""
+    row_keys = {f"{w}/{kind}": dict(zip(d, range(len(d))))
+                for w in ("w0", "w_out") for kind, d in idx.items()}
+    return row_keys, {"w_out", "b_out", *(f"w_out/{kind}" for kind in idx)}
 
 
 def weights_to_df(spark, weight_table, key_order: list[str]) -> DataFrame:
-    """Persist an FF layer stack (the one weight format): layer-0 rows keyed by FEATURE STRING,
-    output columns keyed by RELATION STRING (id-assignment independent,
-    SURVEY.md §7.4.2); interior dims are structural integers.  Per layer:
-    the weight rows row-major, then one bias row per output column."""
+    """Persist an FF layer stack through ``tensors_to_df``."""
     idx, layers = ff_layers(weight_table)
-    last = len(layers) - 1
-    n0 = layers[0][0].shape[0]
-    kind0, feat0 = np.empty(n0, object), np.empty(n0, object)
-    for kind, d in idx.items():
-        for feat, r in d.items():
-            kind0[r], feat0[r] = kind, feat
-    cols: dict[str, list] = {c: [] for c in
-                             ("layer", "kind", "feature", "i", "rel", "j",
-                              "weight")}
-    for li, (w, b) in enumerate(layers):
-        n_r, n_c = w.shape
-        if li:
-            kind, feat, i = (np.full(n_r, "__dense__", object),
-                             np.full(n_r, "", object), np.arange(n_r))
-        else:
-            kind, feat, i = kind0, feat0, np.full(n_r, -1)
-        if li == last:
-            rel, j = np.array(key_order, object), np.full(n_c, -1)
-        else:
-            rel, j = np.full(n_c, "", object), np.arange(n_c)
-        cols["layer"].append(np.full(n_r * n_c + n_c, li))
-        cols["kind"] += [np.repeat(kind, n_c),
-                         np.full(n_c, "__bias__", object)]
-        cols["feature"] += [np.repeat(feat, n_c), np.full(n_c, "", object)]
-        cols["i"] += [np.repeat(i, n_c), np.full(n_c, -1)]
-        cols["rel"].append(np.tile(rel, n_r + 1))
-        cols["j"].append(np.tile(j, n_r + 1))
-        cols["weight"] += [w.ravel(), b]
-    return spark.createDataFrame(
-        pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()}),
-        WEIGHTS_SCHEMA)
+    names = _ff_names(len(layers))
+    w0 = names[0][0]
+    return tensors_to_df(spark, [
+        *((f"{w0}/{kind}", layers[0][0], d) for kind, d in idx.items()),
+        *((w, layer[0], None) for (w, _), layer in zip(names[1:], layers[1:])),
+        *((b, layer[1], None) for (_, b), layer in zip(names, layers)),
+    ], key_order)
 
 
 def weights_from_df(df: DataFrame, vocabs: dict[str, set],
                     key_order: list[str]):
-    """Inverse of weights_to_df; layer-0 rows for features no longer in
-    the vocab are dropped, new features get zero rows."""
-    idx, n_feat = feature_index(vocabs)
-    rows = df.collect()
-    n_layers = max(r["layer"] for r in rows) + 1
-    kpos = {rel: k for k, rel in enumerate(key_order)}
-    dout = {}
-    for r in rows:
-        c = kpos[r["rel"]] if r["j"] == -1 else r["j"]
-        dout[r["layer"]] = max(dout.get(r["layer"], 0), c + 1)
-    din = {0: n_feat}
-    for li in range(1, n_layers):
-        din[li] = dout[li - 1]
-    layers = [(np.zeros((din[li], dout[li])), np.zeros(dout[li]))
-              for li in range(n_layers)]
-    for r in rows:
-        li = r["layer"]
-        c = kpos[r["rel"]] if r["j"] == -1 else r["j"]
-        if r["kind"] == "__bias__":
-            layers[li][1][c] = r["weight"]
-        elif li == 0:
-            ri = idx.get(r["kind"], {}).get(r["feature"])
-            if ri is not None:
-                layers[li][0][ri, c] = r["weight"]
-        else:
-            layers[li][0][r["i"], c] = r["weight"]
-    return idx, layers
+    """Inverse of weights_to_df under ``vocabs`` -> ``(idx, layers)``."""
+    idx, _ = feature_index(vocabs)
+    t = tensors_from_df(df, key_order, *_ff_keys(idx))
+    (w0, b0), *rest = _ff_names(sum(name[0] == "b" for name in t))
+    width = t[b0].shape[1]
+    # feature_index lays kinds out in order, so the per-kind tensors stack;
+    # a kind the writer had no features of has no tensor
+    layers = [(np.concatenate([t.get(f"{w0}/{kind}", np.zeros((len(d), width)))
+                               for kind, d in idx.items()]), t[b0][0])]
+    return idx, layers + [(t[w], t[b][0]) for w, b in rest]

@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgre import pyoracle
-from kgre.lstm import (DEP_DIM, HIDDEN, STATE, WORD_DIM, _sigmoid,
-                       encode_instance)
+from kgre.lstm import DEP_DIM, STATE, WORD_DIM, _sigmoid, encode_instance
 from kgre.nlp import tag_word
 
 
@@ -173,32 +172,28 @@ def oracle_score_instance(sdp_types, sdp_words, dep_vocab, word_vocab,
     return _sigmoid(hidden @ weights["w2"] + weights["b2"])
 
 
-def lstm_weights_from_rows(rows, dep_vocab, word_vocab, key_order):
-    """Per-row reference for lstm_train.lstm_weights_from_df over
-    (layer, key, pos, weight) tuples; keys the vocabs lack are skipped."""
-    params = {
-        "word_emb": np.zeros((len(word_vocab), WORD_DIM)),
-        "dep_emb": np.zeros((len(dep_vocab), DEP_DIM)),
-        "kernel": np.zeros((2 * STATE, 4 * STATE)),
-        "bias": np.zeros(4 * STATE),
-        "w1": np.zeros((STATE, HIDDEN)),
-        "b1": np.zeros(HIDDEN),
-        "w2": np.zeros((HIDDEN, len(key_order))),
-        "b2": np.zeros(len(key_order)),
-    }
-    kpos = {rel: k for k, rel in enumerate(key_order)}
-    for layer, key, pos, w in rows:
-        if layer == "word_emb" and key in word_vocab:
-            params["word_emb"][word_vocab[key], pos] = w
-        elif layer == "dep_emb" and key in dep_vocab:
-            params["dep_emb"][dep_vocab[key], pos] = w
-        elif layer in ("kernel", "bias", "w1", "b1"):
-            params[layer].ravel()[pos] = w
-        elif layer == "w2" and key in kpos:
-            params["w2"][pos, kpos[key]] = w
-        elif layer == "b2" and key in kpos:
-            params["b2"][kpos[key]] = w
-    return params
+def tensors_from_rows(rows, key_order, row_keys, rel_cols):
+    """Per-row reference for train.tensors_from_df over (tensor, key,
+    values) rows, one scalar at a time."""
+    wpos = {key: int(v[0]) for name, key, v in rows if name == "relations"}
+    shapes: dict[str, tuple[int, int]] = {}
+    for name, key, v in rows:
+        if name != "relations":
+            n = (len(row_keys[name]) if name in row_keys
+                 else max(shapes.get(name, (0,))[0], int(key) + 1))
+            shapes[name] = (n, len(key_order) if name in rel_cols else len(v))
+    out = {name: np.zeros(shape) for name, shape in shapes.items()}
+    for name, key, v in rows:
+        if name == "relations" or (name in row_keys
+                                   and key not in row_keys[name]):
+            continue
+        r = row_keys[name][key] if name in row_keys else int(key)
+        for j in range(out[name].shape[1]):
+            if name not in rel_cols:
+                out[name][r, j] = v[j]
+            elif key_order[j] in wpos:
+                out[name][r, j] = v[wpos[key_order[j]]]
+    return out
 
 
 def pmid_fold_chunks(pmids: list, k: int) -> list[list]:

@@ -78,10 +78,13 @@ def test_cli_train(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "train")
     _run(spark, monkeypatch, "train", out, extra=("--epochs", "5"))
     w = spark.read.parquet(out + "/weights")
-    assert w.count() > 0
-    assert {"layer", "kind", "feature", "i", "rel", "j",
-            "weight"} == set(w.columns)
-    assert w.filter("kind = '__bias__'").count() > 0
+    assert {"tensor", "key", "values"} == set(w.columns)
+    assert w.filter("tensor = 'relations'").count() == 3
+    # the shipped logistic config: per-kind layer-0 tensors keyed by
+    # feature string, and the output bias as one row of 3 relations
+    assert w.filter("tensor = 'w_out/dep_path'").count() > 0
+    assert [len(r["values"]) for r in
+            w.filter("tensor = 'b_out'").collect()] == [3]
 
 
 def test_cli_score_resume_matches_plain(spark, tmp_path, monkeypatch):
@@ -122,9 +125,13 @@ def test_cli_train_lstm(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "tl")
     _run(spark, monkeypatch, "train-lstm", out, extra=("--epochs", "2"))
     w = spark.read.parquet(out + "/lstm_weights")
-    # output layer keyed by relation string, embeddings by feature string
-    assert w.filter("layer = 'w2'").select("key").distinct().count() == 3
-    assert w.filter("layer = 'word_emb'").count() > 0
+    assert {"tensor", "key", "values"} == set(w.columns)
+    # output-layer columns in the relations tensor's order, embedding rows
+    # keyed by word
+    assert w.filter("tensor = 'relations'").count() == 3
+    words = {r["key"] for r in w.filter("tensor = 'word_emb'").collect()}
+    assert "PADDING_WORD" in words
+    assert words != {str(i) for i in range(len(words))}
 
 
 def test_cli_pages_glob_and_recursive(spark, tmp_path, monkeypatch):

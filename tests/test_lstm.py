@@ -166,3 +166,20 @@ def test_lstm_vocab_features_bounded_distributed(spark):
     assert "lstm_vocab_features" in src
     assert "distinct().collect()" not in src
     cands.unpersist()
+
+
+def test_q_lstm_scoring_leaves_no_cache_entry(spark, tmp_path):
+    """The driver-contract LSTM query reuses its candidates through a
+    stage checkpoint, not a ``persist()`` that outlives the call."""
+    import pandas as pd
+
+    import __spark_entry__ as entry_mod
+
+    rows = synthgen.gen_pages_rows(40)
+    pd.DataFrame({"doc_id": range(len(rows)),
+                  "text": [r["text"] for r in rows],
+                  "lang": [r["lang"] for r in rows]}).to_parquet(
+        tmp_path / "documents.parquet")
+    spark.catalog.clearCache()
+    assert entry_mod._q_lstm_scoring(spark, str(tmp_path)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -17,7 +17,8 @@ ROOT = Path(__file__).resolve().parent.parent
 SURFACES = ["__spark_entry__.py", "bench.py", "bench_extra.py",
             "perfbench/*.py", "tools/*.py"]
 ROOT_MODULES = {"cli", "w2v"}       # w2v: the reference's embedding format
-# the restore half of train -> score, streaming, k-fold CV, the CoreNLP
+# the restore half of train -> score (the FF and LSTM readers, both thin
+# calls of train.tensors_from_df), streaming, k-fold CV, the CoreNLP
 # corrupt-file report (named by --xml-on-error), sentence-row candidates
 # and the fixture generator
 KEEP = {"weights_from_df", "lstm_weights_from_df", "stream_triples",

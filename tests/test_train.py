@@ -3,13 +3,14 @@ candidates — loss decreases, the trained model predicts distant labels far
 better than the frozen init, and the persisted weight table round-trips."""
 
 import numpy as np
+import pytest
 
 from kgre import kb as kbmod
 from kgre import synthgen, train
 from kgre.pipeline import pages_to_candidates
 from kgre.score import emitted_triples, score_candidates
 from kgre.vocab import build_vocab, collect_vocab_sets
-from tests.helpers import lstm_weights_from_rows, pmid_fold_chunks
+from tests.helpers import pmid_fold_chunks, tensors_from_rows
 
 
 def _setup(spark, n_pages=150):
@@ -57,8 +58,8 @@ def test_weight_table_roundtrip(spark):
     idx, layers = wt
     assert len(layers2) == len(layers)
     for (w, b), (w2, b2) in zip(layers, layers2):
-        np.testing.assert_allclose(w2, w, atol=1e-12)
-        np.testing.assert_allclose(b2, b, atol=1e-12)
+        np.testing.assert_array_equal(w2, w)
+        np.testing.assert_array_equal(b2, b)
     assert idx2 == idx
     # triples scored through the round-tripped table are identical
     a = emitted_triples(score_candidates(cands, vocabs, key_order, fwd, rev,
@@ -132,8 +133,8 @@ def test_ff_hidden_layers_train_and_score(spark):
     df = train.weights_to_df(spark, wt, key_order)
     idx2, layers2 = train.weights_from_df(df, vocabs, key_order)
     for (w, b), (w2, b2) in zip(layers, layers2):
-        np.testing.assert_allclose(w2, w, atol=1e-12)
-        np.testing.assert_allclose(b2, b, atol=1e-12)
+        np.testing.assert_array_equal(w2, w)
+        np.testing.assert_array_equal(b2, b)
     cands.unpersist()
 
 
@@ -263,7 +264,7 @@ def test_lstm_training_reduces_loss_and_weights_roundtrip(spark):
     params2 = lstm_train.lstm_weights_from_df(df, dep_vocab, word_vocab,
                                               key_order)
     for k in lstm_train._PARAM_ORDER:
-        np.testing.assert_allclose(params2[k], params[k], atol=1e-12)
+        np.testing.assert_array_equal(params2[k], params[k])
     # trained weights drop into the Spark scorer and match a direct
     # numpy forward on the same instances
     scored = lstm.score_candidates_lstm(cands, dep_vocab, word_vocab,
@@ -284,28 +285,82 @@ def test_lstm_training_reduces_loss_and_weights_roundtrip(spark):
     cands.unpersist()
 
 
-def test_lstm_weights_from_df_remaps_keys_like_a_row_loop(spark):
-    """String keys land at the reader's (re-assigned) dense ids and keys
-    it does not know are dropped, exactly as a per-row loop places them."""
+# writer -> reader changes shared by every model: ids re-assigned (a new
+# key sorts before a kept one), keys dropped and added, relations permuted
+# and one gained
+_KEY_ORDER, _READ_KEY_ORDER = ["r0", "r1", "r2"], ["r2", "rNew", "r0", "r1"]
+_FF_VOCABS = {"dep_path": {"p_a", "p_b", "p_c"}, "dep_word": {"x", "y"},
+              "element": {"e1"}, "between": set()}
+_FF_READ_VOCABS = {"dep_path": {"p_a", "p_aa", "p_c"}, "dep_word": {"y", "z"},
+                   "element": {"e1"}, "between": {"btw"}}
+
+
+def _ff_case(spark, hidden):
+    """-> (table, row_keys, rel_cols, (writer, reader) of: {key: row of
+    the keyed matrix}, keyed matrix, output bias)."""
+    from kgre.score import feature_index
+
+    rng = np.random.RandomState(len(hidden))
+    idx, n_feat = feature_index(_FF_VOCABS)
+    dims = [n_feat, *hidden, len(_KEY_ORDER)]
+    layers = [(rng.normal(size=dims[i:i + 2]), rng.normal(size=dims[i + 1]))
+              for i in range(len(dims) - 1)]
+    df = train.weights_to_df(spark, (idx, layers), _KEY_ORDER)
+    idx2, layers2 = train.weights_from_df(df, _FF_READ_VOCABS,
+                                          _READ_KEY_ORDER)
+    flat = [{(k, f): r for k, d in ix.items() for f, r in d.items()}
+            for ix in (idx, idx2)]
+    return (df, *train._ff_keys(idx2),
+            [(flat[0], layers[0][0], layers[-1][1]),
+             (flat[1], layers2[0][0], layers2[-1][1])])
+
+
+def _lstm_case(spark, _):
     from kgre import lstm_train
 
-    rows = [("word_emb", "w1", 3, 0.5), ("word_emb", "gone", 0, 9.0),
-            ("word_emb", "w0", 199, 1.25), ("dep_emb", "nsubj", 49, -1.5),
-            ("kernel", "", 1234, 2.0), ("bias", "", 7, 0.25),
-            ("w1", "", 24_999, 3.0), ("b1", "", 99, 4.0),
-            ("w2", "r1", 5, 6.0), ("w2", "rX", 5, 7.0),
-            ("b2", "r0", 0, 8.0), ("b2", "r1", 0, 9.5)]
-    df = spark.createDataFrame(rows, lstm_train.LSTM_WEIGHTS_SCHEMA)
-    vocabs = ({"dobj": 0, "nsubj": 1}, {"w1": 0, "w2": 1, "w0": 2},
-              ["r0", "r1"])
-    got = lstm_train.lstm_weights_from_df(df, *vocabs)
-    want = lstm_weights_from_rows(rows, *vocabs)
-    for k in lstm_train._PARAM_ORDER:
-        np.testing.assert_array_equal(got[k], want[k])
-    assert (got["word_emb"][0, 3], got["word_emb"][2, 199],
-            got["dep_emb"][1, 49], got["w2"][5, 1], got["b2"][1]) == (
-        0.5, 1.25, -1.5, 6.0, 9.5)
-    assert np.count_nonzero(got["word_emb"]) == 2
+    vocabs = ({"PADDING_WORD": 0, "dobj": 1, "nsubj": 2},
+              {"PADDING_WORD": 0, "w_b": 1, "w_c": 2, "w_d": 3})
+    read_vocabs = ({"PADDING_WORD": 0, "amod": 1, "nsubj": 2},
+                   {"PADDING_WORD": 0, "w_c": 1, "w_a": 2, "w_e": 3})
+    params = lstm_train.init_lstm_params(*vocabs, _KEY_ORDER)
+    params["b2"] = np.arange(1.0, 4.0)
+    df = lstm_train.lstm_weights_to_df(spark, params, *vocabs, _KEY_ORDER)
+    got = lstm_train.lstm_weights_from_df(df, *read_vocabs, _READ_KEY_ORDER)
+    return (df, {"word_emb": read_vocabs[1], "dep_emb": read_vocabs[0]},
+            {"w2", "b2"},
+            [(vocabs[1], params["word_emb"], params["b2"]),
+             (read_vocabs[1], got["word_emb"], got["b2"])])
+
+
+@pytest.mark.parametrize("case,hidden", [(_ff_case, ()), (_ff_case, (8, 4)),
+                                         (_lstm_case, None)],
+                         ids=["ff_logistic", "ff_hidden_8_4", "lstm"])
+def test_tensors_from_df_remaps_keys_like_a_row_loop(spark, case, hidden):
+    """String keys land at the reader's (re-assigned) rows, keys it does
+    not know are dropped, unseen keys and relations get zeros, relation
+    columns follow the reader's key_order — exactly as a per-row loop
+    places every scalar; the model readers return those tensors."""
+    df, row_keys, rel_cols, ((keys, mat, bias), (keys2, mat2, bias2)) = (
+        case(spark, hidden))
+    got = train.tensors_from_df(df, _READ_KEY_ORDER, row_keys, rel_cols)
+    want = tensors_from_rows([tuple(r) for r in df.collect()],
+                             _READ_KEY_ORDER, row_keys, rel_cols)
+    assert sorted(got) == sorted(want)
+    for name in want:
+        np.testing.assert_array_equal(got[name], want[name])
+
+    def read_order(v):          # writer's relation columns, reader's order
+        return [v[2], 0.0, v[0], v[1]]
+
+    np.testing.assert_array_equal(bias2, read_order(bias))
+    kept = set(keys) & set(keys2)
+    assert kept and set(keys) - kept and set(keys2) - kept
+    assert any(keys[k] != keys2[k] for k in kept)
+    rel_mat = mat2.shape[1] == len(_READ_KEY_ORDER)   # logistic layer 0
+    for k in keys2:
+        row = mat[keys[k]] if k in kept else np.zeros(mat.shape[1])
+        np.testing.assert_array_equal(mat2[keys2[k]],
+                                      read_order(row) if rel_mat else row)
 
 
 def test_emit_threshold_inside_udf_matches_post_filter(spark):
@@ -385,8 +440,6 @@ def test_fold_assignment_distributed_matches_chunk_protocol(spark, monkeypatch):
 def test_k_fold_cv_rejects_too_few_documents(spark):
     """Fewer distinct urls than k would IndexError partway through the
     fold loop (pmid_fold_chunks clamps chunk length to 1) — fail fast."""
-    import pytest
-
     from kgre import cv
     cands, _, key_order, fwd, rev = _setup(spark, n_pages=2)
     n_urls = cands.select("url").distinct().count()
