@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgre.session import stage_checkpoint
+
 # ------------------------------------------------------------------ exact
 
 
@@ -62,7 +64,7 @@ def collapse_exact_docs(docs: DataFrame) -> DataFrame:
 
 
 def _cap_hot_buckets(banded: DataFrame, max_bucket: int | None,
-                     stats: dict | None, key_cols=("band", "key")) -> DataFrame:
+                     stats: dict | None) -> DataFrame:
     """Drop (band, key) buckets wider than ``max_bucket`` from pair
     expansion.  Capping trades recall for bounded work, so it is NEVER
     silent (ADVICE r4): the capped bucket/row counts are always
@@ -73,9 +75,6 @@ def _cap_hot_buckets(banded: DataFrame, max_bucket: int | None,
     computation over the corpus)."""
     if max_bucket is None:
         return banded
-    from kgre.session import stage_checkpoint
-
-    kc = list(key_cols)
     # checkpoint the BANDED stream itself (ADVICE r5), not just the size
     # table: the accounting action below materializes it once and the
     # returned pair-expansion plan reuses the same blocks — the upstream
@@ -83,7 +82,7 @@ def _cap_hot_buckets(banded: DataFrame, max_bucket: int | None,
     # stream is the narrow (band, key, id) projection, so the storage
     # cost is bounded by rows x bands of a few ints, not the corpus.
     banded = stage_checkpoint(banded, eager=False)
-    sizes = banded.groupBy(*kc).agg(F.count("*").alias("_bn"))
+    sizes = banded.groupBy("band", "key").agg(F.count("*").alias("_bn"))
     capped = sizes.filter(F.col("_bn") > max_bucket).agg(
         F.count("*").alias("n_buckets"),
         F.coalesce(F.sum("_bn"), F.lit(0)).alias("n_rows")).collect()[0]
@@ -98,8 +97,38 @@ def _cap_hot_buckets(banded: DataFrame, max_bucket: int | None,
             "pair expansion (bounded work, reduced recall); pass a "
             "stats dict to account for this, or max_bucket=None for "
             "exact semantics", RuntimeWarning, stacklevel=3)
-    ok = sizes.filter(F.col("_bn") <= max_bucket).select(*kc)
-    return banded.join(ok, kc)
+    ok = sizes.filter(F.col("_bn") <= max_bucket).select("band", "key")
+    return banded.join(ok, ["band", "key"])
+
+
+def band_pairs(banded: DataFrame, cols, max_bucket: int | None,
+               stats: dict | None) -> DataFrame:
+    """Distinct pairs of rows sharing a (band, key) bucket of ``banded``:
+    the one banded self-join of every LSH blocker (MinHash, SimHash,
+    hyperplane).  ``cols``: (column, left name, right name) per output
+    column, the id first; pairs are ordered left id < right id.
+
+    The stream is cut before the self-join — capped by
+    ``_cap_hot_buckets`` (which checkpoints) when ``max_bucket`` is set,
+    lazily checkpointed otherwise: a self-join references its input
+    twice, and without the cut the whole upstream pipeline (shingles ->
+    signatures, or a Python hashing stage) would execute once per side
+    (r6)."""
+    if max_bucket is None:
+        banded = stage_checkpoint(banded, eager=False)
+    else:
+        banded = _cap_hot_buckets(banded, max_bucket, stats)
+    a, b = banded.alias("a"), banded.alias("b")
+    id_col = cols[0][0]
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col("a." + id_col) < F.col("b." + id_col)))
+        .select(*[F.col(side + "." + c).alias(name)
+                  for c, left, right in cols
+                  for side, name in (("a", left), ("b", right))])
+        .distinct()
+    )
 
 
 # ------------------------------------------------------------- shingling
@@ -137,13 +166,10 @@ def jaccard_pairs(docs: DataFrame, n: int = 1, threshold: float = 0.6) -> DataFr
     TEST/VERIFY baseline only: the join key is the shingle, so hot
     shingles blow up the self-join at corpus scale — the production path
     is minhash_near_dups (LSH candidates, within-bucket verify)."""
-    from kgre.session import stage_checkpoint
-
     # the shingle stream is referenced three times below (sizes + both
     # self-join sides) and Spark does not share common subplans — the
     # lazy checkpoint computes the tokenize/window/distinct pass once
     sh = stage_checkpoint(shingles(docs, n), eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -152,6 +178,15 @@ def jaccard_pairs(docs: DataFrame, n: int = 1, threshold: float = 0.6) -> DataFr
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .agg(F.count("*").alias("inter"))
     )
+    return _jaccard_verify(inter, sh, threshold)
+
+
+def _jaccard_verify(inter: DataFrame, sh: DataFrame,
+                    threshold: float) -> DataFrame:
+    """(d1, d2, inter) shared-shingle counts -> (d1, d2, jaccard) pairs
+    at or above ``threshold``, jaccard = inter / |union| over the
+    per-doc shingle counts of ``sh``, rounded to 4 places."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     return (
         inter.join(sizes.withColumnRenamed("doc_id", "d1")
                    .withColumnRenamed("sz", "sz1"), "d1")
@@ -169,33 +204,20 @@ def jaccard_pairs(docs: DataFrame, n: int = 1, threshold: float = 0.6) -> DataFr
 # ---------------------------------------------------------- MinHash + LSH
 
 
-def _minhash_signatures_from_shingles(sh: DataFrame,
-                                      n_hashes: int = 8) -> DataFrame:
-    """(doc_id, sig array<string>): per seed, the lexicographic min of
-    md5(shingle || '#' || seed) — engine-portable MinHash."""
+def minhash_bands(sh: DataFrame, id_col: str, n_hashes: int,
+                  bands: int) -> DataFrame:
+    """(id, shingle) -> (id, band, key): the MinHash signature — per
+    seed, the lexicographic min of md5(shingle || '#' || seed), an
+    engine-portable MinHash — cut into ``bands`` keys of
+    ``n_hashes // bands`` minima joined by '|'."""
+    rows_per_band = n_hashes // bands
     mins = [
         F.min(F.md5(F.concat_ws("#", "shingle", F.lit(str(i))))).alias("h%d" % i)
         for i in range(n_hashes)
     ]
-    agg = sh.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id", F.array(*[F.col("h%d" % i) for i in range(n_hashes)]).alias("sig")
+    sig = sh.groupBy(id_col).agg(*mins).select(
+        id_col, F.array(*[F.col("h%d" % i) for i in range(n_hashes)]).alias("sig")
     )
-
-
-def _lsh_candidates_from_shingles(sh: DataFrame, n_hashes: int, bands: int,
-                                  max_bucket: int | None,
-                                  stats: dict | None) -> DataFrame:
-    """Shingles -> banded signature self-join -> distinct candidate
-    pairs.  The banded stream is always materialized before the
-    self-join (lazy checkpoint — via ``_cap_hot_buckets`` when capping,
-    directly otherwise): a self-join references its input twice, and
-    without the cut the whole shingle->signature pipeline would execute
-    once per side (r6)."""
-    from kgre.session import stage_checkpoint
-
-    rows_per_band = n_hashes // bands
-    sig = _minhash_signatures_from_shingles(sh, n_hashes)
     band_cols = []
     for b in range(bands):
         parts = [F.col("sig")[i] for i in range(b * rows_per_band,
@@ -204,22 +226,9 @@ def _lsh_candidates_from_shingles(sh: DataFrame, n_hashes: int, bands: int,
             F.struct(F.lit(b).alias("band"),
                      F.concat_ws("|", *parts).alias("key")).alias("b%d" % b)
         )
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket is None:
-        banded = stage_checkpoint(banded, eager=False)
-    else:
-        banded = _cap_hot_buckets(banded, max_bucket, stats)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    return sig.select(
+        id_col, F.explode(F.array(*band_cols)).alias("bk")
+    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
@@ -236,8 +245,6 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
     never materialized — that membership is ``exact_rep_members``'s
     linear output.  Pass ``collapse_exact=False`` for the historical
     all-pairs behavior (test/verify baselines only)."""
-    from kgre.session import stage_checkpoint
-
     if collapse_exact:
         docs = collapse_exact_docs(docs)
     # ONE materialized shingle stream feeds the LSH candidates, the
@@ -245,9 +252,8 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
     # five references re-ran the tokenize/window/distinct pass (and the
     # exact-collapse joins above it) from scratch
     sh = stage_checkpoint(shingles(docs, shingle_n), eager=False)
-    cands = _lsh_candidates_from_shingles(sh, n_hashes, bands,
-                                          max_bucket, stats)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    cands = band_pairs(minhash_bands(sh, "doc_id", n_hashes, bands),
+                       [("doc_id", "d1", "d2")], max_bucket, stats)
     a = sh.select(F.col("doc_id").alias("ad"), F.col("shingle").alias("ash"))
     b = sh.select(F.col("doc_id").alias("bd"), F.col("shingle").alias("bsh"))
     inter = (
@@ -256,18 +262,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
         .groupBy("d1", "d2")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "d1")
-                   .withColumnRenamed("sz", "sz1"), "d1")
-        .join(sizes.withColumnRenamed("doc_id", "d2")
-              .withColumnRenamed("sz", "sz2"), "d2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    return _jaccard_verify(inter, sh, threshold)
 
 
 # ---------------------------------------------------------------- SimHash
@@ -348,23 +343,8 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
             ])
         ).alias("bk"),
     ).select("doc_id", "simhash", "bk.band", "bk.key")
-    if max_bucket is None:
-        # the self-join below references the banded stream twice; the
-        # cut keeps the Python simhash stage from executing once per
-        # side (the capped branch checkpoints inside _cap_hot_buckets)
-        from kgre.session import stage_checkpoint
-        bands = stage_checkpoint(bands, eager=False)
-    else:
-        bands = _cap_hot_buckets(bands, max_bucket, stats)
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"),
-                F.col("a.simhash").alias("h1"), F.col("b.simhash").alias("h2"))
-        .distinct()
-    )
+    pairs = band_pairs(bands, [("doc_id", "d1", "d2"), ("simhash", "h1", "h2")],
+                       max_bucket, stats)
     return (
         pairs.withColumn(
             "hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
@@ -391,8 +371,6 @@ def cross_doc_span_stats(docs: DataFrame, n: int = 8,
     back → per-doc rollup.  No pair explosion anywhere: hot grams cost
     one counter row, never a self-join."""
     from kgre.decontam import ngram_hash_stream
-    from kgre.session import stage_checkpoint
-
     # (doc, gram) counts are referenced twice (the per-gram rollup and
     # the join's left side); the lazy checkpoint runs the n-gram hash
     # stream once — the stored stream is exactly the rows the join

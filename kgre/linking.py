@@ -5,8 +5,8 @@ SURVEY.md §7.4).
 Links free-text mention phrases to a canonical entity dictionary:
 
   1. character-3-gram shingles of the normalized phrase
-  2. MinHash signature (md5-string minima — engine-portable, same trick
-     as kgre.dedup) banded into buckets
+  2. MinHash signature banded into buckets (``dedup.minhash_bands``, the
+     md5-string minima the near-dup path uses — engine-portable)
   3. candidate pairs = (mention, dictionary alias) sharing a band bucket
      — the dictionary side is dictionary-sized, so the bucket join is a
      broadcast; blocking keeps the candidate set ~linear in mentions
@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgre.dedup import _cap_hot_buckets, minhash_bands
+
 
 def phrase_shingles(df: DataFrame, phrase_col: str, id_col: str,
                     n: int = 3) -> DataFrame:
@@ -49,27 +51,6 @@ def phrase_shingles(df: DataFrame, phrase_col: str, id_col: str,
             )
         ).alias("shingle"),
     ).distinct()
-
-
-def _minhash_bands(sh: DataFrame, n_hashes: int, bands: int) -> DataFrame:
-    rows = n_hashes // bands
-    mins = [
-        F.min(F.md5(F.concat_ws("#", "shingle", F.lit(str(i))))).alias("h%d" % i)
-        for i in range(n_hashes)
-    ]
-    sig = sh.groupBy("id").agg(*mins)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|", *[F.col("h%d" % i) for i in range(b * rows, (b + 1) * rows)]
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def link_mentions(mentions: DataFrame, dictionary: DataFrame,
@@ -96,11 +77,11 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame,
                 .select("mention_id", "entity_id", "jaccard"))
     m_sh = phrase_shingles(mentions, "phrase", "mention_id", n)
     d_sh = phrase_shingles(dictionary, "alias", "entity_id", n)
-    m_bands = _minhash_bands(m_sh, n_hashes, bands).withColumnRenamed("id", "mid")
-    d_bands = _minhash_bands(d_sh, n_hashes, bands).withColumnRenamed("id", "eid")
-    if max_bucket is not None:
-        from kgre.dedup import _cap_hot_buckets
-        d_bands = _cap_hot_buckets(d_bands, max_bucket, stats)
+    m_bands = minhash_bands(m_sh, "id", n_hashes, bands) \
+        .withColumnRenamed("id", "mid")
+    d_bands = _cap_hot_buckets(minhash_bands(d_sh, "id", n_hashes, bands)
+                               .withColumnRenamed("id", "eid"),
+                               max_bucket, stats)
     cands = (
         m_bands.join(F.broadcast(d_bands), ["band", "key"])
         .select("mid", "eid")

@@ -1,7 +1,9 @@
 """LSTM scoring path (reference M3/M5/M6 + X11, SURVEY.md §2.10-2.11).
 
-Mirrors the reference's tf_lstm graph (tf_lstm.py:160-229) as pure numpy
-inside a ``mapInPandas`` stage over broadcast weights:
+Mirrors the reference's tf_lstm graph (tf_lstm.py:160-229) as pure numpy;
+``lstm_batch_logits`` is the model's forward in the one scoring stage
+``score.score_stage`` (shared with the FF model: broadcast, scorable
+filter, distant labels and row assembly):
 
   * X11 encode (instances.py:199-219): SDP type list and lowercased SDP
     word list -> int id sequences padded to 100 with PADDING, unknown ->
@@ -34,6 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from kgre.score import score_stage, sigmoid
 from kgre.util import hfloats
 
 WORD_DIM = 200
@@ -43,12 +46,6 @@ HIDDEN = 100
 PAD_LEN = 100
 SEQ = 2 * PAD_LEN                   # 200 interleaved steps
 _W_SCALE = 0.08
-
-LSTM_TRIPLES_SCHEMA = (
-    "url string, sent_id int, pair_idx int, is_reverse boolean, "
-    "subj string, obj string, rel string, prob double"
-)
-
 
 # ------------------------------------------------------------- vocabularies
 
@@ -174,10 +171,6 @@ def lstm_weights(key_order):
             "w2": w2, "b2": b2}
 
 
-def _sigmoid(x):
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
-
-
 def lstm_forward_batch(seq, seq_len, weights, cache=None):
     """Batched fused-LSTM forward: seq [B, SEQ, STATE], seq_len [B] ->
     final hidden state [B, STATE].  Gate order [i g f o], forget_bias 1.0;
@@ -194,10 +187,10 @@ def lstm_forward_batch(seq, seq_len, weights, cache=None):
         active = (seq_len > t)[:, None]
         xh = np.concatenate([seq[:, t, :], h], axis=1)
         z = xh @ kernel + bias
-        i = _sigmoid(z[:, 0:STATE])
+        i = sigmoid(z[:, 0:STATE])
         g = np.tanh(z[:, STATE:2 * STATE])
-        f = _sigmoid(z[:, 2 * STATE:3 * STATE] + 1.0)
-        o = _sigmoid(z[:, 3 * STATE:4 * STATE])
+        f = sigmoid(z[:, 2 * STATE:3 * STATE] + 1.0)
+        o = sigmoid(z[:, 3 * STATE:4 * STATE])
         c_new = f * c + i * g
         tc = np.tanh(c_new)
         if cache is not None:
@@ -214,17 +207,43 @@ def lstm_logits(h, weights):
 
 # ----------------------------------------------------------------- scoring
 
+# the seq tensor is the memory hot spot: a full Arrow batch padded to
+# SEQ=200 steps is ~1.6 GB at 4096 rows x 200 x 250 float64, PER python
+# worker.  Batches run in fixed-size row chunks with the buffer sized to
+# the chunk's true max step count (SDP sequences are almost always far
+# shorter than the 100-token pad) — peak drops to
+# CHUNK x 2*ceil(max_len/2) x 250.
+CHUNK = 256
+
+
+def lstm_batch_logits(pdf, model):
+    """M3 logits [n, n_rel] of an Arrow batch of candidates (the
+    ``logits`` of ``score.score_stage``): X11 encode, interleave and the
+    fused forward per ``CHUNK`` rows."""
+    dv, wv, de, we, weights = model
+    out = []
+    for lo in range(0, len(pdf), CHUNK):
+        part = pdf.iloc[lo:lo + CHUNK]
+        t_ids, w_ids, lens = encode_batch(part["sdp_types"],
+                                          part["sdp_words"], dv, wv)
+        # the buffer covers only the chunk's effective window (rounded up
+        # to a whole word/dep step pair)
+        half = min(PAD_LEN, (int(lens.max()) + 1) // 2)
+        seq = interleave(we[w_ids[:, :half]], de[t_ids[:, :half]])
+        out.append(lstm_logits(lstm_forward_batch(seq, lens, weights),
+                               weights))
+    return np.concatenate(out)
+
 
 def score_candidates_lstm(candidates: DataFrame, dep_vocab, word_vocab,
-                          key_order, params=None) -> DataFrame:
-    """candidates -> per-(instance x relation) LSTM probabilities.
-    Everything ships once per executor as a broadcast; the UDF is pure
-    batched numpy (no per-row Python beyond the id encode).
+                          key_order, fwd_kb, rev_kb,
+                          params=None) -> DataFrame:
+    """candidates -> LSTM-scored triples (one row per instance x
+    relation, distant label included) through ``score.score_stage``.
 
     ``params``: optional trained weight dict from kgre.lstm_train (M4) —
     keys word_emb/dep_emb/kernel/bias/w1/b1/w2/b2; defaults to the frozen
     deterministic weights + embedding tables."""
-    spark = candidates.sparkSession
     if params is None:
         dep_emb, word_emb = embedding_tables(dep_vocab, word_vocab)
         weights = lstm_weights(key_order)
@@ -232,60 +251,7 @@ def score_candidates_lstm(candidates: DataFrame, dep_vocab, word_vocab,
         dep_emb, word_emb = params["dep_emb"], params["word_emb"]
         weights = {k: params[k] for k in ("kernel", "bias", "w1", "b1",
                                           "w2", "b2")}
-    b = spark.sparkContext.broadcast({
-        "dep_vocab": dep_vocab, "word_vocab": word_vocab,
-        "dep_emb": dep_emb, "word_emb": word_emb,
-        "weights": weights, "key_order": key_order,
-    })
-    n_rel = len(key_order)
-
-    # the seq tensor is the memory hot spot: a full Arrow batch padded to
-    # SEQ=200 steps is ~1.6 GB at 4096 rows x 200 x 250 float64, PER
-    # python worker.  Process fixed-size row chunks and size the buffer
-    # to the chunk's true max step count (SDP sequences are almost always
-    # far shorter than the 100-token pad) — peak drops to
-    # CHUNK x 2*ceil(max_len/2) x 250.
-    CHUNK = 256
-
-    def run(batches):
-        st = b.value
-        dv, wv = st["dep_vocab"], st["word_vocab"]
-        de, we = st["dep_emb"], st["word_emb"]
-        weights, keys = st["weights"], st["key_order"]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            for lo in range(0, n, CHUNK):
-                part = pdf.iloc[lo:lo + CHUNK]
-                k = len(part)
-                t_ids, w_ids, lens = encode_batch(
-                    part["sdp_types"], part["sdp_words"], dv, wv)
-                # the buffer covers only the chunk's effective window
-                # (rounded up to a whole word/dep step pair)
-                half = min(PAD_LEN, (int(lens.max()) + 1) // 2)
-                seq = interleave(we[w_ids[:, :half]], de[t_ids[:, :half]])
-                h = lstm_forward_batch(seq, lens, weights)
-                probs = _sigmoid(lstm_logits(h, weights))
-                out = pd.DataFrame({
-                    "url": np.repeat(part["url"].to_numpy(), n_rel),
-                    "sent_id": np.repeat(part["sent_id"].to_numpy(), n_rel),
-                    "pair_idx": np.repeat(part["pair_idx"].to_numpy(), n_rel),
-                    "is_reverse": np.repeat(part["is_reverse"].to_numpy(),
-                                            n_rel),
-                    "subj": np.repeat(part["subj"].to_numpy(), n_rel),
-                    "obj": np.repeat(part["obj"].to_numpy(), n_rel),
-                    "rel": np.tile(np.array(keys, dtype=object), k),
-                    "prob": probs.ravel(),
-                })
-                yield out
-
-    from pyspark.sql import functions as F
-    # explicit projection: mapInPandas ships every input column through
-    # Arrow — keep sentence text and unused feature columns off the
-    # boundary
-    scorable = candidates.filter(
-        (~F.col("is_reverse")) | F.col("gene_to_gene")
-    ).select("url", "sent_id", "pair_idx", "is_reverse", "subj", "obj",
-             "sdp_types", "sdp_words")
-    return scorable.mapInPandas(run, schema=LSTM_TRIPLES_SCHEMA)
+    return score_stage(candidates, ["sdp_types", "sdp_words"],
+                       lstm_batch_logits,
+                       (dep_vocab, word_vocab, dep_emb, word_emb, weights),
+                       key_order, fwd_kb, rev_kb)

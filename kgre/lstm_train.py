@@ -39,8 +39,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from kgre.lstm import (DEP_DIM, HIDDEN, PAD_LEN, STATE, WORD_DIM, _sigmoid,
+from kgre.lstm import (DEP_DIM, HIDDEN, PAD_LEN, STATE, WORD_DIM,
                        encode_batch, interleave, lstm_forward_batch)
+from kgre.score import sigmoid
 from kgre.train import (adam_step, collect_instances, tensors_from_df,
                          tensors_to_df)
 
@@ -133,7 +134,7 @@ def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
     if hidden_drop_mask is not None:
         hidden = hidden * hidden_drop_mask
     logits = hidden @ w2 + b2
-    p = _sigmoid(logits)
+    p = sigmoid(logits)
     ce = -(y * np.log(p + 1e-12) + (1 - y) * np.log(1 - p + 1e-12)).mean()
     l2_loss = l2 * sum(0.5 * float((params[k] ** 2).sum())
                        for k in _L2_PARAMS)

@@ -1,17 +1,19 @@
 """Distant labeling + model scoring -> scored triples.
 
-Fuses J1 (distant label membership, load_data.py:275-286) and M1 (logistic
-forward pass — the reference's shipped feed-forward config degenerates to
-per-relation logistic regression, relation_extraction.py:405,
-tf_feed_forward.py:32-63) into ONE ``mapInPandas`` stage over broadcast
-state:
+One ``mapInPandas`` stage (``score_stage``) scores both models.  It fuses
+J1 (distant label membership, load_data.py:275-286) with a model's
+forward pass — M1, the feed-forward net (``score_candidates``; the
+reference's shipped config degenerates to per-relation logistic
+regression, relation_extraction.py:405, tf_feed_forward.py:32-63), or
+M3, the LSTM (``kgre.lstm.score_candidates_lstm``) — over one broadcast:
 
-  * KB forward/reverse tuple sets (broadcast — the reference keeps them in
-    driver RAM; here they ship once per executor)
-  * vocabulary feature sets and a precomputed weight table
-    {(kind, feature) -> np.float64[n_rel]} — weights are materialized once
-    on the driver from the frozen feature-string-keyed model (kgre/model.py)
-    so the hot loop does dict lookups + vector adds, no hashing.
+  * the model's state (for FF the feature index
+    {kind: {feature: row}} and the layer stack, materialized once on the
+    driver from the frozen feature-string-keyed model, kgre/model.py, or
+    a trained table; the hot loop does dict lookups + a scatter-add, no
+    hashing);
+  * KB forward/reverse tuple sets (the reference keeps them in driver
+    RAM; here they ship once per executor) and the relation order.
 
 Output: one row per (instance x relation) in the reference's write_output
 layout (relation_extraction.py:21-47): (url=pmid, subj, obj, rel,
@@ -19,8 +21,8 @@ distant label, probability); emitted-triple set = prob > 0.5
 (tf_feed_forward.py:163).
 
 Reverse instances are scored only for gene-gene pairs
-(load_data.py:288-290); the candidates table carries both so the vocab
-builder sees reverse features (load_data.py:201-208).
+(load_data.py:288-290, ``scorable``); the candidates table carries both so
+the vocab builder sees reverse features (load_data.py:201-208).
 """
 
 from __future__ import annotations
@@ -44,6 +46,13 @@ TRIPLES_SCHEMA = (
 PREDICT_SCHEMA = TRIPLES_SCHEMA + (
     ", sent_text string, start_tok int, end_tok int"
 )
+
+_KEY_COLS = ["url", "sent_id", "pair_idx", "is_reverse", "subj", "obj"]
+
+# the candidate column each FF feature kind is looked up from
+_FF_KIND_COLS = {"dep_path": "dep_path_string", "dep_word": "sdp_words",
+                 "element": "sdp_elements", "between": "between_words"}
+FF_COLS = list(_FF_KIND_COLS.values())
 
 
 def feature_index(vocabs: dict[str, set]):
@@ -96,8 +105,7 @@ def distant_labels(e1_ids, e2_ids, is_reverse, key_order, fwd_kb, rev_kb):
     -> list of 0/1 in ``key_order``: any (e1, e2) id combination in the
     relation's KB set.  A SYMMETRIC relation matches either direction; a
     reverse instance is labeled only when the forward set did NOT match
-    (the reference's if/elif, load_data.py:283-286).  The scorer and the
-    training collector both label through this."""
+    (the reference's if/elif, load_data.py:283-286)."""
     combos = set(itertools.product(e1_ids, e2_ids))
     out = []
     for key in key_order:
@@ -111,6 +119,49 @@ def distant_labels(e1_ids, e2_ids, is_reverse, key_order, fwd_kb, rev_kb):
     return out
 
 
+def label_matrix(pdf: pd.DataFrame, key_order, fwd_kb, rev_kb) -> np.ndarray:
+    """``distant_labels`` of every instance of ``pdf`` -> int32
+    [n, n_rel]; the scorer and the training collector both label
+    through this."""
+    return np.array(
+        [distant_labels(e1, e2, rev, key_order, fwd_kb, rev_kb)
+         for rev, e1, e2 in zip(pdf["is_reverse"], pdf["pair_e1_ids"],
+                                pdf["pair_e2_ids"])],
+        dtype=np.int32).reshape(len(pdf), len(key_order))
+
+
+def scorable(candidates: DataFrame) -> DataFrame:
+    """The instances a model scores and trains on: forward ones, and
+    reverse ones only for gene-gene pairs (load_data.py:288-290)."""
+    return candidates.filter((~F.col("is_reverse")) | F.col("gene_to_gene"))
+
+
+def ff_hits(pdf: pd.DataFrame, idx) -> tuple[np.ndarray, np.ndarray]:
+    """The FF encoder: per instance of ``pdf``, the feature-index rows of
+    its vocab features -> (rows, feats), one (instance, feature row) hit
+    per entry, instances in order.  Within an instance: the dep path,
+    then the distinct SDP words, SDP elements and between words; features
+    missing from the vocab score nothing.  The multi-hot input times W1
+    is then a scatter-sum of W1 rows (``ff_logits``, ``train.fit_ff``)."""
+    idx_path, idx_word, idx_elem, idx_betw = (idx[k] for k in _FF_KIND_COLS)
+    rows: list[int] = []
+    feats: list[int] = []
+    it = zip(*(pdf[c] for c in FF_COLS))
+    for r, (path_s, words, elems, betw) in enumerate(it):
+        i = idx_path.get(path_s)
+        if i is not None:
+            rows.append(r)
+            feats.append(i)
+        for d, fs in ((idx_word, words), (idx_elem, elems),
+                      (idx_betw, betw)):
+            for f in set(fs):
+                i = d.get(f)
+                if i is not None:
+                    rows.append(r)
+                    feats.append(i)
+    return np.array(rows, dtype=np.int64), np.array(feats, dtype=np.int64)
+
+
 def ff_forward_from_z1(z1, layers):
     """Forward pass given the FIRST layer's pre-activation (the multi-hot
     input times W1 is a scatter-sum of W1 rows — computed upstream).
@@ -120,6 +171,77 @@ def ff_forward_from_z1(z1, layers):
     for w, b in layers[1:]:
         h = np.maximum(h, 0.0) @ w + b
     return h
+
+
+def ff_logits(pdf: pd.DataFrame, model) -> np.ndarray:
+    """M1 logits [n, n_rel] of a batch under ``model`` = (idx, layers):
+    one batch-wide scatter-add of the first layer's rows, then the rest
+    of the stack."""
+    idx, layers = model
+    rows, feats = ff_hits(pdf, idx)
+    w, b = layers[0]
+    z = np.tile(b, (len(pdf), 1))
+    np.add.at(z, rows, w[feats])
+    return ff_forward_from_z1(z, layers)
+
+
+def sigmoid(x):
+    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
+
+
+def score_stage(candidates: DataFrame, cols: list[str], logits, state,
+                key_order: list[str], fwd_kb: dict[str, set],
+                rev_kb: dict[str, set], with_sentence: bool = False,
+                emit_threshold: float | None = None) -> DataFrame:
+    """The scoring stage of every model: scorable ``candidates`` ->
+    (instance x relation) rows of label and ``sigmoid(logits(pdf,
+    state))``, where ``logits`` reads the model's ``cols`` of an Arrow
+    batch.  ``state`` ships once per executor in one broadcast with the
+    KB sets and ``key_order``.
+
+    ``with_sentence``: carry (sent_text, start_tok, end_tok) through the
+    scorer for the S14 rich predict sink (relation_extraction.py:70-80,
+    :548-562); off for the TEST path so the hot Arrow boundary never moves
+    sentence strings.
+    ``emit_threshold``: apply the emitted-triple gate (strictly >,
+    tf_feed_forward.py:163) INSIDE the UDF so sub-threshold
+    instance x relation rows never cross the Arrow boundary or reach the
+    sink — with many relations most rows are discarded, so this cuts the
+    dominant Arrow traffic of the TEST path (VERDICT r1 item 9).  None
+    (predict mode) keeps every row."""
+    b_state = candidates.sparkSession.sparkContext.broadcast(
+        {"model": state, "key_order": key_order, "fwd": fwd_kb,
+         "rev": rev_kb})
+    sentence = ["sent_text", "start_tok", "end_tok"] if with_sentence else []
+
+    def run(batches):
+        st = b_state.value
+        keys = st["key_order"]
+        rels = np.array(keys, dtype=object)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            labels = label_matrix(pdf, keys, st["fwd"], st["rev"])
+            probs = sigmoid(logits(pdf, st["model"]))
+            # (instance x relation) rows in row-major order: every pair in
+            # predict mode, the emitted ones under a threshold
+            keep = (np.ones(probs.shape, dtype=bool) if emit_threshold is None
+                    else probs > emit_threshold)
+            ri, ki = np.nonzero(keep)
+            out = {c: pdf[c].to_numpy()[ri] for c in _KEY_COLS}
+            out.update(rel=rels[ki], label=labels[ri, ki],
+                       prob=probs[ri, ki])
+            out.update({c: pdf[c].to_numpy()[ri] for c in sentence})
+            yield pd.DataFrame(out)
+
+    # explicit projection: mapInPandas ships every input column through
+    # Arrow, so prune to exactly what the stage reads (keeps unused
+    # feature columns — and, in TEST mode, the sentence strings — off the
+    # hot boundary)
+    return scorable(candidates).select(
+        *_KEY_COLS, "pair_e1_ids", "pair_e2_ids", *cols, *sentence
+    ).mapInPandas(
+        run, schema=PREDICT_SCHEMA if with_sentence else TRIPLES_SCHEMA)
 
 
 def score_candidates(
@@ -132,113 +254,19 @@ def score_candidates(
     with_sentence: bool = False,
     emit_threshold: float | None = None,
 ) -> DataFrame:
-    """candidates -> scored triples (one row per instance x relation).
+    """candidates -> FF-scored triples (one row per instance x relation)
+    through ``score_stage``.
 
     ``weight_table``: optional ``(idx, [(W1,b1),...,(Wout,bout)])`` layer
     stack (tf_feed_forward.py:32-63) from an offline training run
     (``kgre.train.train_model`` or ``kgre.train.weights_from_df``, M2);
     defaults to the frozen deterministic logistic model of
-    ``build_weight_table`` (see ``ff_layers``).
-    ``with_sentence``: carry (sent_text, start_tok, end_tok) through the
-    scorer for the S14 rich predict sink (relation_extraction.py:70-80,
-    :548-562); off for the TEST path so the hot Arrow boundary never moves
-    sentence strings.
-    ``emit_threshold``: apply the emitted-triple gate (strictly >,
-    tf_feed_forward.py:163) INSIDE the UDF so sub-threshold
-    instance x relation rows never cross the Arrow boundary or reach the
-    sink — with many relations most rows are discarded, so this cuts the
-    dominant Arrow traffic of the TEST path (VERDICT r1 item 9).  None
-    (predict mode) keeps every row."""
-    spark = candidates.sparkSession
+    ``build_weight_table`` (see ``ff_layers``)."""
     if weight_table is None:
         weight_table = build_weight_table(vocabs, key_order)
-    idx, layers = ff_layers(weight_table)
-    b_state = spark.sparkContext.broadcast(
-        {
-            "idx": idx,
-            "layers": layers,
-            "key_order": key_order,
-            "fwd": fwd_kb,
-            "rev": rev_kb,
-        }
-    )
-    n_rel = len(key_order)
-
-    def run(batches):
-        st = b_state.value
-        layers_l = st["layers"]
-        W, bias_v = layers_l[0]
-        idx_path = st["idx"]["dep_path"]
-        idx_word = st["idx"]["dep_word"]
-        idx_elem = st["idx"]["element"]
-        idx_betw = st["idx"]["between"]
-        keys, fwd, rev = st["key_order"], st["fwd"], st["rev"]
-        rels = np.array(keys, dtype=object)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            label_rows = []
-            # one batch-wide scatter-add instead of a per-row fancy-index:
-            # collect (row, feature-row) hit pairs, then z[rows] += W[feats]
-            hit_rows: list[int] = []
-            hit_feats: list[int] = []
-            it = zip(
-                pdf["is_reverse"], pdf["pair_e1_ids"], pdf["pair_e2_ids"],
-                pdf["dep_path_string"], pdf["sdp_words"],
-                pdf["sdp_elements"], pdf["between_words"],
-            )
-            z = np.tile(bias_v, (n, 1))
-            for r, (is_rev, pe1, pe2, path_s, words, elems, betw) in enumerate(it):
-                i = idx_path.get(path_s)
-                if i is not None:
-                    hit_rows.append(r)
-                    hit_feats.append(i)
-                for d, fs in ((idx_word, words), (idx_elem, elems),
-                              (idx_betw, betw)):
-                    for f in set(fs):
-                        i = d.get(f)
-                        if i is not None:
-                            hit_rows.append(r)
-                            hit_feats.append(i)
-                label_rows.append(
-                    distant_labels(pe1, pe2, is_rev, keys, fwd, rev))
-            labels = np.array(label_rows, dtype=np.int32).reshape(n, n_rel)
-            if hit_rows:
-                np.add.at(z, np.asarray(hit_rows), W[np.asarray(hit_feats)])
-            logits = ff_forward_from_z1(z, layers_l)
-            probs = 1.0 / (1.0 + np.exp(-np.clip(logits, -60, 60)))
-            # (instance x relation) rows in row-major order: every pair in
-            # predict mode, the emitted ones under a threshold
-            keep = (np.ones(probs.shape, dtype=bool) if emit_threshold is None
-                    else probs > emit_threshold)
-            ri, ki = np.nonzero(keep)
-            cols = {
-                c: pdf[c].to_numpy()[ri]
-                for c in ("url", "sent_id", "pair_idx", "is_reverse",
-                          "subj", "obj")
-            }
-            cols["rel"] = rels[ki]
-            cols["label"] = labels[ri, ki]
-            cols["prob"] = probs[ri, ki]
-            if with_sentence:
-                for c in ("sent_text", "start_tok", "end_tok"):
-                    cols[c] = pdf[c].to_numpy()[ri]
-            yield pd.DataFrame(cols)
-
-    # explicit projection: mapInPandas ships every input column through
-    # Arrow, so prune to exactly what the scorer reads (keeps sdp_types —
-    # and, in TEST mode, the sentence strings — off the hot boundary)
-    needed = ["url", "sent_id", "pair_idx", "is_reverse", "subj", "obj",
-              "pair_e1_ids", "pair_e2_ids", "dep_path_string", "sdp_words",
-              "sdp_elements", "between_words"]
-    if with_sentence:
-        needed += ["sent_text", "start_tok", "end_tok"]
-    scorable = candidates.filter(
-        (~F.col("is_reverse")) | F.col("gene_to_gene")
-    ).select(*needed)
-    schema = PREDICT_SCHEMA if with_sentence else TRIPLES_SCHEMA
-    return scorable.mapInPandas(run, schema=schema)
+    return score_stage(candidates, FF_COLS, ff_logits,
+                       ff_layers(weight_table), key_order, fwd_kb, rev_kb,
+                       with_sentence, emit_threshold)
 
 
 def emitted_triples(scored: DataFrame) -> DataFrame:

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgre.dedup import band_pairs
 from kgre.util import hunif
 
 
@@ -139,8 +140,10 @@ def cosine_neardup_bucketed(embs: DataFrame, threshold: float = 0.9,
     (derived JVM-side with shiftright/AND from the one Arrow bucketing
     pass); a pair is a candidate if ANY band key matches — OR-of-bands
     recall, e.g. at cos=0.9 with 8 planes / 4 bands a true pair is found
-    with p ~ 0.995.  All joins are plain equi-joins (no cartesian /
-    BroadcastNestedLoopJoin, asserted in test_plans.py);
+    with p ~ 0.995.  The band self-join is dedup's ``band_pairs``, whose
+    cut runs the Python bucketing pass once.  All joins are plain
+    equi-joins (no cartesian / BroadcastNestedLoopJoin, asserted in
+    test_plans.py);
     cosine_neardup_pairs remains the exact all-pairs test oracle."""
     ppb = n_planes // bands
     mask = (1 << ppb) - 1
@@ -156,14 +159,7 @@ def cosine_neardup_bucketed(embs: DataFrame, threshold: float = 0.9,
             for b in range(bands)
         ])).alias("bk"),
     ).select("vec_id", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("v1"), F.col("b.vec_id").alias("v2"))
-        .distinct()
-    )
+    cand = band_pairs(banded, [("vec_id", "v1", "v2")], None, None)
     # per-vector norms computed on the n-sized sides before the pair
     # join (r6) — the within-bucket verify then folds each pair's arrays
     # once (dot) instead of three times; bit-identical rounded cosines

@@ -15,7 +15,7 @@ steps:
      (``hash_range_sample``) and collected once (``collect_instances``,
      bounded by ``sample`` the same way the reference is bounded by what
      fits in TFRecords on one box); labels come from the scorer's J1 truth
-     table and features are looked up in the scorer's feature index;
+     table and features from the scorer's FF encoder (``score.ff_hits``);
   2. driver: Adam steps (``adam_step``, shared with the LSTM fit) over the
      sparse hit lists.
 
@@ -38,7 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgre.score import distant_labels, feature_index, ff_layers
+from kgre.score import (FF_COLS, feature_index, ff_hits, ff_layers,
+                        label_matrix, scorable)
 from kgre.similarity import grow_cutoff
 
 SEED = 10          # tf_feed_forward.py:7-8
@@ -79,20 +80,15 @@ def collect_instances(candidates: DataFrame, cols, key_order: list[str],
     """Scorable instances -> (pandas frame of ``cols``, distant-label
     matrix y[n, n_rel]) on the driver.  ``sample`` caps driver memory
     (the reference is equally bounded by TFRecords on one box); sampling
-    is deterministic (hash of the instance key).  Labels come from the
-    scorer's own J1 truth table (``score.distant_labels``)."""
-    inst = hash_range_sample(
-        candidates.filter((~F.col("is_reverse")) | F.col("gene_to_gene")),
-        sample,
-    ).select("is_reverse", "pair_e1_ids", "pair_e2_ids", *cols)
+    is deterministic (hash of the instance key).  The instances and their
+    labels are the scorer's own (``score.scorable``,
+    ``score.label_matrix``)."""
+    inst = hash_range_sample(scorable(candidates), sample).select(
+        "is_reverse", "pair_e1_ids", "pair_e2_ids", *cols)
     # Arrow-path collect (toPandas): row-at-a-time collect() pickles each
     # Row object — seconds slower at the 100k sample cap
     pdf = inst.toPandas()
-    y = np.array([distant_labels(e1, e2, rev, key_order, fwd_kb, rev_kb)
-                  for rev, e1, e2 in zip(pdf["is_reverse"],
-                                         pdf["pair_e1_ids"],
-                                         pdf["pair_e2_ids"])],
-                 dtype=np.float64).reshape(len(pdf), len(key_order))
+    y = label_matrix(pdf, key_order, fwd_kb, rev_kb).astype(np.float64)
     return pdf, y
 
 
@@ -100,27 +96,14 @@ def collect_training_set(candidates: DataFrame, vocabs: dict[str, set],
                          key_order: list[str], fwd_kb, rev_kb,
                          sample: int = 100_000):
     """candidates -> (feature index, per-instance feature-hit lists,
-    distant-label matrix): ``collect_instances`` encoded the way the
-    scorer looks its features up."""
+    distant-label matrix): ``collect_instances`` encoded by the scorer's
+    FF encoder ``score.ff_hits``."""
     idx, _ = feature_index(vocabs)
-    cols = {"dep_word": "sdp_words", "element": "sdp_elements",
-            "between": "between_words"}
-    pdf, y = collect_instances(candidates, ["dep_path_string", *cols.values()],
-                               key_order, fwd_kb, rev_kb, sample)
-    hits: list[list[int]] = []
-    for r in range(len(pdf)):
-        h = []
-        i = idx["dep_path"].get(pdf["dep_path_string"].iat[r])
-        if i is not None:
-            h.append(i)
-        for kind, c in cols.items():
-            d = idx[kind]
-            for f in set(pdf[c].iat[r]):
-                j = d.get(f)
-                if j is not None:
-                    h.append(j)
-        hits.append(h)
-    return idx, hits, y
+    pdf, y = collect_instances(candidates, FF_COLS, key_order, fwd_kb,
+                               rev_kb, sample)
+    rows, feats = ff_hits(pdf, idx)
+    bounds = np.searchsorted(rows, np.arange(len(pdf) + 1))
+    return idx, [feats[a:b].tolist() for a, b in zip(bounds, bounds[1:])], y
 
 
 def adam_step(state, grads, params, lr, t):

@@ -2,8 +2,8 @@
 row builder mirroring the reference pair loop (for row-level comparison
 against kgre.candidates.sentence_candidates), and the independent
 oracles the tests check kgre against: the DataFrame KB expansion, the
-per-instance LSTM forward, the reference's fold chunks and the per-token
-SimHash."""
+per-instance LSTM forward, the per-row FF feature lookup, the reference's
+fold chunks and the per-token SimHash."""
 
 from __future__ import annotations
 
@@ -14,8 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgre import pyoracle
-from kgre.lstm import DEP_DIM, STATE, WORD_DIM, _sigmoid, encode_instance
+from kgre.lstm import DEP_DIM, STATE, WORD_DIM, encode_instance
 from kgre.nlp import tag_word
+from kgre.score import sigmoid
 
 
 def tok(i: int, word: str, ner: str | None = None, norm: str | None = None):
@@ -162,14 +163,36 @@ def oracle_score_instance(sdp_types, sdp_words, dep_vocab, word_vocab,
         else:
             x = np.concatenate([np.zeros(WORD_DIM), dep_emb[t_ids[t // 2]]])
         z = np.concatenate([x, h]) @ kernel + bias
-        i = _sigmoid(z[0:STATE])
+        i = sigmoid(z[0:STATE])
         g = np.tanh(z[STATE:2 * STATE])
-        f = _sigmoid(z[2 * STATE:3 * STATE] + 1.0)
-        o = _sigmoid(z[3 * STATE:4 * STATE])
+        f = sigmoid(z[2 * STATE:3 * STATE] + 1.0)
+        o = sigmoid(z[3 * STATE:4 * STATE])
         c = f * c + i * g
         h = o * np.tanh(c)
     hidden = h @ weights["w1"] + weights["b1"]
-    return _sigmoid(hidden @ weights["w2"] + weights["b2"])
+    return sigmoid(hidden @ weights["w2"] + weights["b2"])
+
+
+def ff_hit_lists(pdf, idx) -> list[list[int]]:
+    """Per-row reference for ``score.ff_hits``: one feature-row list per
+    instance, the dep path first, then the distinct SDP words, SDP
+    elements and between words, looked up one feature at a time."""
+    cols = {"dep_word": "sdp_words", "element": "sdp_elements",
+            "between": "between_words"}
+    hits: list[list[int]] = []
+    for r in range(len(pdf)):
+        h = []
+        i = idx["dep_path"].get(pdf["dep_path_string"].iat[r])
+        if i is not None:
+            h.append(i)
+        for kind, c in cols.items():
+            d = idx[kind]
+            for f in set(pdf[c].iat[r]):
+                j = d.get(f)
+                if j is not None:
+                    h.append(j)
+        hits.append(h)
+    return hits
 
 
 def tensors_from_rows(rows, key_order, row_keys, rel_cols):

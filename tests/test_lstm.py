@@ -5,7 +5,10 @@ import numpy as np
 import pytest
 
 from kgre import lstm, synthgen
+from kgre.kb import load_kb_sets, ontology_closure_dict
 from kgre.pipeline import pages_to_candidates
+from kgre.score import score_candidates
+from kgre.vocab import build_vocab, collect_vocab_sets
 from tests.helpers import oracle_score_instance
 
 KEYS = ["activates.txt", "inhibited_by.txt", "SYMMETRICbinds.txt"]
@@ -64,6 +67,11 @@ def test_batch_forward_matches_oracle():
         np.testing.assert_allclose(batch_probs[r], oracle, atol=1e-12)
 
 
+def _kb_sets():
+    return load_kb_sets(synthgen.kb_rows(),
+                        ontology_closure_dict(synthgen.ontology_rows()))
+
+
 def test_lstm_stage_end_to_end(spark):
     pages = synthgen.pages_df(spark, 40)
     cands = pages_to_candidates(pages, "GENE", "ONTOLOGY",
@@ -73,7 +81,9 @@ def test_lstm_stage_end_to_end(spark):
     words = [r["f"] for r in
              cands.selectExpr("explode(sdp_words) f").distinct().collect()]
     dep, word = lstm.lstm_vocabs(types, words)
-    scored = lstm.score_candidates_lstm(cands, dep, word, sorted(KEYS))
+    fwd, rev = _kb_sets()
+    scored = lstm.score_candidates_lstm(cands, dep, word, sorted(KEYS),
+                                        fwd, rev)
     rows = scored.collect()
     assert len(rows) > 0 and len(rows) % len(KEYS) == 0
     assert all(0.0 < r["prob"] < 1.0 for r in rows)
@@ -84,6 +94,28 @@ def test_lstm_stage_end_to_end(spark):
         k = (r["url"], r["sent_id"], r["pair_idx"], r["is_reverse"], r["rel"])
         assert again[k] == pytest.approx(r["prob"], abs=1e-12)
     cands.unpersist()
+
+
+def test_lstm_and_ff_score_the_same_instances_with_the_same_labels(spark):
+    """Both models run through one scoring stage: over one candidates
+    frame the LSTM rows and the FF predict-mode rows cover the same
+    (instance x relation) keys with the same distant labels."""
+    pages = synthgen.pages_df(spark, 30)
+    cands = pages_to_candidates(pages, "GENE", "ONTOLOGY",
+                                synthgen.stop_entity_ids()).persist()
+    fwd, rev = _kb_sets()
+    key_order = sorted(fwd)
+    dep, word = lstm.lstm_vocab_features(cands)
+    vocabs = collect_vocab_sets(build_vocab(cands, 2))
+    cols = ["url", "sent_id", "pair_idx", "is_reverse", "rel", "label"]
+    lstm_rows = [tuple(r) for r in lstm.score_candidates_lstm(
+        cands, dep, word, key_order, fwd, rev).select(*cols).collect()]
+    ff_rows = [tuple(r) for r in score_candidates(
+        cands, vocabs, key_order, fwd, rev).select(*cols).collect()]
+    cands.unpersist()
+    assert len(set(lstm_rows)) == len(lstm_rows)
+    assert set(lstm_rows) == set(ff_rows)
+    assert any(r[-1] for r in lstm_rows) and not all(r[-1] for r in lstm_rows)
 
 
 def test_w2v_bin_roundtrip_and_tail_convention(tmp_path):

@@ -143,11 +143,10 @@ def test_bucketed_neardup_recall_vs_exact(spark):
     assert len(lsh) >= 0.6 * len(exact), (len(lsh), len(exact))
 
 
-def test_scorer_input_is_pruned(spark):
-    """The TEST-mode scoring stage must not ship sentence text or the
-    unused sdp_types through the Arrow boundary (mapInPandas receives
-    every input column, so the projection must be explicit upstream)."""
-    from kgre import synthgen
+def _scorer_input(spark, model):
+    """The argument lists of the scoring stage's MapInPandas nodes, with
+    the FF scorer in TEST mode or the LSTM scorer."""
+    from kgre import lstm, synthgen
     from kgre.kb import load_kb_sets, ontology_closure_dict
     from kgre.score import score_candidates
     from kgre.vocab import build_vocab, collect_vocab_sets
@@ -155,23 +154,73 @@ def test_scorer_input_is_pruned(spark):
     pages = synthgen.pages_df(spark, 10)
     cands = pages_to_candidates(pages, "GENE", "ONTOLOGY",
                                 synthgen.stop_entity_ids()).persist()
-    vocabs = collect_vocab_sets(build_vocab(cands, 2))
     fwd, rev = load_kb_sets(synthgen.kb_rows(),
                             ontology_closure_dict(synthgen.ontology_rows()))
-    scored = score_candidates(cands, vocabs, sorted(fwd), fwd, rev,
-                              emit_threshold=0.5)
+    if model == "ff":
+        vocabs = collect_vocab_sets(build_vocab(cands, 2))
+        scored = score_candidates(cands, vocabs, sorted(fwd), fwd, rev,
+                                  emit_threshold=0.5)
+    else:
+        dep, word = lstm.lstm_vocabs(["nsubj"], ["gene"])
+        scored = lstm.score_candidates_lstm(cands, dep, word, sorted(fwd),
+                                            fwd, rev)
     plan = _plan(scored)
-    # the scorer's MapInPandas INPUT list (text before the ')#' closing
-    # run(...)) must exclude the pruned cols; the candidates stage's own
-    # node lists them in its OUTPUT, which is fine
-    map_lines = [ln for ln in plan.splitlines()
-                 if "Arguments: run(" in ln
-                 and "pair_e1_ids" in ln.split(")#")[0]]
-    assert map_lines, plan
-    for ln in map_lines:
-        args = ln.split(")#")[0]
-        assert "sent_text" not in args and "sdp_types" not in args, ln
     cands.unpersist()
+    # the scorer's MapInPandas INPUT list (text before the ')#' closing
+    # run(...)); the candidates stage's own node lists the pruned
+    # columns in its OUTPUT, which is fine
+    args = [ln.split(")#")[0] for ln in plan.splitlines()
+            if "Arguments: run(" in ln
+            and "pair_e1_ids" in ln.split(")#")[0]]
+    assert args, plan
+    return args
+
+
+def test_scorer_input_is_pruned(spark):
+    """The TEST-mode scoring stage must not ship sentence text or the
+    unused sdp_types through the Arrow boundary (mapInPandas receives
+    every input column, so the projection must be explicit upstream)."""
+    for args in _scorer_input(spark, "ff"):
+        assert "sent_text" not in args and "sdp_types" not in args, args
+
+
+def test_lstm_scorer_input_is_pruned(spark):
+    """The same stage under the LSTM ships only its two SDP sequences:
+    no sentence text and none of the FF feature columns."""
+    for args in _scorer_input(spark, "lstm"):
+        assert "sdp_types" in args and "sdp_words" in args, args
+        for col in ("sent_text", "dep_path_string", "sdp_elements",
+                    "between_words"):
+            assert col not in args, args
+
+
+def _recorded_plans(spark) -> dict[int, str]:
+    """{SQL execution id: formatted physical plan} of every execution the
+    session's status store holds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+def test_cosine_bucketing_runs_once(spark):
+    """The hyperplane bucketing Python stage is planned once per near-dup
+    query: the band self-join reads one cut stream, not one Python stage
+    per side.  The cut moves the stage out of the query's own plan into
+    the checkpoint's, so this counts over every plan the query records."""
+    from kgre import similarity
+
+    embs = spark.read.parquet(f"{SF}/embeddings.parquet")
+    seen = set(_recorded_plans(spark))
+    df = similarity.cosine_neardup_bucketed(embs, threshold=0.30,
+                                            n_planes=8, bands=4, max_id=150)
+    assert df.count() > 0
+    plans = [p for e, p in _recorded_plans(spark).items() if e not in seen]
+    assert sum(_python_stages(p) for p in plans) == 1, plans
 
 
 def test_linking_and_clean_have_no_cartesian(spark):

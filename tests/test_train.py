@@ -10,7 +10,7 @@ from kgre import synthgen, train
 from kgre.pipeline import pages_to_candidates
 from kgre.score import emitted_triples, score_candidates
 from kgre.vocab import build_vocab, collect_vocab_sets
-from tests.helpers import pmid_fold_chunks, tensors_from_rows
+from tests.helpers import ff_hit_lists, pmid_fold_chunks, tensors_from_rows
 
 
 def _setup(spark, n_pages=150):
@@ -135,6 +135,40 @@ def test_ff_hidden_layers_train_and_score(spark):
     for (w, b), (w2, b2) in zip(layers, layers2):
         np.testing.assert_array_equal(w2, w)
         np.testing.assert_array_equal(b2, b)
+    cands.unpersist()
+
+
+def test_ff_hits_match_per_row_lookup(spark):
+    """``score.ff_hits`` (the one FF encoder, shared by the scorer and
+    ``collect_training_set``) returns the per-row lookup's hits in the
+    same order per instance — ``fit_ff`` sums ``w1[hits]`` in list
+    order — including instances with empty feature lists and features
+    missing from the vocab."""
+    import pandas as pd
+
+    from kgre.score import FF_COLS, feature_index, ff_hits
+
+    cands, vocabs, key_order, fwd, rev = _setup(spark, 40)
+    idx, _ = feature_index(vocabs)
+    pdf = pd.concat([cands.select(*FF_COLS).toPandas(), pd.DataFrame({
+        "dep_path_string": ["zz_unseen", "zz_unseen_path"],
+        "sdp_words": [[], ["zz_unseen", "zz_unseen"]],
+        "sdp_elements": [[], []],
+        "between_words": [[], ["zz_unseen"]],
+    })], ignore_index=True)
+    want = ff_hit_lists(pdf, idx)
+    rows, feats = ff_hits(pdf, idx)
+    got = [[] for _ in range(len(pdf))]
+    for r, f in zip(rows.tolist(), feats.tolist()):
+        got[r].append(f)
+    assert got == want
+    assert want[-2:] == [[], []] and sum(map(len, want)) > len(want)
+    # the training collector encodes its instances the same way
+    inst, _ = train.collect_instances(cands, FF_COLS, key_order, fwd, rev,
+                                      sample=10_000)
+    _, hits, y = train.collect_training_set(cands, vocabs, key_order, fwd,
+                                            rev, sample=10_000)
+    assert hits == ff_hit_lists(inst, idx) and len(hits) == len(y)
     cands.unpersist()
 
 
@@ -268,7 +302,7 @@ def test_lstm_training_reduces_loss_and_weights_roundtrip(spark):
     # trained weights drop into the Spark scorer and match a direct
     # numpy forward on the same instances
     scored = lstm.score_candidates_lstm(cands, dep_vocab, word_vocab,
-                                        key_order, params=params2)
+                                        key_order, fwd, rev, params=params2)
     row = scored.filter("rel = '%s'" % key_order[0]).first()
     c = [r for r in cands.collect()
          if (r["url"], r["sent_id"], r["pair_idx"], r["is_reverse"])
