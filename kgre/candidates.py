@@ -393,8 +393,7 @@ def candidate_emitter(entity_a: str, entity_b: str, stop_ids,
 
 
 def candidates_from_sentences(sentences: DataFrame, entity_a: str,
-                              entity_b: str, stop_ids,
-                              allow1=None, allow2=None) -> DataFrame:
+                              entity_b: str, stop_ids) -> DataFrame:
     """sentences rows -> candidate rows.  Entry point for pre-parsed
     corpora (e.g. CoreNLP XML via kgre.corenlp); ``sent_text`` is
     optional (rebuilt from the token words when absent)."""
@@ -408,4 +407,4 @@ def candidates_from_sentences(sentences: DataFrame, entity_a: str,
         yield s["url"], s
 
     return sentence_stage(sentences.select(*cols), rows, candidate_emitter(
-        entity_a, entity_b, stop_ids, allow1, allow2))
+        entity_a, entity_b, stop_ids))

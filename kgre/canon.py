@@ -17,7 +17,7 @@ extra equi-join per round.
 Skew (north_rule: "salted repartitioning for skewed hot entities"): a hub
 node with millions of edges makes ``groupBy(node)`` a hot key.  The
 aggregation is min(), so it runs in TWO phases: groupBy((node, salt)) for
-the partial min, then groupBy(node) over <=n_salts rows per node — the
+the partial min, then groupBy(node) over <=N_SALTS rows per node — the
 classic salted two-phase reduction.  (AQE also splits skewed joins at
 runtime; salting covers the aggregation side.)
 """
@@ -29,14 +29,14 @@ from pyspark.sql import functions as F
 
 from kgre.session import stage_checkpoint
 
+MAX_ITERS = 50      # rounds; O(log diameter) of them are ever needed
+N_SALTS = 8         # partial-min groups per node
 
-def connected_components(edges: DataFrame, max_iters: int = 50,
-                         n_salts: int = 8, stats: dict | None = None) -> DataFrame:
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src string, dst string) -> (node string, component string)
-    where component = lexicographic min node id in the component.
-
-    ``stats``: optional dict that receives {'iterations': n} (tests
-    assert the O(log diameter) bound)."""
+    where component = lexicographic min node id in the component.  Each
+    round runs one action (the changed-count)."""
     sym = stage_checkpoint(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
@@ -48,14 +48,13 @@ def connected_components(edges: DataFrame, max_iters: int = 50,
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    it = 0
-    for it in range(1, max_iters + 1):
+    for _ in range(MAX_ITERS):
         nbr_label = sym.join(
             labels.withColumnRenamed("node", "b"), "b"
         ).select(F.col("a").alias("node"), F.col("component"))
         # salted two-phase min: partial min per (node, salt), then final
         salted = nbr_label.withColumn(
-            "salt", F.pmod(F.xxhash64("component"), F.lit(n_salts))
+            "salt", F.pmod(F.xxhash64("component"), F.lit(N_SALTS))
         )
         partial = salted.groupBy("node", "salt").agg(
             F.min("component").alias("component")
@@ -97,8 +96,6 @@ def connected_components(edges: DataFrame, max_iters: int = 50,
         labels = new_labels.drop("changed")
         if changed == 0:
             break
-    if stats is not None:
-        stats["iterations"] = it
     return labels
 
 

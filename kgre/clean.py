@@ -57,7 +57,6 @@ def clean_documents(docs: DataFrame, neardup_threshold: float = 0.6,
                     line_dedup_min_count: int | None = None,
                     max_rep_frac: float | None = None,
                     max_bits: float | None = None,
-                    lm_train_docs: DataFrame | None = None,
                     decontam_bench: DataFrame | None = None,
                     host_cap: int | None = None,
                     token_budget: int | dict | None = None) -> DataFrame:
@@ -85,8 +84,8 @@ def clean_documents(docs: DataFrame, neardup_threshold: float = 0.6,
     - ``repetition`` (``max_rep_frac``): Gopher filter — drop docs whose
       duplicate-3-gram fraction exceeds it (too-short docs are kept);
     - ``perplexity`` (``max_bits``): bigram-LM filter (kgre.lm), trained
-      on ``lm_train_docs`` or, when None, on the surviving docs
-      themselves (self-referential outlier pruning);
+      on the surviving docs themselves (self-referential outlier
+      pruning);
     - ``decontaminate`` (``decontam_bench``): drop docs overlapping the
       bench set by >= 3 5-gram window hits;
     - ``host_cap`` (requires ``url_col``): at most ``host_cap`` docs per
@@ -160,8 +159,7 @@ def clean_documents(docs: DataFrame, neardup_threshold: float = 0.6,
         ("near_dedup", near_dedup, True),
         ("quality_lang", lambda df: df.filter(quality_ok), True),
         ("repetition", repetition, max_rep_frac),
-        ("perplexity", lambda df: lm.perplexity_filter(
-            df, df if lm_train_docs is None else lm_train_docs, max_bits),
+        ("perplexity", lambda df: lm.perplexity_filter(df, df, max_bits),
          max_bits),
         ("decontaminate", lambda df: decontam.drop_contaminated(
             df, decontam_bench, n=5, min_hits=3), decontam_bench),

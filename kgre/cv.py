@@ -78,10 +78,11 @@ def fold_f1(scored: DataFrame, fold: int) -> DataFrame:
         .otherwise(F.lit(0.0)).alias("f1"))
 
 
-def k_fold_cv(candidates: DataFrame, k: int, key_order, fwd_kb, rev_kb,
-              occur_count: int = 5, epochs: int = 40,
-              sample: int = 100_000) -> DataFrame:
-    """candidates -> per-(fold, relation) F1 DataFrame.
+def k_fold_cv(candidates: DataFrame, k: int, key_order, fwd_kb, rev_kb
+              ) -> DataFrame:
+    """candidates -> per-(fold, relation) F1 DataFrame: per fold, a
+    min-count-5 vocabulary and a 40-epoch logistic fit on the other
+    folds.
 
     ``candidates`` should be persisted by the caller (each fold filters
     it twice)."""
@@ -94,9 +95,9 @@ def k_fold_cv(candidates: DataFrame, k: int, key_order, fwd_kb, rev_kb,
         train_c = chunked.filter(F.col("chunk") != fold).drop("chunk")
         test_c = chunked.filter(F.col("chunk") == fold).drop("chunk")
         # per-fold dictionaries from TRAINING sentences only
-        vocabs = collect_vocab_sets(build_vocab(train_c, occur_count))
+        vocabs = collect_vocab_sets(build_vocab(train_c, 5))
         wt, _ = train_mod.train_model(train_c, vocabs, key_order, fwd_kb,
-                                      rev_kb, epochs=epochs, sample=sample)
+                                      rev_kb, epochs=40)
         scored = score_candidates(test_c, vocabs, key_order, fwd_kb,
                                   rev_kb, weight_table=wt)
         r = fold_f1(scored, fold)

@@ -24,17 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ngram_hash_stream(docs: DataFrame, n: int = 5, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def ngram_hash_stream(docs: DataFrame, n: int = 5) -> DataFrame:
     """The raw (one row per window position, duplicates included)
     word-``n``-gram hash stream: lower-case, whitespace-tokenize (empty
     tokens dropped), hash each n-token window.  Documents with fewer
     than ``n`` tokens contribute no rows.  Shared by decontamination
     (which distincts it) and textstats.repetition_stats (which counts
     the duplicates — they ARE its signal)."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    toks = F.filter(F.split(F.lower(F.col("text")), " "),
                     lambda t: t != "")
-    base = (docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    base = (docs.select("doc_id", toks.alias("toks"))
             .filter(F.size("toks") >= n))
     # explode + slice + hash fuse into one codegen stage: the exploded
     # rows never materialize the token array past the hash projection
@@ -51,33 +50,27 @@ def ngram_hash_stream(docs: DataFrame, n: int = 5, text_col: str = "text",
     )
 
 
-def ngram_hashes(docs: DataFrame, n: int = 5, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def ngram_hashes(docs: DataFrame, n: int = 5) -> DataFrame:
     """Distinct word-``n``-gram hashes per document."""
-    return ngram_hash_stream(docs, n, text_col, id_col).distinct()
+    return ngram_hash_stream(docs, n).distinct()
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                  min_hits: int = 1, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  broadcast_benchmark: bool = True) -> DataFrame:
+                  min_hits: int = 1) -> DataFrame:
     """Per-corpus-document overlap stats against the benchmark n-gram
     set: ``(doc_id, n_grams, n_hits, contamination, contaminated)``.
     ``contaminated`` is ``n_hits >= min_hits``.  Only documents with at
     least ``n`` tokens appear (shorter ones cannot overlap)."""
-    bench_h = (ngram_hashes(benchmark, n, text_col, id_col)
-               .select("h").distinct().withColumn("_hit", F.lit(1)))
-    if broadcast_benchmark:
-        bench_h = F.broadcast(bench_h)
-    doc_h = ngram_hashes(docs, n, text_col, id_col)
+    bench_h = F.broadcast(ngram_hashes(benchmark, n).select("h").distinct()
+                          .withColumn("_hit", F.lit(1)))
+    doc_h = ngram_hashes(docs, n)
     stats = (doc_h.join(bench_h, "h", "left")
              .groupBy("doc_id")
              .agg(F.count("*").alias("n_grams"),
                   F.coalesce(F.sum("_hit"), F.lit(0)).cast("long")
                   .alias("n_hits")))
     return stats.select(
-        F.col("doc_id").alias(id_col),
-        "n_grams", "n_hits",
+        "doc_id", "n_grams", "n_hits",
         F.round(F.col("n_hits") / F.col("n_grams"), 4)
         .alias("contamination"),
         (F.col("n_hits") >= min_hits).alias("contaminated"),
@@ -85,11 +78,9 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
 
 
 def drop_contaminated(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                      min_hits: int = 1, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      min_hits: int = 1) -> DataFrame:
     """The corpus with contaminated documents removed (documents too
     short to form an n-gram are kept — they cannot leak a benchmark)."""
-    flagged = (decontaminate(docs, benchmark, n, min_hits, text_col,
-                             id_col)
-               .filter(F.col("contaminated")).select(id_col))
-    return docs.join(flagged, id_col, "left_anti")
+    flagged = (decontaminate(docs, benchmark, n, min_hits)
+               .filter(F.col("contaminated")).select("doc_id"))
+    return docs.join(flagged, "doc_id", "left_anti")

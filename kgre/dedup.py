@@ -319,17 +319,13 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
-                      collapse_exact: bool = True,
-                      max_bucket: int | None = 10_000,
-                      stats: dict | None = None) -> DataFrame:
+                      max_bucket: int | None = 10_000) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit bands (a pair within
     Hamming<=3 of 64 bits shares at least one of 4 bands), verify Hamming
     with bit_count (JVM-side).  Same hot-bucket guards as
     ``minhash_near_dups``: banding over exact-duplicate representatives,
     ``max_bucket`` width cap on the band self-join."""
-    if collapse_exact:
-        docs = collapse_exact_docs(docs)
-    fp = simhash_fingerprints(docs)
+    fp = simhash_fingerprints(collapse_exact_docs(docs))
     bands = fp.select(
         "doc_id", "simhash",
         F.explode(
@@ -344,7 +340,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
         ).alias("bk"),
     ).select("doc_id", "simhash", "bk.band", "bk.key")
     pairs = band_pairs(bands, [("doc_id", "d1", "d2"), ("simhash", "h1", "h2")],
-                       max_bucket, stats)
+                       max_bucket, None)
     return (
         pairs.withColumn(
             "hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))

@@ -52,9 +52,9 @@ def ontology_closure_df(onto: DataFrame) -> DataFrame:
     return closure
 
 
-def load_id_list(path: str, column: int = 0, sep: str = "\t") -> set:
-    """S5 id-list scan (load_data.py:436-453): one TSV column -> entity-id
-    set.  Dictionary-sized like the reference's lists, so it is read
+def load_id_list(path: str) -> set:
+    """S5 id-list scan (load_data.py:436-453): the first TSV column ->
+    entity-id set.  Dictionary-sized like the reference's lists, so it is read
     driver-side and shipped to the fused candidate stage in the closure
     (pages_to_candidates(allow1=...)) — a map-side semi+anti join."""
     ids = set()
@@ -63,7 +63,7 @@ def load_id_list(path: str, column: int = 0, sep: str = "\t") -> set:
             line = line.rstrip("\n")
             if not line:
                 continue
-            ids.add(line.split(sep)[column])
+            ids.add(line.split("\t")[0])
     return ids
 
 

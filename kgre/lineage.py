@@ -26,10 +26,10 @@ MANIFEST_SCHEMA = ("stage string, bucket int, rows_in long, rows_out long, "
                    "input_fingerprint long, wall_ms long, status string")
 
 
-def with_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    )
+        "bucket",
+        F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"))
 
 
 def completed_buckets(spark: SparkSession, manifest_dir: str, stage: str) -> set:
@@ -51,15 +51,14 @@ def run_stage_with_resume(
     out_dir: str,
     manifest_dir: str,
     n_buckets: int = 8,
-    key: str = "url",
-    max_concurrency: int = 4,
 ) -> DataFrame:
-    """Run ``transform(bucket_df) -> DataFrame`` per pending bucket, write
-    each bucket's output under out_dir/bucket=N, append a manifest row per
-    completed bucket; return the full stage output (all buckets).
+    """Run ``transform(bucket_df) -> DataFrame`` per pending url-hash
+    bucket, write each bucket's output under out_dir/bucket=N, append a
+    manifest row per completed bucket; return the full stage output (all
+    buckets).
 
     Pending buckets are submitted CONCURRENTLY from a thread pool
-    (``max_concurrency`` Spark jobs in flight; the session runs the FAIR
+    (up to 4 Spark jobs in flight; the session runs the FAIR
     scheduler so they share executors instead of FIFO-queueing) — a
     resumed run keeps the cluster saturated instead of draining between
     serial bucket jobs.  Bucket outputs go to distinct directories, so
@@ -70,7 +69,7 @@ def run_stage_with_resume(
 
     done = completed_buckets(spark, manifest_dir, stage)
     pending = [b for b in range(n_buckets) if b not in done]
-    bucketed = with_bucket(inputs, n_buckets, key).persist()
+    bucketed = with_bucket(inputs, n_buckets).persist()
     manifest_lock = threading.Lock()
 
     def run_bucket(b: int) -> None:
@@ -79,7 +78,7 @@ def run_stage_with_resume(
         # ONE aggregation job over the persisted scan yields both the
         # row count and the order-independent content fingerprint
         # (bit_xor never overflows, unlike sum under ANSI mode)
-        stats_row = part.select(F.xxhash64(key).alias("h")).agg(
+        stats_row = part.select(F.xxhash64("url").alias("h")).agg(
             F.count("*").alias("n"),
             F.expr("bit_xor(h)").alias("s")).collect()[0]
         rows_in = stats_row["n"]
@@ -104,7 +103,7 @@ def run_stage_with_resume(
             # touches don't duplicate the upstream computation
             bucketed.count()
         if pending:
-            workers = min(max_concurrency, len(pending))
+            workers = min(4, len(pending))
             with ThreadPoolExecutor(max_workers=workers) as ex:
                 # list() propagates the first worker exception
                 list(ex.map(run_bucket, pending))

@@ -18,16 +18,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def line_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_stream(docs: DataFrame) -> DataFrame:
     """(doc_id, line_no, line) — one row per newline-separated line,
     original order preserved via line_no."""
     return docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n"))
+        F.posexplode(F.split(F.col("text"), "\n"))
         .alias("line_no", "line"))
 
 
-def _reassemble(lines: DataFrame, out_col: str = "text") -> DataFrame:
+def _reassemble(lines: DataFrame) -> DataFrame:
     """(doc_id, line_no, line) -> (doc_id, text): sort the surviving
     lines in-row (array_sort on (line_no, line) structs — no window)
     and rejoin with newlines.  Docs whose every line was removed emit
@@ -38,11 +38,10 @@ def _reassemble(lines: DataFrame, out_col: str = "text") -> DataFrame:
                     F.array_sort(F.collect_list(
                         F.struct("line_no", "line"))),
                     lambda s: s["line"]),
-                "\n").alias(out_col)))
+                "\n").alias("text")))
 
 
-def dedup_lines(docs: DataFrame, min_count: int = 3,
-                text_col: str = "text") -> DataFrame:
+def dedup_lines(docs: DataFrame, min_count: int = 3) -> DataFrame:
     """C4 line dedup: remove EVERY copy of any line whose total
     occurrence count across the corpus is >= ``min_count``; rebuild each
     doc's text from its surviving lines (empty text if none survive).
@@ -57,7 +56,7 @@ def dedup_lines(docs: DataFrame, min_count: int = 3,
     # checkpoint flavor is a session config for clusters with executor
     # churn (session.stage_checkpoint).
     lines = stage_checkpoint(
-        line_stream(docs, text_col).withColumn("h", F.md5(F.col("line"))),
+        line_stream(docs).withColumn("h", F.md5(F.col("line"))),
         eager=False)
     hot = (lines.groupBy("h").agg(F.count("*").alias("c"))
            .filter(F.col("c") >= min_count).select("h"))
@@ -65,4 +64,4 @@ def dedup_lines(docs: DataFrame, min_count: int = 3,
     return (docs.select("doc_id")
             .join(_reassemble(kept), "doc_id", "left")
             .select("doc_id",
-                    F.coalesce(F.col(text_col), F.lit("")).alias(text_col)))
+                    F.coalesce(F.col("text"), F.lit("")).alias("text")))

@@ -23,7 +23,7 @@ Web-scale guards (same family as kgre.dedup's r4 hot-bucket guards):
     aliases (shared prefixes hashing alike) multiplies every mention
     that lands in it; buckets wider than ``max_bucket`` are excluded
     from blocking (recall lost only where blocking was already
-    near-cartesian), counted via the optional ``stats`` dict.
+    near-cartesian), reported as a RuntimeWarning.
 """
 
 from __future__ import annotations
@@ -33,11 +33,15 @@ from pyspark.sql import functions as F
 
 from kgre.dedup import _cap_hot_buckets, minhash_bands
 
+N_HASHES, BANDS = 6, 3      # MinHash signature: 3 bands of 2 minima
 
-def phrase_shingles(df: DataFrame, phrase_col: str, id_col: str,
-                    n: int = 3) -> DataFrame:
-    """(id, shingle): distinct character n-grams of the normalized
-    (lowercased, alphanumeric-only) phrase; phrases shorter than n drop."""
+
+def phrase_shingles(df: DataFrame, phrase_col: str, id_col: str
+                    ) -> DataFrame:
+    """(id, shingle): distinct character 3-grams of the normalized
+    (lowercased, alphanumeric-only) phrase; phrases shorter than 3
+    drop."""
+    n = 3
     norm = F.lower(F.regexp_replace(F.col(phrase_col), "[^a-zA-Z0-9]", ""))
     d = df.select(F.col(id_col).alias("id"), norm.alias("p")).filter(
         F.length("p") >= n
@@ -54,11 +58,8 @@ def phrase_shingles(df: DataFrame, phrase_col: str, id_col: str,
 
 
 def link_mentions(mentions: DataFrame, dictionary: DataFrame,
-                  threshold: float = 0.5, n: int = 3,
-                  n_hashes: int = 6, bands: int = 3,
-                  collapse_phrases: bool = True,
-                  max_bucket: int | None = 10_000,
-                  stats: dict | None = None) -> DataFrame:
+                  threshold: float = 0.5, collapse_phrases: bool = True,
+                  max_bucket: int | None = 10_000) -> DataFrame:
     """mentions(mention_id, phrase) x dictionary(entity_id, alias) ->
     (mention_id, entity_id, jaccard): best dictionary alias per mention,
     minhash-blocked then exact-verified.  See module docstring for the
@@ -68,20 +69,20 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame,
         # id through the inner pipeline), then join the verdict back
         forms = mentions.select(
             F.col("phrase").alias("mention_id"), "phrase").distinct()
-        linked = link_mentions(forms, dictionary, threshold, n, n_hashes,
-                               bands, collapse_phrases=False,
-                               max_bucket=max_bucket, stats=stats)
+        linked = link_mentions(forms, dictionary, threshold,
+                               collapse_phrases=False,
+                               max_bucket=max_bucket)
         return (mentions
                 .join(linked.withColumnRenamed("mention_id", "phrase"),
                       "phrase")
                 .select("mention_id", "entity_id", "jaccard"))
-    m_sh = phrase_shingles(mentions, "phrase", "mention_id", n)
-    d_sh = phrase_shingles(dictionary, "alias", "entity_id", n)
-    m_bands = minhash_bands(m_sh, "id", n_hashes, bands) \
+    m_sh = phrase_shingles(mentions, "phrase", "mention_id")
+    d_sh = phrase_shingles(dictionary, "alias", "entity_id")
+    m_bands = minhash_bands(m_sh, "id", N_HASHES, BANDS) \
         .withColumnRenamed("id", "mid")
-    d_bands = _cap_hot_buckets(minhash_bands(d_sh, "id", n_hashes, bands)
+    d_bands = _cap_hot_buckets(minhash_bands(d_sh, "id", N_HASHES, BANDS)
                                .withColumnRenamed("id", "eid"),
-                               max_bucket, stats)
+                               max_bucket, None)
     cands = (
         m_bands.join(F.broadcast(d_bands), ["band", "key"])
         .select("mid", "eid")

@@ -24,11 +24,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _bigram_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def _bigram_stream(docs: DataFrame) -> DataFrame:
     """(doc_id, prev, w) — one row per adjacent token pair; lower-cased,
     whitespace-tokenized, empty tokens dropped; <2-token docs emit no
     rows.  Explode + element_at fuse into one codegen stage."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    toks = F.filter(F.split(F.lower(F.col("text")), " "),
                     lambda t: t != "")
     base = (docs.select("doc_id", toks.alias("toks"))
             .filter(F.size("toks") >= 2))
@@ -43,14 +43,14 @@ def _bigram_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def train_bigram_lm(train_docs: DataFrame, text_col: str = "text"
+def train_bigram_lm(train_docs: DataFrame
                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Count tables for a Laplace-smoothed bigram LM:
     ``(bigram_counts(prev, w, c), context_counts(prev, cp),
     vocab_size(vs) — one row)``.  All three are aggregation outputs:
     vocabulary-sized at worst, never corpus-sized."""
     from kgre.session import stage_checkpoint
-    pairs = _bigram_stream(train_docs, text_col)
+    pairs = _bigram_stream(train_docs)
     # lazy-checkpoint the bigram table (vocabulary-sized — it IS the
     # model): it is referenced twice downstream (the scoring join and
     # the context rollup) and Spark does not share common subplans, so
@@ -62,7 +62,7 @@ def train_bigram_lm(train_docs: DataFrame, text_col: str = "text"
     # the context table rolls up from the bigram table instead of
     # re-scanning the training corpus (r6: 3 corpus-stream aggs -> 2)
     ctx = bigrams.groupBy("prev").agg(F.sum("c").alias("cp"))
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    toks = F.filter(F.split(F.lower(F.col("text")), " "),
                     lambda t: t != "")
     vocab = (train_docs.select(F.explode(toks).alias("t"))
              .agg(F.countDistinct("t").alias("vs")))
@@ -70,7 +70,7 @@ def train_bigram_lm(train_docs: DataFrame, text_col: str = "text"
 
 
 def bits_per_token(docs: DataFrame, bigrams: DataFrame, ctx: DataFrame,
-                   vocab: DataFrame, text_col: str = "text") -> DataFrame:
+                   vocab: DataFrame) -> DataFrame:
     """Per-doc mean negative log2 bigram probability (``bits``) under
     the trained LM, Laplace add-one over the training vocabulary:
     ``P(w|prev) = (c(prev,w) + 1) / (c(prev) + V)`` — unseen contexts
@@ -78,16 +78,15 @@ def bits_per_token(docs: DataFrame, bigrams: DataFrame, ctx: DataFrame,
     reference distribution; threshold high-bits docs out.
 
     Returns ``(doc_id, n_terms, bits)``; <2-token docs emit no row."""
-    # the count tables ARE the trained LM — dictionary-sized by design
-    # (a CCNet deployment ships the KenLM table to every worker the same
-    # way).  Broadcast them explicitly (r6; guide §3.1): the planner's
-    # post-aggregation estimates otherwise pick sort-merge joins that
-    # shuffle the whole corpus bigram stream twice (by (prev,w), then by
-    # prev).
-    pairs = _bigram_stream(docs, text_col)
+    # the bigram and context tables grow with the training corpus (in
+    # the clean recipe it is the surviving corpus itself), so they carry
+    # no broadcast hint: AQE broadcasts them from their measured size
+    # when they are small and keeps the shuffle join when they are not.
+    # The vocabulary size is one row.
+    pairs = _bigram_stream(docs)
     scored = (pairs
-              .join(F.broadcast(bigrams), ["prev", "w"], "left")
-              .join(F.broadcast(ctx), "prev", "left")
+              .join(bigrams, ["prev", "w"], "left")
+              .join(ctx, "prev", "left")
               .crossJoin(F.broadcast(vocab))
               .select(
                   "doc_id",
@@ -100,12 +99,11 @@ def bits_per_token(docs: DataFrame, bigrams: DataFrame, ctx: DataFrame,
 
 
 def perplexity_filter(docs: DataFrame, train_docs: DataFrame,
-                      max_bits: float, text_col: str = "text"
-                      ) -> DataFrame:
+                      max_bits: float) -> DataFrame:
     """Train on ``train_docs``, drop docs scoring above ``max_bits`` —
     one anti-join, so docs too short to score are kept (length filtering
     is a separate rule)."""
-    bigrams, ctx, vocab = train_bigram_lm(train_docs, text_col)
-    scores = bits_per_token(docs, bigrams, ctx, vocab, text_col)
+    bigrams, ctx, vocab = train_bigram_lm(train_docs)
+    scores = bits_per_token(docs, bigrams, ctx, vocab)
     bad = scores.filter(F.col("bits") > max_bits).select("doc_id")
     return docs.join(bad, "doc_id", "left_anti")

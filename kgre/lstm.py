@@ -33,7 +33,6 @@ trained weights via kgre.lstm_train's string-keyed weight table.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from kgre.score import score_stage, sigmoid
@@ -65,34 +64,25 @@ def lstm_vocabs(type_features, word_features):
     return dep, word
 
 
-def lstm_vocab_features(candidates: DataFrame, max_words: int = 500_000,
-                        w2v_words=None):
+def lstm_vocab_features(candidates: DataFrame, max_words: int = 500_000):
     """Bounded distributed LSTM vocab build (load_data.py:605-616).
 
     The reference's LSTM vocab min-count is 0 (load_data.py:605-610), so
     a naive ``distinct().collect()`` drags every distinct corpus word to
     the driver — unbounded at corpus scale (472k words already at the
     5M-page stress run).  Instead: aggregate counts distributedly
-    (map-side partial agg), optionally left-semi-join against the
-    word2vec vocabulary (the embedding table bounds the usable words
-    anyway; everything else scores as UNKNOWN, tf_lstm.py:42-48), and
-    collect only the top ``max_words`` lowercased words by
-    (count desc, word asc).  Dep types are a closed set (dozens) and
-    collected whole.  Returns (dep_vocab, word_vocab) like
+    (map-side partial agg) and collect only the top ``max_words``
+    lowercased words by (count desc, word asc); every other word scores
+    as UNKNOWN (tf_lstm.py:42-48).  Dep types are a closed set (dozens)
+    and collected whole.  Returns (dep_vocab, word_vocab) like
     ``lstm_vocabs``."""
     from pyspark.sql import functions as F
 
-    spark = candidates.sparkSession
     types = [r["f"] for r in candidates.select(
         F.explode("sdp_types").alias("f")).distinct().collect()]
     words = (candidates.select(F.explode("sdp_words").alias("w"))
              .select(F.lower("w").alias("f"))
              .groupBy("f").agg(F.count("*").alias("cnt")))
-    if w2v_words is not None:
-        w2v_df = spark.createDataFrame(
-            pd.DataFrame({"f": [w.lower() for w in w2v_words]}),
-            "f string").distinct()
-        words = words.join(F.broadcast(w2v_df), "f", "left_semi")
     top = (words.orderBy(F.desc("cnt"), F.asc("f"))
            .limit(int(max_words)).collect())
     return lstm_vocabs(types, [r["f"] for r in top])

@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame
 from kgre.lstm import (DEP_DIM, HIDDEN, PAD_LEN, STATE, WORD_DIM,
                        encode_batch, interleave, lstm_forward_batch)
 from kgre.score import sigmoid
-from kgre.train import (adam_step, collect_instances, tensors_from_df,
-                         tensors_to_df)
+from kgre.train import (SAMPLE, adam_step, collect_instances,
+                         tensors_from_df, tensors_to_df)
 
 SEED = 10
 BATCH = 128
@@ -57,13 +57,12 @@ KEEP_PROB = 0.5
 
 
 def collect_lstm_training_set(candidates: DataFrame, dep_vocab, word_vocab,
-                              key_order, fwd_kb, rev_kb,
-                              sample: int = 100_000):
+                              key_order, fwd_kb, rev_kb):
     """Scorable instances -> (t_ids, w_ids, lens, y) on the driver:
     ``train.collect_instances`` encoded by the scorer's X11
     ``encode_batch``."""
     pdf, y = collect_instances(candidates, ["sdp_types", "sdp_words"],
-                               key_order, fwd_kb, rev_kb, sample)
+                               key_order, fwd_kb, rev_kb, SAMPLE)
     t_ids, w_ids, lens = encode_batch(pdf["sdp_types"], pdf["sdp_words"],
                                       dep_vocab, word_vocab)
     return t_ids, w_ids, lens, y
@@ -72,9 +71,11 @@ def collect_lstm_training_set(candidates: DataFrame, dep_vocab, word_vocab,
 # ------------------------------------------------------------------- weights
 
 
-def truncated_normal(rng, shape, mean: float = -0.1, std: float = 0.1):
-    """``tf.truncated_normal`` semantics: draw N(mean, std), redraw any
-    sample farther than 2 std from the mean (rejection sampling)."""
+def truncated_normal(rng, shape):
+    """``tf.truncated_normal(shape, -0.1, 0.1)`` semantics: draw
+    N(mean, std), redraw any sample farther than 2 std from the mean
+    (rejection sampling)."""
+    mean, std = -0.1, 0.1
     out = rng.normal(mean, std, size=shape)
     bad = np.abs(out - mean) > 2.0 * std
     while bad.any():
@@ -83,9 +84,9 @@ def truncated_normal(rng, shape, mean: float = -0.1, std: float = 0.1):
     return out
 
 
-def init_lstm_params(dep_vocab, word_vocab, key_order, seed: int = SEED):
+def init_lstm_params(dep_vocab, word_vocab, key_order):
     """Reference init scheme (see module docstring)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     word_emb = rng.random_sample((len(word_vocab), WORD_DIM))
     word_emb[word_vocab["PADDING_WORD"]] = 0.0
     dep_emb = rng.random_sample((len(dep_vocab), DEP_DIM))
@@ -107,8 +108,7 @@ _L2_PARAMS = ("kernel", "bias", "w1", "w2")   # tf_lstm.py:235-238
 
 
 def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
-                        word_drop_mask=None, hidden_drop_mask=None,
-                        l2: float = LAMBDA_L2):
+                        word_drop_mask=None, hidden_drop_mask=None):
     """Forward + full BPTT for one batch.  Returns (loss, grads dict).
 
     ``word_drop_mask``: optional [B, PAD_LEN, 1] inverted-dropout mask for
@@ -136,8 +136,8 @@ def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
     logits = hidden @ w2 + b2
     p = sigmoid(logits)
     ce = -(y * np.log(p + 1e-12) + (1 - y) * np.log(1 - p + 1e-12)).mean()
-    l2_loss = l2 * sum(0.5 * float((params[k] ** 2).sum())
-                       for k in _L2_PARAMS)
+    l2_loss = LAMBDA_L2 * sum(0.5 * float((params[k] ** 2).sum())
+                              for k in _L2_PARAMS)
     loss = ce + l2_loss
 
     # ---- backward
@@ -187,19 +187,16 @@ def lstm_loss_and_grads(params, t_ids, w_ids, lens, y,
              "bias": g_cbias, "w1": g_w1, "b1": g_b1, "w2": g_w2,
              "b2": g_b2}
     for k in _L2_PARAMS:
-        grads[k] = grads[k] + l2 * params[k]
+        grads[k] = grads[k] + LAMBDA_L2 * params[k]
     return loss, grads
 
 
 def fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
-             epochs: int = EPOCHS, batch: int = BATCH, lr: float = LR,
-             seed: int = SEED, l2: float = LAMBDA_L2,
-             keep_prob: float = KEEP_PROB, params=None):
+             epochs: int = EPOCHS):
     """Adam training loop (tf_lstm.py:252-368 shape).  Returns
     (params, losses); ``params`` drops into score_candidates_lstm."""
-    rng = np.random.RandomState(seed)
-    if params is None:
-        params = init_lstm_params(dep_vocab, word_vocab, key_order, seed)
+    rng = np.random.RandomState(SEED)
+    params = init_lstm_params(dep_vocab, word_vocab, key_order)
     plist = [params[k] for k in _PARAM_ORDER]
     state = {"m": [np.zeros_like(p) for p in plist],
              "v": [np.zeros_like(p) for p in plist]}
@@ -210,33 +207,29 @@ def fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
     for _ in range(epochs):
         rng.shuffle(order)
         ep = 0.0
-        for s in range(0, n, batch):
-            sel = order[s:s + batch]
-            mask = hmask = None
-            if keep_prob < 1.0:
-                mask = ((rng.random_sample((len(sel), PAD_LEN, 1))
-                         < keep_prob) / keep_prob)
-                hmask = ((rng.random_sample((len(sel), HIDDEN))
-                          < keep_prob) / keep_prob)
+        for s in range(0, n, BATCH):
+            sel = order[s:s + BATCH]
+            mask = ((rng.random_sample((len(sel), PAD_LEN, 1))
+                     < KEEP_PROB) / KEEP_PROB)
+            hmask = ((rng.random_sample((len(sel), HIDDEN))
+                      < KEEP_PROB) / KEEP_PROB)
             loss, grads = lstm_loss_and_grads(
                 params, t_ids[sel], w_ids[sel], lens[sel], y[sel],
-                word_drop_mask=mask, hidden_drop_mask=hmask, l2=l2)
+                word_drop_mask=mask, hidden_drop_mask=hmask)
             ep += loss * len(sel)
             t_step += 1
-            adam_step(state, [grads[k] for k in _PARAM_ORDER], plist, lr,
+            adam_step(state, [grads[k] for k in _PARAM_ORDER], plist, LR,
                       t_step)
         losses.append(ep / max(n, 1))
     return params, losses
 
 
 def train_lstm_model(candidates: DataFrame, dep_vocab, word_vocab,
-                     key_order, fwd_kb, rev_kb, epochs: int = EPOCHS,
-                     sample: int = 100_000):
+                     key_order, fwd_kb, rev_kb, epochs: int = EPOCHS):
     """candidates -> trained LSTM params + losses (driver-side fit over a
     hash-sampled collected set, like train.train_model)."""
     t_ids, w_ids, lens, y = collect_lstm_training_set(
-        candidates, dep_vocab, word_vocab, key_order, fwd_kb, rev_kb,
-        sample)
+        candidates, dep_vocab, word_vocab, key_order, fwd_kb, rev_kb)
     return fit_lstm(t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
                     epochs=epochs)
 

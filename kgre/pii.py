@@ -54,11 +54,10 @@ def pii_counts(col) -> list[Column]:
     ]
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Per-document PII counts + the scrubbed text (map-only)."""
     return docs.select(
-        id_col,
-        *pii_counts(text_col),
-        scrubbed_text(text_col).alias("clean_text"),
+        "doc_id",
+        *pii_counts("text"),
+        scrubbed_text("text").alias("clean_text"),
     )

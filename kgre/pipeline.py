@@ -35,11 +35,11 @@ from kgre.util import ensure_min_partitions
 from kgre.vocab import build_vocab, collect_vocab_sets
 
 
-def _lang_pages(pages: DataFrame, lang: str, min_partitions) -> DataFrame:
-    # lang filter first => predicate pushdown to the scan; only url+html
-    # survive into the Python stage (column pruning keeps the blob out of
-    # every later exchange)
-    slim = pages.filter(F.col("lang") == lang).select("url", "html")
+def _lang_pages(pages: DataFrame, min_partitions) -> DataFrame:
+    # English filter first => predicate pushdown to the scan; only
+    # url+html survive into the Python stage (column pruning keeps the
+    # blob out of every later exchange)
+    slim = pages.filter(F.col("lang") == "en").select("url", "html")
     return ensure_min_partitions(slim, cols=("url",), target=min_partitions)
 
 
@@ -48,10 +48,10 @@ def _page_sentences(url, html):
 
 
 def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
-                        stop_ids, lang: str = "en",
-                        min_partitions: int | None = None,
+                        stop_ids, min_partitions: int | None = None,
                         allow1=None, allow2=None) -> DataFrame:
-    """Fused extract+parse+candidate stage (1 Python crossing).
+    """Fused extract+parse+candidate stage (1 Python crossing) over the
+    English pages.
 
     ``min_partitions``: the Python stage is the expensive one, so its
     parallelism must never be capped by the input file layout (a small
@@ -65,22 +65,20 @@ def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
     broadcast-sized sets shipped in the closure, a map-side semi+anti join.
     """
     emit = candidate_emitter(entity_a, entity_b, stop_ids, allow1, allow2)
-    return sentence_stage(_lang_pages(pages, lang, min_partitions),
+    return sentence_stage(_lang_pages(pages, min_partitions),
                           _page_sentences, emit)
 
 
 def documents_to_candidates(docs: DataFrame, entity_a: str, entity_b: str,
-                            stop_ids, lang: str = "en",
-                            min_partitions: int | None = None,
-                            allow1=None, allow2=None,
-                            with_sentence: bool = True) -> DataFrame:
-    """Fused documents -> candidates stage: ONE Python crossing for the
-    synthetic-corpus path (guide §4: derive page text + sentence parse +
-    candidate features in the same task, so neither the html blob nor the
-    derived text ever crosses the Arrow boundary).
+                            stop_ids, with_sentence: bool = True
+                            ) -> DataFrame:
+    """Fused English documents -> candidates stage: ONE Python crossing
+    for the synthetic-corpus path (guide §4: derive page text + sentence
+    parse + candidate features in the same task, so neither the html blob
+    nor the derived text ever crosses the Arrow boundary).
 
     Equivalent by construction to
-    ``pages_to_candidates(pages_from_documents(docs, lang), ...)`` — the
+    ``pages_to_candidates(pages_from_documents(docs, "en"), ...)`` — the
     html render + re-extract between those stages is the identity on the
     derived text (``extract_text_from_html(HTML_TEMPLATE.format(text=t))
     == t`` unless ``t`` contains the article close tag, in which case
@@ -105,13 +103,12 @@ def documents_to_candidates(docs: DataFrame, entity_a: str, entity_b: str,
             text = extract_text_from_html(page["html"])
         return text_sentences("https://docs.example/d%d" % doc_id, text)
 
-    if lang is not None:
-        docs = docs.filter(F.col("lang") == lang)
-    slim = ensure_min_partitions(docs.select("doc_id", "text"),
-                                 cols=("doc_id",), target=min_partitions)
+    slim = ensure_min_partitions(
+        docs.filter(F.col("lang") == "en").select("doc_id", "text"),
+        cols=("doc_id",))
     out = () if with_sentence else (SLIM_CANDIDATES_SCHEMA, SLIM_COLS)
     return sentence_stage(slim, sentences, candidate_emitter(
-        entity_a, entity_b, stop_ids, allow1, allow2), *out)
+        entity_a, entity_b, stop_ids), *out)
 
 
 MENTIONS_SCHEMA = "url string, side string, entity_key string"
@@ -126,15 +123,15 @@ def _mentions(slim: DataFrame, sentences, entity_a: str,
                           ("url", "side", "entity_key"))
 
 
-def pages_to_mentions(pages: DataFrame, entity_a: str, entity_b: str,
-                      lang: str = "en",
-                      min_partitions: int | None = None) -> DataFrame:
-    """Fused extract+parse+mention stage for EVAL_DATA (S15/X5,
+def pages_to_mentions(pages: DataFrame, entity_a: str, entity_b: str
+                      ) -> DataFrame:
+    """Fused extract+parse+mention stage over the English pages for
+    EVAL_DATA (S15/X5,
     load_data.py:828-871): one row per counted mention occurrence;
     ``entity_a``/``entity_b`` are EXACT NER keys here (the reference's
     dict-membership test), unlike the substring match of pair generation."""
-    return _mentions(_lang_pages(pages, lang, min_partitions),
-                     _page_sentences, entity_a, entity_b)
+    return _mentions(_lang_pages(pages, None), _page_sentences, entity_a,
+                     entity_b)
 
 
 def sentences_to_mentions(sentences: DataFrame, entity_a: str,
@@ -165,17 +162,15 @@ class KgPipeline:
         return fwd, rev, sorted(fwd)
 
     def run(self, pages: DataFrame, kb_rows_list, onto_rows, stop_ids,
-            checkpoint_dir: str | None = None, allow1=None, allow2=None,
-            with_sentence: bool = False, emit_threshold: float | None = None):
+            emit_threshold: float | None = None):
         """pages -> (scored triples DF, vocab DF, key_order).
 
         ``emit_threshold=0.5`` pushes the emitted-triple gate into the
         scoring UDF (TEST mode); leave None to keep every row (predict)."""
         cands = pages_to_candidates(pages, self.entity_a, self.entity_b,
-                                    stop_ids, allow1=allow1, allow2=allow2)
-        return self.run_from_candidates(
-            cands, kb_rows_list, onto_rows, checkpoint_dir=checkpoint_dir,
-            with_sentence=with_sentence, emit_threshold=emit_threshold)
+                                    stop_ids)
+        return self.run_from_candidates(cands, kb_rows_list, onto_rows,
+                                        emit_threshold=emit_threshold)
 
     def run_from_candidates(self, cands: DataFrame, kb_rows_list, onto_rows,
                             checkpoint_dir: str | None = None,

@@ -24,23 +24,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _token_stream(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
+def _token_stream(docs: DataFrame) -> DataFrame:
+    toks = F.filter(F.split(F.lower(F.col("text")), " "),
                     lambda t: t != "")
     return docs.select("doc_id", F.explode(toks).alias("t"))
 
 
-def train_log_odds(ref_docs: DataFrame, bg_docs: DataFrame,
-                   alpha: float = 1.0, text_col: str = "text"
+def train_log_odds(ref_docs: DataFrame, bg_docs: DataFrame
                    ) -> tuple[DataFrame, DataFrame]:
     """Closed-form classifier "training": per-token smoothed log-odds
     ``w(t) = ln((c_ref+α)/(N_ref+αV)) − ln((c_bg+α)/(N_bg+αV))`` over
-    the union vocabulary V.  Returns ``(weights(t, w), unseen(w_unseen)
-    — one row)``; tokens absent from both corpora at score time get the
-    constant ``w_unseen = ln((N_bg+αV)/(N_ref+αV))``."""
-    rc = _token_stream(ref_docs, text_col).groupBy("t") \
+    the union vocabulary V, with α = 1.  Returns ``(weights(t, w),
+    unseen(w_unseen) — one row)``; tokens absent from both corpora at
+    score time get the constant ``w_unseen = ln((N_bg+αV)/(N_ref+αV))``."""
+    rc = _token_stream(ref_docs).groupBy("t") \
         .agg(F.count("*").alias("cr"))
-    bc = _token_stream(bg_docs, text_col).groupBy("t") \
+    bc = _token_stream(bg_docs).groupBy("t") \
         .agg(F.count("*").alias("cb"))
     from kgre.session import stage_checkpoint
     joined = (rc.join(bc, "t", "full_outer")
@@ -58,7 +57,7 @@ def train_log_odds(ref_docs: DataFrame, bg_docs: DataFrame,
     joined = stage_checkpoint(joined, eager=False)
     scal = joined.agg(F.sum("cr").alias("nr"), F.sum("cb").alias("nb"),
                       F.count("*").alias("v"))
-    a = F.lit(float(alpha))
+    a = F.lit(1.0)
     weights = (joined.crossJoin(F.broadcast(scal))
                .select("t",
                        (F.log((F.col("cr") + a)
@@ -73,8 +72,7 @@ def train_log_odds(ref_docs: DataFrame, bg_docs: DataFrame,
 
 
 def log_odds_score(docs: DataFrame, weights: DataFrame,
-                   unseen: DataFrame, text_col: str = "text"
-                   ) -> DataFrame:
+                   unseen: DataFrame) -> DataFrame:
     """Per-doc mean token log-odds under the trained table: positive =
     reference-like, negative = background-like.  Returns ``(doc_id,
     n_tokens, quality_lr)``; zero-token docs emit no row."""
@@ -86,7 +84,7 @@ def log_odds_score(docs: DataFrame, weights: DataFrame,
     # this stage.  For an unbounded raw-token vocabulary, prune the
     # table by min count before scoring rather than shuffling the
     # stream.
-    scored = (_token_stream(docs, text_col)
+    scored = (_token_stream(docs)
               .join(F.broadcast(weights), "t", "left")
               .crossJoin(F.broadcast(unseen))
               .select("doc_id",

@@ -30,33 +30,17 @@ def hash_frac(id_col, salt: str = "") -> Column:
         .cast("long") % _BUCKETS)
 
 
-def split_by_hash(df: DataFrame, id_col: str = "doc_id",
-                  weights: dict[str, float] | None = None,
-                  salt: str = "") -> DataFrame:
-    """Add a ``split`` column assigning each row to a named split with
-    the given weights (default 90/5/5 train/val/test).  Assignment is
-    per-row deterministic: moving a row between partitions or growing
-    the cluster never changes its split."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-    if abs(sum(weights.values()) - 1.0) > 1e-9:
-        raise ValueError("split weights must sum to 1")
-    frac = hash_frac(id_col, salt)
-    expr = None
-    acc = 0.0
-    names = list(weights)
-    for name in names[:-1]:
-        acc += weights[name]
-        cond = frac < int(round(acc * _BUCKETS))
-        expr = F.when(cond, name) if expr is None else \
-            expr.when(cond, name)
-    expr = (F.lit(names[-1]) if expr is None
-            else expr.otherwise(names[-1]))
-    return df.withColumn("split", expr)
+def split_by_hash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Add a ``split`` column assigning each row to train/val/test with
+    weights 90/5/5.  Assignment is per-row deterministic: moving a row
+    between partitions or growing the cluster never changes its
+    split."""
+    frac = hash_frac(id_col)
+    return df.withColumn("split", F.when(frac < 9000, "train")
+                         .when(frac < 9500, "val").otherwise("test"))
 
 
-def token_budget_sample(df: DataFrame, budgets, source_col: str = "source",
-                        id_col: str = "doc_id", text_col: str = "text",
-                        salt: str = "") -> DataFrame:
+def token_budget_sample(df: DataFrame, budgets) -> DataFrame:
     """Data mixing: greedily take docs per source — in deterministic
     (hash-bucket, id) order — while the running whitespace-token total
     stays within the source's budget (the per-source token quota step of
@@ -86,48 +70,48 @@ def token_budget_sample(df: DataFrame, budgets, source_col: str = "source",
     """
     from pyspark.sql import Window
 
-    toks = F.size(F.split(F.col(text_col), " "))
-    b = hash_frac(id_col, salt)
+    toks = F.size(F.split(F.col("text"), " "))
+    b = hash_frac("doc_id")
     base = df.withColumn("_nt", toks).withColumn("_bk", b)
 
     if isinstance(budgets, dict):
         spark = df.sparkSession
         bdf = spark.createDataFrame(
-            pd.DataFrame({source_col: list(budgets),
+            pd.DataFrame({"source": list(budgets),
                           "_budget": np.array([int(t) for t in
                                                budgets.values()],
                                               dtype=np.int64)}),
-            f"{source_col} string, _budget long")
-        base = base.join(F.broadcast(bdf), source_col, "left")
+            "source string, _budget long")
+        base = base.join(F.broadcast(bdf), "source", "left")
     else:
         base = base.withColumn("_budget", F.lit(int(budgets)))
     unlimited = base.filter(F.col("_budget").isNull()) \
                     .drop("_nt", "_bk", "_budget")
     base = base.filter(F.col("_budget").isNotNull())
 
-    per_bucket = (base.groupBy(source_col, "_bk", "_budget")
+    per_bucket = (base.groupBy("source", "_bk", "_budget")
                   .agg(F.sum("_nt").alias("_bt")))
-    wb = (Window.partitionBy(source_col).orderBy("_bk")
+    wb = (Window.partitionBy("source").orderBy("_bk")
           .rowsBetween(Window.unboundedPreceding, 0))
     status = per_bucket.select(
-        source_col, "_bk",
+        "source", "_bk",
         (F.sum("_bt").over(wb) - F.col("_bt")).alias("_prev"),
         F.sum("_bt").over(wb).alias("_incl"), "_budget")
     # the single crossing bucket per source (may not exist: everything
     # fits).  _prev >= budget means the crossing bucket itself is
     # entirely dropped and the window stage sees nothing for it.
     summary = (status.filter(F.col("_incl") > F.col("_budget"))
-               .groupBy(source_col)
+               .groupBy("source")
                .agg(F.min("_bk").alias("_bstar"),
                     F.min_by("_prev", "_bk").alias("_sprev")))
 
-    tagged = base.join(F.broadcast(summary), source_col, "left")
+    tagged = base.join(F.broadcast(summary), "source", "left")
     kept_full = (tagged.filter(F.col("_bstar").isNull()
                                | (F.col("_bk") < F.col("_bstar")))
                  .drop("_nt", "_bk", "_budget", "_bstar", "_sprev"))
     brows = tagged.filter((F.col("_bk") == F.col("_bstar"))
                           & (F.col("_sprev") < F.col("_budget")))
-    wd = (Window.partitionBy(source_col).orderBy(id_col)
+    wd = (Window.partitionBy("source").orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, 0))
     kept_boundary = (brows
                      .withColumn("_cum", F.col("_sprev")

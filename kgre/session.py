@@ -22,7 +22,7 @@ def stage_checkpoint(df, eager: bool = True):
     GC — right for single-host local[*] where there is no executor loss),
     and with ``spark.kgre.reliableCheckpoint=true`` the HDFS-backed
     ``.checkpoint()`` (survives executor churn on a real cluster; needs
-    ``sc.setCheckpointDir`` or ``spark.kgre.checkpointDir``).
+    ``sc.setCheckpointDir``, which CLI ``--reliable-checkpoint`` calls).
 
     Both flavors produce identical data — only the storage/recovery
     story differs (tests/test_ops.py pins the equivalence)."""
@@ -30,26 +30,23 @@ def stage_checkpoint(df, eager: bool = True):
     flag = spark.conf.get("spark.kgre.reliableCheckpoint", "false")
     if flag.lower() != "true":
         return df.localCheckpoint(eager=eager)
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        cpd = spark.conf.get("spark.kgre.checkpointDir", None)
-        if not cpd:
-            raise ValueError(
-                "spark.kgre.reliableCheckpoint=true needs a checkpoint "
-                "dir: call sc.setCheckpointDir(...) or set "
-                "spark.kgre.checkpointDir")
-        sc.setCheckpointDir(cpd)
+    if spark.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "spark.kgre.reliableCheckpoint=true needs a checkpoint dir: "
+            "call sc.setCheckpointDir(...)")
     return df.checkpoint(eager=eager)
 
 
 def get_spark(app: str = "kgre", master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    master = master or os.environ.get("KGRE_MASTER", "local[*]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("KGRE_SHUFFLE_PARTITIONS", "32"))
+              shuffle_partitions: int = 32) -> SparkSession:
+    """The session, with ``master`` when one is given; without one the
+    master comes from spark-submit's ``--master`` (``local[*]`` when
+    nothing sets it), which a builder ``.master`` would override."""
+    builder = SparkSession.builder.appName(app)
+    if master:
+        builder = builder.master(master)
     return (
-        SparkSession.builder.appName(app)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

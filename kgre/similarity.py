@@ -181,17 +181,17 @@ def cosine_neardup_bucketed(embs: DataFrame, threshold: float = 0.9,
     )
 
 
-def kmeans_codebook(X: np.ndarray, n_cells: int,
-                    n_iters: int = 5) -> np.ndarray:
-    """Spherical k-means on row vectors: normalize, assign to max-cosine
-    centroid (ties -> lowest cell), recompute means, renormalize.
+def kmeans_codebook(X: np.ndarray, n_cells: int) -> np.ndarray:
+    """Spherical k-means on row vectors, 5 Lloyd rounds: normalize,
+    assign to max-cosine centroid (ties -> lowest cell), recompute
+    means, renormalize.
     Deterministic: init = the first ``n_cells`` sample rows; an emptied
     cell keeps its previous centroid.  Returns a normalized
     [n_cells, dim] float64 matrix."""
     X = np.asarray(X, dtype=np.float64)
     X = X / np.linalg.norm(X, axis=1, keepdims=True)
     cent = X[:n_cells].copy()
-    for _ in range(n_iters):
+    for _ in range(5):
         assign = np.argmax(X @ cent.T, axis=1)
         for c in range(n_cells):
             members = X[assign == c]
@@ -201,18 +201,18 @@ def kmeans_codebook(X: np.ndarray, n_cells: int,
     return cent
 
 
-def grow_cutoff(total: int, sample: int, count_at, bits: int = 24,
-                oversample: float = 1.3, max_iters: int = 4) -> int:
+def grow_cutoff(total: int, sample: int, count_at, bits: int = 24) -> int:
     """Shared cutoff-growth protocol (the ``kgre.train.hash_range_sample``
-    shape): size a ``bits``-bit hash cutoff from a cheap count, double it
-    until >= ``sample`` rows survive.  ``count_at(cutoff) -> int`` is the
+    shape): size a ``bits``-bit hash cutoff for 1.3x ``sample`` rows from
+    a cheap count, double it (at most 4 times) until >= ``sample`` rows
+    survive.  ``count_at(cutoff) -> int`` is the
     engine hook — both the Spark sampler and the DuckDB oracle twin call
     this same function, so the selected subset is identical by
     construction."""
     if total <= sample:
         return 1 << bits
-    cutoff = int((1 << bits) * sample * oversample / total) + 1
-    for _ in range(max_iters):
+    cutoff = int((1 << bits) * sample * 1.3 / total) + 1
+    for _ in range(4):
         if cutoff >= (1 << bits) or count_at(cutoff) >= sample:
             break
         cutoff *= 2
@@ -242,18 +242,17 @@ def hash_range_sample_embs(embs: DataFrame, sample: int) -> DataFrame:
     return sub.orderBy("_h", "vec_id").limit(int(sample)).drop("_h")
 
 
-def train_ivf_codebook(embs: DataFrame, n_cells: int = 16,
-                       n_iters: int = 5, sample: int = 4096) -> np.ndarray:
+def train_ivf_codebook(embs: DataFrame, n_cells: int = 16) -> np.ndarray:
     """FAISS-style IVF training: Lloyd iterations DRIVER-SIDE on a
     bounded deterministic hash-range sample (``hash_range_sample_embs``
     — the corpus only flows through a map-side filter, never a full
     sort), broadcast back through the same ``ivf_cells``/``ivf_topk``
     interface as the training-free quantizer.  The collect is bounded by
-    ``sample`` regardless of corpus size."""
-    rows = hash_range_sample_embs(embs, int(sample)).collect()
+    4096 rows regardless of corpus size."""
+    rows = hash_range_sample_embs(embs, 4096).collect()
     X = np.stack([np.asarray(r["embedding"], dtype=np.float64)
                   for r in rows])
-    return kmeans_codebook(X, n_cells, n_iters)
+    return kmeans_codebook(X, n_cells)
 
 
 def _first_cells(embs: DataFrame, n_cells: int) -> np.ndarray:

@@ -71,30 +71,27 @@ def stream_triples(
     onto_rows,
     stop_ids,
     vocabs: dict[str, set],
-    entity_a: str = "GENE",
-    entity_b: str = "ONTOLOGY",
-    available_now: bool = True,
 ):
-    """Start the incremental pages->triples job; returns the StreamingQuery.
+    """Start the incremental GENE/ONTOLOGY pages->triples job; returns
+    the StreamingQuery.  It drains everything currently in the directory,
+    then stops (the ``availableNow`` trigger: a rerun picks up the pages
+    added since, exactly once).
 
     ``vocabs`` is the frozen vocabulary of a prior batch ``build`` run
     (mode_build in kgre/cli.py) — scoring state is broadcast once, never
     mutated by the stream."""
-    fwd, rev, key_order = KgPipeline(spark, entity_a, entity_b).prepare_kb(
-        kb_rows_list, onto_rows)
+    fwd, rev, key_order = KgPipeline(spark).prepare_kb(kb_rows_list,
+                                                       onto_rows)
 
     stream = read_page_stream(spark, pages_dir)
-    cands = pages_to_candidates(stream, entity_a, entity_b, stop_ids,
+    cands = pages_to_candidates(stream, "GENE", "ONTOLOGY", stop_ids,
                                 min_partitions=0)
     process_batch = batch_processor(out_dir, vocabs, key_order, fwd, rev)
-    writer = (cands.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        # drain everything currently in the directory, then stop — the
-        # batch-equivalent trigger used by tests and backfills
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (cands.writeStream
+            .foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
 
 
 def dedup_page_stream(pages_stream: DataFrame) -> DataFrame:
@@ -145,17 +142,15 @@ def dedup_page_stream(pages_stream: DataFrame) -> DataFrame:
         GroupStateTimeout.NoTimeout)
 
 
-def windowed_page_counts(pages_stream: DataFrame,
-                         window: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
+def windowed_page_counts(pages_stream: DataFrame) -> DataFrame:
     """Watermarked tumbling-window ingest statistics: pages per
-    (window, lang), tolerating ``watermark`` of event-time lateness on
+    (1-hour window, lang), tolerating 2 hours of event-time lateness on
     ``warc_ts`` before a window finalizes — the standard late-data
     pattern for continuous WARC drops (no reference counterpart;
     SURVEY.md §2.12 extension)."""
     return (pages_stream
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window).alias("win"), "lang")
+            .withWatermark("warc_ts", "2 hours")
+            .groupBy(F.window("warc_ts", "1 hour").alias("win"), "lang")
             .agg(F.count("*").alias("n_pages"))
             .select(F.col("win.start").alias("win_start"), "lang",
                     "n_pages"))

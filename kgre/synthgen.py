@@ -96,8 +96,8 @@ def gen_page(i: int, seed: str = "v1") -> dict:
     }
 
 
-def gen_pages_rows(n_pages: int, seed: str = "v1") -> list[dict]:
-    return [gen_page(i, seed) for i in range(n_pages)]
+def gen_pages_rows(n_pages: int) -> list[dict]:
+    return [gen_page(i) for i in range(n_pages)]
 
 
 # ------------------------------------------------------------------- Spark
@@ -107,16 +107,15 @@ PAGES_SCHEMA = (
 )
 
 
-def pages_df(spark, n_pages: int, seed: str = "v1", partitions: int | None = None):
+def pages_df(spark, n_pages: int):
     """Distributed page generation: executors each build their id-range."""
     import pandas as pd
 
-    if partitions is None:
-        partitions = max(2, min(64, n_pages // 256 or 2))
+    partitions = max(2, min(64, n_pages // 256 or 2))
 
     def gen(batches):
         for pdf in batches:
-            rows = [gen_page(int(i), seed) for i in pdf["id"]]
+            rows = [gen_page(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )

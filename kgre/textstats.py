@@ -31,8 +31,8 @@ def normalized_text(col: str = "text"):
     return F.translate(F.lower(F.col(col)), PUNCT, "")
 
 
-def tokens_col(col: str = "text"):
-    return F.split(F.col(col), " ")
+def tokens_col():
+    return F.split(F.col("text"), " ")
 
 
 def token_count(docs: DataFrame) -> DataFrame:
@@ -42,28 +42,27 @@ def token_count(docs: DataFrame) -> DataFrame:
     )
 
 
-def stopword_density(text_col: str = "text"):
+def stopword_density():
     """Share of the whitespace tokens that are EN_STOPWORDS (unrounded) —
     the English signal of both the quality score and the language ID."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
     return hits / F.size(toks)
 
 
-def vowel_ratio(text_col: str = "text"):
+def vowel_ratio():
     """Share of the characters that are lowercase vowels (unrounded)."""
-    n_chars = F.length(text_col)
+    n_chars = F.length("text")
     vowels = n_chars - F.length(
-        F.regexp_replace(F.col(text_col), "[aeiou]", ""))
+        F.regexp_replace(F.col("text"), "[aeiou]", ""))
     return vowels / n_chars
 
 
-def quality_col(text_col: str = "text"):
+def quality_col():
     """The composite stopword/vowel quality score as a bare COLUMN
     expression, so it can fuse into any projection (a streaming select,
     the clean composition) without a join."""
-    return F.round(stopword_density(text_col) * 0.5
-                   + vowel_ratio(text_col) * 0.5, 4)
+    return F.round(stopword_density() * 0.5 + vowel_ratio() * 0.5, 4)
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -79,13 +78,18 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_id(docs: DataFrame, threshold: float = 0.08) -> DataFrame:
-    """N-gram-free language-ID heuristic: English stopword density."""
+LANG_EN_THRESHOLD = 0.08
+
+
+def lang_id(docs: DataFrame) -> DataFrame:
+    """N-gram-free language-ID heuristic: English stopword density of at
+    least ``LANG_EN_THRESHOLD``."""
     score = stopword_density()
     return docs.select(
         "doc_id",
         F.round(score, 4).alias("en_score"),
-        F.when(score >= threshold, F.lit("en")).otherwise(F.lit("other"))
+        F.when(score >= LANG_EN_THRESHOLD, F.lit("en"))
+        .otherwise(F.lit("other"))
         .alias("lang_pred"),
     )
 

@@ -46,6 +46,8 @@ SEED = 10          # tf_feed_forward.py:7-8
 BATCH = 128        # tf_feed_forward.py:97
 EPOCHS = 250       # tf_feed_forward.py:96
 LR = 0.001         # Adam default, tf.train.AdamOptimizer
+KEEP_PROB = 0.5    # hidden-layer dropout at train, tf_feed_forward.py:194
+SAMPLE = 100_000   # training instances collected to the driver
 
 
 _HASH_BITS = 20
@@ -93,14 +95,13 @@ def collect_instances(candidates: DataFrame, cols, key_order: list[str],
 
 
 def collect_training_set(candidates: DataFrame, vocabs: dict[str, set],
-                         key_order: list[str], fwd_kb, rev_kb,
-                         sample: int = 100_000):
+                         key_order: list[str], fwd_kb, rev_kb):
     """candidates -> (feature index, per-instance feature-hit lists,
     distant-label matrix): ``collect_instances`` encoded by the scorer's
     FF encoder ``score.ff_hits``."""
     idx, _ = feature_index(vocabs)
     pdf, y = collect_instances(candidates, FF_COLS, key_order, fwd_kb,
-                               rev_kb, sample)
+                               rev_kb, SAMPLE)
     rows, feats = ff_hits(pdf, idx)
     bounds = np.searchsorted(rows, np.arange(len(pdf) + 1))
     return idx, [feats[a:b].tolist() for a, b in zip(bounds, bounds[1:])], y
@@ -117,17 +118,15 @@ def adam_step(state, grads, params, lr, t):
         wt -= lr * (m / (1 - b1**t)) / (np.sqrt(v / (1 - b2**t)) + eps)
 
 
-def fit_ff(hits, y, n_feat: int, hidden_array, epochs: int = EPOCHS,
-           batch: int = BATCH, lr: float = LR, seed: int = SEED,
-           keep_prob: float = 0.5):
+def fit_ff(hits, y, n_feat: int, hidden_array, epochs: int = EPOCHS):
     """General feed-forward training (tf_feed_forward.py:66-288):
-    ``hidden_array`` ReLU layers with inverted dropout (keep_prob 0.5 at
-    train, :194) + linear output, sigmoid cross-entropy reduce_mean, Adam
+    ``hidden_array`` ReLU layers with inverted dropout (``KEEP_PROB``) +
+    linear output, sigmoid cross-entropy reduce_mean, Adam
     defaults, all weights/biases init N(0, 0.1) (:150-158), no L2 (the FF
     graph has none — only the LSTM adds it).  Returns
     ``(layers, losses)`` where layers = [(W1,b1),...,(Wout,bout)]
     consumable by score_candidates via (idx, layers)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     n, n_rel = y.shape
     dims = [n_feat] + list(hidden_array) + [n_rel]
     layers = [(rng.normal(0.0, 0.1, size=(dims[i], dims[i + 1])),
@@ -142,8 +141,8 @@ def fit_ff(hits, y, n_feat: int, hidden_array, epochs: int = EPOCHS,
     for _ in range(epochs):
         rng.shuffle(order)
         ep_loss = 0.0
-        for s in range(0, n, batch):
-            sel = order[s:s + batch]
+        for s in range(0, n, BATCH):
+            sel = order[s:s + BATCH]
             bsz = len(sel)
             # first layer from sparse hit lists (multi-hot x W1)
             w1, b1 = layers[0]
@@ -156,7 +155,7 @@ def fit_ff(hits, y, n_feat: int, hidden_array, epochs: int = EPOCHS,
             h = z
             for w, b in layers[1:]:
                 a = np.maximum(h, 0.0)
-                mask = (rng.random_sample(a.shape) < keep_prob) / keep_prob
+                mask = (rng.random_sample(a.shape) < KEEP_PROB) / KEEP_PROB
                 a = a * mask
                 drops.append((a, mask))
                 h = a @ w + b
@@ -179,15 +178,14 @@ def fit_ff(hits, y, n_feat: int, hidden_array, epochs: int = EPOCHS,
                     gw1[hits[i]] += d[r]
             grads[0] = (gw1, d.sum(axis=0))
             t += 1
-            adam_step(state, [g for wb in grads for g in wb], params, lr, t)
+            adam_step(state, [g for wb in grads for g in wb], params, LR, t)
         losses.append(ep_loss / max(n, 1))
     return layers, losses
 
 
 def train_model(candidates: DataFrame, vocabs: dict[str, set],
                 key_order: list[str], fwd_kb, rev_kb,
-                epochs: int = EPOCHS, sample: int = 100_000,
-                hidden_array=()):
+                epochs: int = EPOCHS, hidden_array=()):
     """-> ((idx, layers) for score_candidates(weight_table=...), losses).
 
     ``hidden_array=()`` is the reference's shipped config — one output
@@ -195,7 +193,7 @@ def train_model(candidates: DataFrame, vocabs: dict[str, set],
     [256, 64]) adds ReLU+dropout hidden layers (tf_feed_forward.py:32-63)."""
     _, n_feat = feature_index(vocabs)
     idx, hits, y = collect_training_set(candidates, vocabs, key_order,
-                                        fwd_kb, rev_kb, sample)
+                                        fwd_kb, rev_kb)
     layers, losses = fit_ff(hits, y, n_feat, hidden_array, epochs=epochs)
     return (idx, layers), losses
 

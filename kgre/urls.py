@@ -85,23 +85,20 @@ def dedup_by_canonical(df: DataFrame, id_col: str = "doc_id",
     return canon.join(keep, id_col)
 
 
-def host_stats(df: DataFrame, host_col: str = "host",
-               text_col: str = "text") -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """Per-host corpus statistics (docs, tokens, chars, mean length) —
     the first report any crawl triage produces.  One groupBy shuffle
     with map-side partial aggregation; the output is host-cardinality
     sized, never corpus sized."""
-    toks = F.split(F.col(text_col), " ")
-    return (df.groupBy(host_col)
+    toks = F.split(F.col("text"), " ")
+    return (df.groupBy("host")
             .agg(F.count("*").alias("n_docs"),
                  F.sum(F.size(toks)).alias("total_tokens"),
-                 F.sum(F.length(text_col)).alias("total_chars"),
-                 F.round(F.avg(F.length(text_col)), 4).alias("mean_chars")))
+                 F.sum(F.length("text")).alias("total_chars"),
+                 F.round(F.avg(F.length("text")), 4).alias("mean_chars")))
 
 
-def cap_per_host(df: DataFrame, k: int, host_col: str = "host",
-                 id_col: str = "doc_id", salt: str = "",
-                 margin: float = 4.0, stats: dict | None = None
+def cap_per_host(df: DataFrame, k: int, host_col: str = "host"
                  ) -> DataFrame:
     """Domain balancing: keep at most ``k`` docs per host — exactly the
     ``k`` smallest ``(hash_bucket, id)`` per host, so the selection is
@@ -113,12 +110,11 @@ def cap_per_host(df: DataFrame, k: int, host_col: str = "host",
     * hosts at-or-under the cap pass through a hash join only — no
       ranking, no per-host window;
     * over-cap hosts are PRE-FILTERED by a per-host hash cutoff
-      (expected ~``margin * k`` survivors each), so the exact
-      ``row_number`` window never sees a mega-host's full row set in
-      one partition;
+      (expected ~``4 * k`` survivors each), so the exact ``row_number``
+      window never sees a mega-host's full row set in one partition;
     * a per-host survivor count check falls back to the unfiltered rows
       for any host whose prefilter undershot ``k`` (hash variance), so
-      the result is exact regardless of ``margin``.
+      the result is exact whatever the hashes.
 
     The corpus is scanned four times (host counts; cold pass-through;
     prefilter; fallback branch — the last filters to nothing unless a
@@ -149,10 +145,10 @@ def cap_per_host(df: DataFrame, k: int, host_col: str = "host",
     tagged = df.join(hot, host_col, "left")
     cold = tagged.filter(F.col("_host_n").isNull()).drop("_host_n")
     hotrows = (tagged.filter(F.col("_host_n").isNotNull())
-               .withColumn("_bucket", hash_frac(id_col, salt)))
+               .withColumn("_bucket", hash_frac("doc_id")))
     cutoff = F.least(
         F.lit(_BUCKETS).cast("long"),
-        F.ceil(F.lit(float(k) * margin * _BUCKETS) / F.col("_host_n")))
+        F.ceil(F.lit(float(k) * 4.0 * _BUCKETS) / F.col("_host_n")))
     pref = hotrows.filter(F.col("_bucket") < cutoff)
     got = pref.groupBy(host_col).agg(F.count("*").alias("_got_n"))
     under = (hot.join(got, host_col, "left")
@@ -162,20 +158,8 @@ def cap_per_host(df: DataFrame, k: int, host_col: str = "host",
                .unionByName(
                    hotrows.join(F.broadcast(under), host_col,
                                 "left_semi")))
-    w = Window.partitionBy(host_col).orderBy("_bucket", id_col)
+    w = Window.partitionBy(host_col).orderBy("_bucket", "doc_id")
     kept_hot = (rank_in.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k)
                 .drop("_rn", "_bucket", "_host_n"))
-    if stats is not None:
-        # both counts in ONE action over the host-sized tables (VERDICT
-        # r5 #5: the old hot.count() + under.count() pair cost two extra
-        # jobs, the second re-deriving the prefilter aggregation)
-        row = (hot.join(got, host_col, "left")
-               .agg(F.count("*").alias("_hot"),
-                    F.coalesce(
-                        F.sum((F.coalesce(F.col("_got_n"), F.lit(0)) < k)
-                              .cast("long")), F.lit(0)).alias("_fb"))
-               .collect()[0])
-        stats["hot_hosts"] = row["_hot"]
-        stats["fallback_hosts"] = int(row["_fb"])
     return cold.unionByName(kept_hot)

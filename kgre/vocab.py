@@ -54,12 +54,12 @@ def vocab_counts(candidates: DataFrame) -> DataFrame:
 
 
 def two_phase_dense_ids(df: DataFrame, partition_cols, order_cols,
-                        id_col: str = "id", num_parts: int | None = None
-                        ) -> DataFrame:
+                        id_col: str = "id") -> DataFrame:
     """Skew-proof dense id assignment: ids count 0,1,2,... within each
     ``partition_cols`` group in ``order_cols`` order — the semantics of
     ``row_number() OVER (PARTITION BY group ORDER BY ...)`` — without
-    ever collapsing a group onto a single task.
+    ever collapsing a group onto a single task.  It range-partitions into
+    ``spark.sql.shuffle.partitions`` parts.
 
     Two phases: (1) range-repartition on the full (group, order) sort
     key, so each group occupies a contiguous run of physical partitions
@@ -88,8 +88,7 @@ def two_phase_dense_ids(df: DataFrame, partition_cols, order_cols,
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    if num_parts is None:
-        num_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     gcols = list(partition_cols)
     sort_exprs = [F.col(c) for c in gcols] + list(order_cols)
     parted = stage_checkpoint(

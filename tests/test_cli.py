@@ -113,12 +113,11 @@ def test_cli_score_resume_matches_plain(spark, tmp_path, monkeypatch):
 
 
 def test_load_id_list(tmp_path):
-    # S5 id-list scan (load_data.py:436-453): TSV column -> set
+    # S5 id-list scan (load_data.py:436-453): first TSV column -> set
     from kgre import kb
     p = tmp_path / "ids.tsv"
     p.write_text("G00001\tname1\nG00002\tx\n\nG00003\ty\n")
     assert kb.load_id_list(str(p)) == {"G00001", "G00002", "G00003"}
-    assert kb.load_id_list(str(p), column=1) == {"name1", "x", "y"}
 
 
 def test_cli_train_lstm(spark, tmp_path, monkeypatch):
@@ -319,3 +318,31 @@ def test_cli_clean_optional_flag_validation(spark, tmp_path, monkeypatch):
     with pytest.raises(SystemExit):
         cli.main(["clean", "--documents", docs_dir, "--host-cap", "5",
                   "--out", str(tmp_path / "o")])
+
+
+def test_session_runs_on_the_spark_submit_master(tmp_path):
+    """Without a ``master``, ``get_spark`` runs on the master spark-submit
+    was given: a builder ``.master`` would override ``--master``, so the
+    CLI submitted to a cluster would still run locally."""
+    import shutil
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyspark
+
+    root = Path(__file__).resolve().parent.parent
+    py_files = shutil.make_archive(str(tmp_path / "kgre"), "zip", root,
+                                   "kgre")
+    script = tmp_path / "s.py"
+    script.write_text("from kgre.session import get_spark; "
+                      "print('MASTER=' + get_spark('m').sparkContext.master)"
+                      "\n")
+    submit = shutil.which("spark-submit") or str(
+        Path(pyspark.__file__).parent / "bin" / "spark-submit")
+    env = {**os.environ, "PYSPARK_PYTHON": sys.executable,
+           "PYSPARK_DRIVER_PYTHON": sys.executable}
+    run = subprocess.run([submit, "--master", "local[2]", "--py-files",
+                          py_files, str(script)], capture_output=True,
+                         text=True, timeout=300, env=env)
+    assert "MASTER=local[2]\n" in run.stdout, run.stderr[-3000:]

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgre import synthgen
+from kgre.candidates import allowlist_filter
 from kgre.extract import extract_text_from_html
 from kgre.pipeline import documents_to_candidates, pages_to_candidates
 from kgre.session import get_spark
@@ -68,7 +69,10 @@ def test_fused_respects_stop_and_allowlists(spark):
     two = pages_to_candidates(pages_from_documents(docs, lang="en"),
                               "GENE", "ONTOLOGY", stop,
                               allow1=allow1, allow2=allow2)
-    fused = documents_to_candidates(docs, "GENE", "ONTOLOGY", stop,
-                                    allow1=allow1, allow2=allow2)
+    # the fused path takes no allowlists: its candidates through the
+    # declarative allowlist twin equal the in-stage allowlisted ones
+    fused = allowlist_filter(
+        documents_to_candidates(docs, "GENE", "ONTOLOGY", stop),
+        allow1, allow2)
     assert (sorted(tuple(r) for r in two.collect())
             == sorted(tuple(r) for r in fused.collect()))

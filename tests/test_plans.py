@@ -270,6 +270,32 @@ def test_decontaminate_benchmark_side_is_broadcast(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_lm_count_tables_are_not_forced_into_a_broadcast(spark):
+    """The bigram and context tables grow with the training corpus (the
+    clean recipe trains on the surviving corpus itself), so the scorer
+    leaves the join strategy to the planner: with broadcasting off, no
+    BroadcastHashJoin remains and the filter keeps the same docs."""
+    from kgre import lm
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def kept():
+        out = lm.perplexity_filter(docs, docs, max_bits=4.9)
+        return _plan(out), sorted(r["doc_id"] for r in out.collect())
+
+    _, want = kept()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan, got = kept()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert got == want
+    assert 0 < len(want) < docs.count()
+
+
 def test_r5_ops_plan_shapes(spark):
     """Scale-shape pins for the r5 operators: no cartesian anywhere; the
     cap_per_host rank compiles to WindowGroupLimit (top-k per host, the

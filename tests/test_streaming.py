@@ -144,7 +144,7 @@ def test_windowed_page_counts_watermark(spark, tmp_path):
         .write.mode("overwrite").parquet(pages_dir)
     stream = streaming.read_page_stream(spark, pages_dir)
     out = str(tmp_path / "win_out")
-    q = (streaming.windowed_page_counts(stream, "1 hour", "2 hours")
+    q = (streaming.windowed_page_counts(stream)
          .writeStream.format("parquet")
          .option("path", out)
          .option("checkpointLocation", str(tmp_path / "ck2"))

@@ -167,7 +167,7 @@ def test_ff_hits_match_per_row_lookup(spark):
     inst, _ = train.collect_instances(cands, FF_COLS, key_order, fwd, rev,
                                       sample=10_000)
     _, hits, y = train.collect_training_set(cands, vocabs, key_order, fwd,
-                                            rev, sample=10_000)
+                                            rev)
     assert hits == ff_hit_lists(inst, idx) and len(hits) == len(y)
     cands.unpersist()
 
@@ -177,7 +177,7 @@ def test_fit_ff_empty_hidden_matches_logistic_shape():
     hits = [[0], [1], [0, 2], []]
     y = np.array([[1.0], [0.0], [1.0], [0.0]])
     layers, losses = train.fit_ff(hits, y, n_feat=3, hidden_array=[],
-                                  epochs=30, batch=2)
+                                  epochs=30)
     assert len(layers) == 1 and layers[0][0].shape == (3, 1)
     assert losses[-1] < losses[0]
 
@@ -197,6 +197,14 @@ def _lstm_setup(spark, n_pages=60):
     return cands, dep_vocab, word_vocab, key_order, fwd, rev
 
 
+def _three_longest(collected):
+    """The three instances with the longest paths: a tiny batch for the
+    finite-difference checks."""
+    t_ids, w_ids, lens, y = collected
+    top = np.argsort(-lens, kind="stable")[:3]
+    return t_ids[top], w_ids[top], lens[top], y[top]
+
+
 def test_lstm_gradients_match_finite_differences(spark):
     """BPTT correctness: analytic grads vs central differences on a tiny
     batch (no dropout), across every parameter tensor."""
@@ -204,11 +212,11 @@ def test_lstm_gradients_match_finite_differences(spark):
 
     cands, dep_vocab, word_vocab, key_order, fwd, rev = _lstm_setup(
         spark, n_pages=20)
-    t_ids, w_ids, lens, y = lstm_train.collect_lstm_training_set(
-        cands, dep_vocab, word_vocab, key_order, fwd, rev, sample=3)
+    t_ids, w_ids, lens, y = _three_longest(
+        lstm_train.collect_lstm_training_set(cands, dep_vocab, word_vocab,
+                                             key_order, fwd, rev))
     assert len(lens) > 0 and lens.max() > 2
-    params = lstm_train.init_lstm_params(dep_vocab, word_vocab, key_order,
-                                         seed=3)
+    params = lstm_train.init_lstm_params(dep_vocab, word_vocab, key_order)
     loss, grads = lstm_train.lstm_loss_and_grads(params, t_ids, w_ids,
                                                  lens, y)
     rng = np.random.RandomState(0)
@@ -242,10 +250,10 @@ def test_lstm_gradients_with_dropout_masks(spark):
 
     cands, dep_vocab, word_vocab, key_order, fwd, rev = _lstm_setup(
         spark, n_pages=20)
-    t_ids, w_ids, lens, y = lstm_train.collect_lstm_training_set(
-        cands, dep_vocab, word_vocab, key_order, fwd, rev, sample=3)
-    params = lstm_train.init_lstm_params(dep_vocab, word_vocab, key_order,
-                                         seed=3)
+    t_ids, w_ids, lens, y = _three_longest(
+        lstm_train.collect_lstm_training_set(cands, dep_vocab, word_vocab,
+                                             key_order, fwd, rev))
+    params = lstm_train.init_lstm_params(dep_vocab, word_vocab, key_order)
     mrng = np.random.RandomState(7)
     wmask = (mrng.random_sample((len(lens), PAD_LEN, 1)) < 0.5) / 0.5
     hmask = (mrng.random_sample((len(lens), HIDDEN)) < 0.5) / 0.5
@@ -277,7 +285,7 @@ def test_truncated_normal_init_bounds():
     from kgre.lstm_train import truncated_normal
 
     rng = np.random.RandomState(0)
-    x = truncated_normal(rng, (20000,), mean=-0.1, std=0.1)
+    x = truncated_normal(rng, (20000,))
     assert np.abs(x - (-0.1)).max() <= 0.2 + 1e-12
     assert abs(float(x.mean()) - (-0.1)) < 0.005
 
@@ -287,10 +295,9 @@ def test_lstm_training_reduces_loss_and_weights_roundtrip(spark):
 
     cands, dep_vocab, word_vocab, key_order, fwd, rev = _lstm_setup(spark)
     t_ids, w_ids, lens, y = lstm_train.collect_lstm_training_set(
-        cands, dep_vocab, word_vocab, key_order, fwd, rev, sample=200)
+        cands, dep_vocab, word_vocab, key_order, fwd, rev)
     params, losses = lstm_train.fit_lstm(
-        t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order,
-        epochs=8, batch=32)
+        t_ids, w_ids, lens, y, dep_vocab, word_vocab, key_order, epochs=8)
     assert losses[-1] < losses[0], losses
     # roundtrip through the string-keyed weights table
     df = lstm_train.lstm_weights_to_df(spark, params, dep_vocab, word_vocab,
@@ -430,8 +437,7 @@ def test_k_fold_cv_runs_and_respects_fold_membership(spark):
     per-fold vocab from training only, per-(fold, rel) F1 rows."""
     from kgre import cv
     cands, _, key_order, fwd, rev = _setup(spark, n_pages=60)
-    out = cv.k_fold_cv(cands, 3, key_order, fwd, rev, occur_count=2,
-                       epochs=5).collect()
+    out = cv.k_fold_cv(cands, 3, key_order, fwd, rev).collect()
     assert {r["fold"] for r in out} == {0, 1, 2}
     assert {r["rel"] for r in out} <= set(key_order)
     for r in out:
@@ -478,6 +484,5 @@ def test_k_fold_cv_rejects_too_few_documents(spark):
     cands, _, key_order, fwd, rev = _setup(spark, n_pages=2)
     n_urls = cands.select("url").distinct().count()
     with pytest.raises(ValueError, match="distinct documents"):
-        cv.k_fold_cv(cands, n_urls + 1, key_order, fwd, rev,
-                     occur_count=2, epochs=1)
+        cv.k_fold_cv(cands, n_urls + 1, key_order, fwd, rev)
     cands.unpersist()
