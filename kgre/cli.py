@@ -9,7 +9,7 @@ Usage (north_rule: "run via spark-submit --py-files"):
     # or: spark-submit --py-files kgre.zip path/to/kgre/cli.py <mode> ...
 
 Modes:
-  build      corpus pass: pages -> candidates checkpoint + vocab table
+  build      corpus pass: pages -> materialized candidates + vocab table
              (reference TRAIN_FEED_FORWARD's two corpus passes collapsed to
              one materialized candidates table, relation_extraction.py:336-427)
   score      candidates/pages -> scored triples partitioned by rel
@@ -24,6 +24,10 @@ Modes:
              lineage-manifest resume (no reference counterpart; the
              composition of the engine's dedup/textstats operators)
 
+build, score --resume and clean materialize the candidates one way:
+<out>/candidates in --buckets key-hash buckets with a lineage manifest
+(kgre.lineage); a rerun recomputes only buckets whose input changed.
+
 Input pages: --pages <parquet dir> with columns
 (url, warc_ts, html, text, lang), or --synth N for the deterministic
 generator corpus (no external data).
@@ -32,6 +36,7 @@ generator corpus (no external data).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import sys
 
 import pandas as pd
@@ -39,6 +44,7 @@ from pyspark.sql import functions as F
 
 from kgre import kb as kbmod
 from kgre import synthgen, webtext
+from kgre.lineage import run_stage_with_resume
 from kgre.pipeline import KgPipeline, pages_to_candidates, write_triples
 from kgre.score import emitted_triples
 from kgre.session import get_spark, stage_checkpoint
@@ -75,70 +81,71 @@ def _allowlists(args):
     return a1, a2
 
 
-def _load_sentences(spark, args):
-    """--corenlp-xml sentences frame (S1-compat reader over the
-    reference's real input format, load_data.py:352-396)."""
-    from kgre.corenlp import read_corenlp_xml
-    return read_corenlp_xml(spark, args.corenlp_xml,
-                            glob=args.pages_glob or "*.txt",
-                            recursive=args.recursive)
+def _ingest(spark, args):
+    """(input frame, its bucket key column) of either ingest path: the
+    --corenlp-xml files (binaryFile rows keyed by path) or the pages
+    (keyed by url)."""
+    if args.corenlp_xml:
+        from kgre.corenlp import _binary_reader
+        return _binary_reader(spark, args.pages_glob or "*.txt",
+                              args.recursive).load(args.corenlp_xml), "path"
+    return _load_pages(spark, args), "url"
+
+
+def _to_candidates(args, a1, a2, min_partitions=None):
+    """input frame -> candidates: the fused parse+candidates stage of the
+    ingest path (one Python crossing), XML parse or html extract+parse.
+    Every mode that consumes candidates routes through here, so the XML
+    ingest is never silently ignored (ADVICE r3)."""
+    stop = synthgen.stop_entity_ids()
+    if args.corenlp_xml:
+        from kgre.corenlp import corenlp_files_to_candidates
+        return lambda files: corenlp_files_to_candidates(
+            files, args.entity_a, args.entity_b, stop, allow1=a1, allow2=a2,
+            on_error=args.xml_on_error)
+    return lambda pages: pages_to_candidates(
+        pages, args.entity_a, args.entity_b, stop,
+        min_partitions=min_partitions, allow1=a1, allow2=a2)
 
 
 def _load_candidates(spark, args, a1, a2):
-    """Candidates frame from either ingest path: --corenlp-xml or the
-    pages path (html extract+parse fused stage).  Every mode that
-    consumes candidates routes through here, so the XML ingest is never
-    silently ignored (ADVICE r3)."""
-    if args.corenlp_xml:
-        # fused binaryFile scan -> parse+candidates (one Python crossing)
-        from kgre.corenlp import read_corenlp_candidates
-        return read_corenlp_candidates(spark, args.corenlp_xml,
-                                       args.entity_a, args.entity_b,
-                                       synthgen.stop_entity_ids(),
-                                       glob=args.pages_glob or "*.txt",
-                                       recursive=args.recursive,
-                                       allow1=a1, allow2=a2,
-                                       on_error=args.xml_on_error)
-    return pages_to_candidates(_load_pages(spark, args), args.entity_a,
-                               args.entity_b, synthgen.stop_entity_ids(),
-                               allow1=a1, allow2=a2)
+    inputs, _ = _ingest(spark, args)
+    return _to_candidates(args, a1, a2)(inputs)
+
+
+def _materialized_candidates(spark, args, a1, a2, inputs, key_col):
+    """The one materialized candidates boundary (build, score --resume,
+    clean): the reference's skip-if-.tfrecord-exists
+    (relation_extraction.py:393-399) per key-hash bucket, kgre.lineage.
+    The stage name digests the transform's parameters, so other entity
+    types, allowlists or XML error policy recompute."""
+    params = (args.entity_a, args.entity_b,
+              *[None if a is None else sorted(a) for a in (a1, a2)],
+              args.xml_on_error)
+    stage = "candidates-" + hashlib.sha1(
+        repr(params).encode()).hexdigest()[:12]
+    return run_stage_with_resume(
+        spark, inputs, stage, _to_candidates(args, a1, a2, min_partitions=0),
+        args.out + "/candidates", args.out + "/manifest",
+        n_buckets=args.buckets, key_col=key_col)
 
 
 def mode_build(spark, args):
     a1, a2 = _allowlists(args)
-    cands = _load_candidates(spark, args, a1, a2)
-    cands.write.mode("overwrite").parquet(args.out + "/candidates")
-    cands = spark.read.parquet(args.out + "/candidates")
+    cands = _materialized_candidates(spark, args, a1, a2,
+                                     *_ingest(spark, args))
     build_vocab(cands, args.occur_count).write.mode("overwrite").parquet(
         args.out + "/vocab")
     print("BUILD ok: candidates=%d vocab=%d" % (
         cands.count(), spark.read.parquet(args.out + "/vocab").count()))
 
 
-def _resumable_candidates(spark, args, pages, a1, a2):
-    """Lineage-manifest resume (north_rule): the candidates stage runs per
-    url-hash bucket; a rerun recomputes ONLY buckets missing from the
-    manifest, and the returned frame reads the materialized stage output
-    (the reference's skip-if-.tfrecord-exists, relation_extraction.py:
-    393-399, made per-partition + crash-safe)."""
-    from kgre.lineage import run_stage_with_resume
-
-    stop = synthgen.stop_entity_ids()
-    return run_stage_with_resume(
-        spark, pages, "candidates",
-        lambda part: pages_to_candidates(part, args.entity_a, args.entity_b,
-                                         stop, min_partitions=0,
-                                         allow1=a1, allow2=a2),
-        args.out + "/candidates", args.out + "/manifest",
-        n_buckets=args.buckets)
-
-
-def _write_emitted(spark, args, cands, checkpoint_dir=None):
+def _write_emitted(spark, args, cands):
     """candidates -> vocab -> score (TEST mode, the 0.5 gate inside the
     scorer) -> triples sink; returns (emitted rows, relation count)."""
     scored, _, key_order = _pipe(spark, args).run_from_candidates(
         cands, synthgen.kb_rows(), synthgen.ontology_rows(),
-        checkpoint_dir=checkpoint_dir, emit_threshold=0.5)
+        emit_threshold=0.5)
     write_triples(emitted_triples(scored), args.out + "/triples")
     return spark.read.parquet(args.out + "/triples").count(), len(key_order)
 
@@ -146,18 +153,11 @@ def _write_emitted(spark, args, cands, checkpoint_dir=None):
 def mode_score(spark, args):
     a1, a2 = _allowlists(args)
     if args.resume:
-        if args.corenlp_xml:
-            raise SystemExit(
-                "--resume buckets by page url; not supported with "
-                "--corenlp-xml (run without --resume)")
-        # no checkpoint_dir: the candidates already are the lineage
-        # parquet, which --checkpoint would overwrite while reading it
-        n, n_rels = _write_emitted(spark, args, _resumable_candidates(
-            spark, args, _load_pages(spark, args), a1, a2))
+        cands = _materialized_candidates(spark, args, a1, a2,
+                                         *_ingest(spark, args))
     else:
-        n, n_rels = _write_emitted(
-            spark, args, _load_candidates(spark, args, a1, a2),
-            (args.out + "/candidates") if args.checkpoint else None)
+        cands = _load_candidates(spark, args, a1, a2)
+    n, n_rels = _write_emitted(spark, args, cands)
     print("SCORE ok: emitted=%d rels=%d" % (n, n_rels))
 
 
@@ -190,7 +190,8 @@ def mode_predict(spark, args):
 def mode_eval_data(spark, args):
     from kgre.pipeline import pages_to_mentions, sentences_to_mentions
 
-    cands = _load_candidates(spark, args, None, None)
+    inputs, _ = _ingest(spark, args)
+    cands = _to_candidates(args, None, None)(inputs)
     # S15 (relation_extraction.py:217-250): per-side entity occurrence
     # distribution, count ascending
     for side in ("subj", "obj"):
@@ -201,11 +202,11 @@ def mode_eval_data(spark, args):
     # distribution; entity types are EXACT NER keys here (the reference
     # dict-membership test), e.g. HUMAN_GENE, not the GENE substring
     if args.corenlp_xml:
-        mentions = sentences_to_mentions(_load_sentences(spark, args),
+        from kgre.corenlp import corenlp_xml_to_sentences
+        mentions = sentences_to_mentions(corenlp_xml_to_sentences(inputs),
                                          args.eval_ner_a, args.eval_ner_b)
     else:
-        mentions = pages_to_mentions(_load_pages(spark, args),
-                                     args.eval_ner_a, args.eval_ner_b)
+        mentions = pages_to_mentions(inputs, args.eval_ner_a, args.eval_ner_b)
     (mentions.groupBy("side", "entity_key").agg(F.count("*").alias("cnt"))
      .orderBy("cnt", "entity_key")
      .write.mode("overwrite").parquet(f"{args.out}/dist_phrases"))
@@ -269,7 +270,7 @@ def mode_clean(spark, args):
       clean_docs/       surviving documents
       clean_manifest/   per-stage (stage, rows_in, rows_out, wall_ms)
       candidates/ + manifest/   lineage-bucketed candidates stage
-                        (re-running resumes from completed buckets)
+                        (a rerun skips buckets whose input is unchanged)
       triples/          emitted triples partitioned by rel
     """
     from kgre.clean import clean_documents
@@ -313,8 +314,8 @@ def mode_clean(spark, args):
     # KG pipeline over the cleaned corpus, candidates stage bucketed
     # through the lineage manifest (crash-safe resume)
     pages = webtext.pages_from_documents(clean, lang="en")
-    n_triples, _ = _write_emitted(
-        spark, args, _resumable_candidates(spark, args, pages, None, None))
+    n_triples, _ = _write_emitted(spark, args, _materialized_candidates(
+        spark, args, None, None, pages, "url"))
     url_note = ""
     if "url_dedup" in by_stage:
         url_note = ("url %d -> %d; "
@@ -377,10 +378,13 @@ def main(argv=None):
                         "words by count (min-count-0 reference semantics "
                         "but bounded driver collect)")
     p.add_argument("--resume", action="store_true",
-                   help="run the candidates stage per url-hash bucket with "
-                        "a lineage manifest; reruns skip completed buckets")
+                   help="score: materialize the candidates as build and "
+                        "clean do, per key-hash bucket with a lineage "
+                        "manifest; reruns skip buckets whose input is "
+                        "unchanged")
     p.add_argument("--buckets", type=int, default=8,
-                   help="lineage bucket count for --resume")
+                   help="lineage bucket count of the materialized "
+                        "candidates (build, score --resume, clean)")
     p.add_argument("--neardup-threshold", type=float, default=0.6,
                    help="clean mode: MinHash-LSH Jaccard threshold for the "
                         "near-dup collapse")
@@ -420,9 +424,6 @@ def main(argv=None):
                         "near-dup stage (0 = uncapped); capped "
                         "bucket/row counts land in clean_manifest as "
                         "the near_dedup_caps row")
-    p.add_argument("--checkpoint", action="store_true",
-                   help="materialize the candidates stage to parquet "
-                        "(the reference's TFRecord boundary)")
     p.add_argument("--reliable-checkpoint", metavar="DIR", default=None,
                    help="store stage checkpoints as recoverable "
                         ".checkpoint() files under DIR (HDFS path on a "

@@ -139,22 +139,21 @@ def corenlp_xml_to_sentences(files: DataFrame) -> DataFrame:
 
 
 def _binary_reader(spark: SparkSession, glob: str, recursive: bool):
+    """binaryFile reader of a CoreNLP-XML directory.  S2 directory walk +
+    F5 suffix predicate both evaluate at file listing
+    (``pathGlobFilter``/``recursiveFileLookup``), before any bytes move —
+    the reference's ``os.walk`` + ``endswith('.txt')``
+    (load_data.py:457-475) pushed into the scan."""
     reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
     return reader
 
 
-def read_corenlp_xml(spark: SparkSession, path: str, glob: str = "*.txt",
-                     recursive: bool = False) -> DataFrame:
-    """Directory of CoreNLP-XML ``.txt`` files -> sentences DataFrame.
-
-    S2 directory walk + F5 suffix predicate both evaluate at file listing
-    (``pathGlobFilter``/``recursiveFileLookup``), before any bytes move —
-    the reference's ``os.walk`` + ``endswith('.txt')``
-    (load_data.py:457-475) pushed into the scan."""
+def read_corenlp_xml(spark: SparkSession, path: str) -> DataFrame:
+    """Directory of CoreNLP-XML ``.txt`` files -> sentences DataFrame."""
     return corenlp_xml_to_sentences(
-        _binary_reader(spark, glob, recursive).load(path))
+        _binary_reader(spark, "*.txt", False).load(path))
 
 
 def corenlp_corrupt_files(files: DataFrame) -> DataFrame:
@@ -216,12 +215,9 @@ def corenlp_files_to_candidates(files: DataFrame, entity_a: str,
 
 
 def read_corenlp_candidates(spark: SparkSession, path: str, entity_a: str,
-                            entity_b: str, stop_ids, glob: str = "*.txt",
-                            recursive: bool = False,
-                            allow1=None, allow2=None,
-                            on_error: str = "fail") -> DataFrame:
-    """binaryFile scan -> fused parse+candidates (the CLI ingest path)."""
+                            entity_b: str, stop_ids) -> DataFrame:
+    """binaryFile scan of the ``*.txt`` files under path -> fused
+    parse+candidates."""
     return corenlp_files_to_candidates(
-        _binary_reader(spark, glob, recursive).load(path),
-        entity_a, entity_b, stop_ids, allow1=allow1, allow2=allow2,
-        on_error=on_error)
+        _binary_reader(spark, "*.txt", False).load(path),
+        entity_a, entity_b, stop_ids)

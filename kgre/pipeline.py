@@ -9,9 +9,10 @@ Physical plan (SURVEY.md §4.3):
       emitter).  Every ingest path runs this same stage with its own
       source and emitter: documents text, CoreNLP XML, sentence rows;
       mentions and sentence rows instead of candidates
-   -> candidates boundary: parquet (the reference's TFRecord boundary,
-      S10) or a stage checkpoint — consumed twice (vocab agg +
-      scoring) without recompute
+   -> candidates boundary: a stage checkpoint — consumed twice (vocab
+      agg + scoring) without recompute.  The materialized, resumable
+      boundary (the reference's TFRecord shards, S10) is the lineage
+      stage in front of this tail (kgre.lineage, CLI build/--resume/clean)
    -> groupBy vocab counts (single shuffle, map-side partial agg) ->
       one Arrow collect, dense ids ranked on the driver
    -> mapInPandas score over broadcast {weights, vocab, KB} -> triples
@@ -173,7 +174,6 @@ class KgPipeline:
                                         emit_threshold=emit_threshold)
 
     def run_from_candidates(self, cands: DataFrame, kb_rows_list, onto_rows,
-                            checkpoint_dir: str | None = None,
                             with_sentence: bool = False,
                             emit_threshold: float | None = None):
         """candidates -> (scored triples DF, vocab DF, key_order) — the
@@ -181,23 +181,16 @@ class KgPipeline:
         (CoreNLP XML via kgre.corenlp -> candidates_from_sentences) enter
         the same plan after the ingest stage."""
         fwd, rev, key_order = self.prepare_kb(kb_rows_list, onto_rows)
-        if checkpoint_dir:
-            # materialized stage boundary (reference: per-file TFRecord
-            # shards, load_data.py:640-662) — vocab agg and scoring both
-            # read the parquet, never recompute the Python stage
-            cands.write.mode("overwrite").parquet(checkpoint_dir)
-            cands = self.spark.read.parquet(checkpoint_dir)
-        else:
-            if not with_sentence:
-                # TEST mode: the S14 sentence columns (the widest ones)
-                # stay out of the checkpointed blocks
-                cands = cands.select(*[c for c in SLIM_COLS
-                                       if c in cands.columns])
-            # computed once, read by the vocab count and the scoring job;
-            # unlike a persist it leaves no CacheManager entry (its blocks
-            # are freed with the frames).  Eager, so the stage runs inside
-            # a SQL execution and its operator metrics are recorded
-            cands = stage_checkpoint(cands)
+        if not with_sentence:
+            # TEST mode: the S14 sentence columns (the widest ones) stay
+            # out of the checkpointed blocks
+            cands = cands.select(*[c for c in SLIM_COLS
+                                   if c in cands.columns])
+        # computed once, read by the vocab count and the scoring job;
+        # unlike a persist it leaves no CacheManager entry (its blocks
+        # are freed with the frames).  Eager, so the stage runs inside a
+        # SQL execution and its operator metrics are recorded
+        cands = stage_checkpoint(cands)
         vocab_df = build_vocab(cands, self.occur_count)
         scored = score_candidates(cands, collect_vocab_sets(vocab_df),
                                   key_order, fwd, rev,

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgre.pipeline import KgPipeline, pages_to_candidates
+from kgre.pipeline import KgPipeline, pages_to_candidates, write_triples
 from kgre.score import emitted_triples, score_candidates
 from kgre.synthgen import PAGES_SCHEMA
 
@@ -55,9 +55,7 @@ def batch_processor(out_dir: str, vocabs, key_order, fwd, rev):
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         scored = score_candidates(batch_df, vocabs, key_order, fwd, rev,
                                   emit_threshold=0.5)
-        (emitted_triples(scored)
-         .write.mode("overwrite").partitionBy("rel")
-         .parquet(f"{out_dir}/batch={batch_id}"))
+        write_triples(emitted_triples(scored), f"{out_dir}/batch={batch_id}")
 
     return process_batch
 

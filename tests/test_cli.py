@@ -101,15 +101,36 @@ def test_cli_score_resume_matches_plain(spark, tmp_path, monkeypatch):
     assert a == b and a
     m1 = spark.read.parquet(res + "/manifest")
     assert m1.filter("status = 'ok'").count() == 4
-    # rerun: all buckets already in the manifest -> no new rows; with
-    # --checkpoint too, which must not overwrite the lineage candidates
-    # the rerun reads
+    # rerun: all buckets already in the manifest -> no new rows
     _run(spark, monkeypatch, "score", res,
-         extra=("--resume", "--buckets", "4", "--checkpoint"))
+         extra=("--resume", "--buckets", "4"))
     assert spark.read.parquet(res + "/manifest").count() == 4
     c = {tuple(r) for r in
          spark.read.parquet(res + "/triples").select(*key).collect()}
     assert c == a
+
+
+def _triples(spark, out):
+    key = ["url", "sent_id", "pair_idx", "is_reverse", "rel"]
+    return {tuple(r) for r in
+            spark.read.parquet(out + "/triples").select(*key).collect()}
+
+
+def test_cli_score_resume_reruns_under_other_allowlists(spark, tmp_path,
+                                                        monkeypatch):
+    """The lineage stage is named by the candidates transform's
+    parameters: a --resume rerun with a restrictive --allow1-file
+    recomputes its buckets instead of reusing the unrestricted ones."""
+    ids = tmp_path / "allow1.tsv"
+    ids.write_text("".join("G%05d\tx\n" % k for k in range(1, 40)))
+    allow = ("--allow1-file", str(ids))
+    plain, res = str(tmp_path / "plain"), str(tmp_path / "res")
+    _run(spark, monkeypatch, "score", plain, extra=allow)
+    _run(spark, monkeypatch, "score", res, extra=("--resume", "--buckets", "4"))
+    unrestricted = _triples(spark, res)
+    _run(spark, monkeypatch, "score", res,
+         extra=("--resume", "--buckets", "4", *allow))
+    assert _triples(spark, res) == _triples(spark, plain) != unrestricted
 
 
 def test_load_id_list(tmp_path):
@@ -291,8 +312,8 @@ def test_cli_reliable_checkpoint_flag(spark, tmp_path, monkeypatch):
     surface), and the output equals the localCheckpoint default."""
     ckpt = str(tmp_path / "ckpt")
     plain, rel = str(tmp_path / "plain"), str(tmp_path / "rel")
-    # score without --checkpoint reuses its candidates through a stage
-    # checkpoint (the vocab count job and the scoring job both read it)
+    # score reuses its candidates through a stage checkpoint (the vocab
+    # count job and the scoring job both read it)
     _run(spark, monkeypatch, "score", plain)
     try:
         _run(spark, monkeypatch, "score", rel,

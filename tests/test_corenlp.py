@@ -160,6 +160,42 @@ def test_cli_corenlp_xml_matches_pages_path(spark, tmp_path, monkeypatch):
     assert a == b and a
 
 
+def test_cli_corenlp_xml_resume(spark, tmp_path, monkeypatch):
+    """score --corenlp-xml --resume buckets the XML files by path: it
+    emits the triples of a plain --corenlp-xml run, and a rerun over
+    unchanged files parses no bucket again."""
+    from kgre import cli, corenlp
+
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    xml_dir = tmp_path / "xml"
+    xml_dir.mkdir()
+    for i, (url, rows) in enumerate(sorted(_stub_sentences(40).items())):
+        (xml_dir / f"d{i}.txt").write_bytes(rows_to_corenlp_xml(url, rows))
+    calls = []
+    parse = corenlp.corenlp_files_to_candidates
+
+    def counting(files, *args, **kwargs):
+        calls.append(1)
+        return parse(files, *args, **kwargs)
+
+    monkeypatch.setattr(corenlp, "corenlp_files_to_candidates", counting)
+    plain, res = str(tmp_path / "plain"), str(tmp_path / "res")
+    resume = ("--resume", "--buckets", "2")
+    n_calls = []
+    for out, extra in ((plain, ()), (res, resume), (res, resume)):
+        calls.clear()
+        cli.main(["score", "--corenlp-xml", str(xml_dir), "--occur-count", "2",
+                  "--out", out, *extra])
+        n_calls.append(len(calls))
+    # one call over all files, one per bucket, none on the rerun
+    assert n_calls == [1, 2, 0]
+    cols = ["url", "sent_id", "pair_idx", "subj", "obj", "rel", "prob"]
+    a, b = (sorted(map(tuple, spark.read.parquet(o + "/triples")
+                       .select(*cols).collect())) for o in (plain, res))
+    assert a == b and a
+
+
 def test_cli_corenlp_xml_routes_all_modes(spark, tmp_path, monkeypatch):
     """ADVICE r3: predict / train / train-lstm / eval-data must consume
     --corenlp-xml instead of silently falling back to synthetic pages
@@ -236,6 +272,7 @@ def test_corenlp_on_error_skip_and_audit(spark, tmp_path):
     on_error='skip', and shows up in the corenlp_corrupt_files audit."""
     from kgre import synthgen
     from kgre.corenlp import (corenlp_corrupt_files, _binary_reader,
+                              corenlp_files_to_candidates,
                               read_corenlp_candidates)
 
     xml_dir = tmp_path / "xml"
@@ -250,11 +287,13 @@ def test_corenlp_on_error_skip_and_audit(spark, tmp_path):
     with pytest.raises(Exception, match="bad.txt"):
         read_corenlp_candidates(spark, str(xml_dir), "GENE", "ONTOLOGY",
                                 stop).count()
-    good = read_corenlp_candidates(spark, str(xml_dir), "GENE", "ONTOLOGY",
-                                   stop, on_error="skip")
-    want = read_corenlp_candidates(
-        spark, str(xml_dir), "GENE", "ONTOLOGY", stop,
-        glob="d*.txt")   # corrupt file excluded at the listing instead
+    good = corenlp_files_to_candidates(
+        _binary_reader(spark, "*.txt", False).load(str(xml_dir)),
+        "GENE", "ONTOLOGY", stop, on_error="skip")
+    # the corrupt file excluded at the listing instead
+    want = corenlp_files_to_candidates(
+        _binary_reader(spark, "d*.txt", False).load(str(xml_dir)),
+        "GENE", "ONTOLOGY", stop)
     key = ["url", "sent_id", "pair_idx", "is_reverse"]
     assert sorted(map(tuple, good.select(*key).collect())) == \
         sorted(map(tuple, want.select(*key).collect()))

@@ -5,6 +5,7 @@ multimodal plumbing, lineage/resume."""
 from __future__ import annotations
 
 import itertools
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -356,6 +357,55 @@ def test_lineage_resume_skips_completed_buckets(spark, tmp_path):
     assert sum(r["rows_in"] for r in rows) == 100
     assert sum(r["rows_out"] for r in rows) == 100
     assert all(r["status"] == "ok" for r in rows)
+
+
+def _pages(spark, prefix, n, html):
+    return spark.createDataFrame(
+        [(prefix + str(i), html % i) for i in range(n)],
+        "url string, html string")
+
+
+_A = ("u", 100, "<p>%d</p>")
+# each case: the (input, n_buckets) runs over one out_dir + manifest
+RERUNS = {
+    "new_urls": [(_A, 4), (("v", 50, "<p>%d</p>"), 4)],
+    "changed_html": [(_A, 4), (("u", 100, "<p>%d!</p>"), 4)],
+    "fewer_buckets": [(_A, 4), (_A, 2)],
+    "A_B_A": [(_A, 4), (("u", 100, "<b>%d</b>"), 4), (_A, 4)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(RERUNS))
+def test_lineage_rerun_returns_the_current_input(spark, tmp_path, case):
+    """A rerun over the same dirs returns exactly its own input: the
+    manifest's content key catches new urls, changed content under the
+    same urls, a different bucket count, and input that goes back to an
+    earlier version (only a bucket's latest manifest row counts)."""
+    for (prefix, n, html), n_buckets in RERUNS[case]:
+        df = _pages(spark, prefix, n, html)
+        out = run_stage_with_resume(spark, df, "s", lambda part: part,
+                                    str(tmp_path / "out"),
+                                    str(tmp_path / "man"),
+                                    n_buckets=n_buckets)
+    cols = ["url", "html"]
+    assert sorted(map(tuple, out.select(*cols).collect())) == \
+        sorted(map(tuple, df.collect()))
+
+
+def test_lineage_rerun_with_fewer_buckets_leaves_only_its_buckets(spark,
+                                                                   tmp_path):
+    """8 -> 4 buckets: out_dir holds exactly bucket=0..3 afterwards, so a
+    whole-directory read equals the returned frame."""
+    df = _pages(spark, *_A)
+    out_dir = str(tmp_path / "out")
+    for n in (8, 4):
+        out = run_stage_with_resume(spark, df, "s", lambda part: part,
+                                    out_dir, str(tmp_path / "man"),
+                                    n_buckets=n)
+    assert sorted(os.listdir(out_dir)) == ["bucket=%d" % b for b in range(4)]
+    assert sorted(map(tuple, spark.read.parquet(out_dir).collect())) == \
+        sorted(map(tuple, out.collect()))
+    assert out.count() == 100
 
 
 def test_connected_components_log_iterations_on_path_graph(spark,

@@ -24,11 +24,11 @@ SURFACES = ["__spark_entry__.py", "bench.py", "bench_extra.py",
 ROOT_MODULES = {"cli", "w2v"}       # w2v: the reference's embedding format
 # the restore half of train -> score (the FF and LSTM readers, both thin
 # calls of train.tensors_from_df), streaming, k-fold CV, the CoreNLP
-# corrupt-file report (named by --xml-on-error), sentence-row candidates
-# and the fixture generator
+# corrupt-file report (named by --xml-on-error), sentence-row candidates,
+# the fixture generator and the lineage manifest's progress query
 KEEP = {"weights_from_df", "lstm_weights_from_df", "stream_triples",
         "windowed_page_counts", "k_fold_cv", "corenlp_corrupt_files",
-        "candidates_from_sentences", "gen_pages_rows"}
+        "candidates_from_sentences", "gen_pages_rows", "completed_buckets"}
 # pyoracle is the independent reference: its signatures follow the
 # reference code, not kgre's callers
 PARAM_EXEMPT_MODULES = {"pyoracle"}
@@ -152,9 +152,37 @@ def _calls(tree, by_node, enclosing=()):
         yield from _calls(child, by_node, inner)
 
 
-def _settings(call, target, enclosing):
+def _callee(call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _tuple_lengths(trees) -> dict[str, int]:
+    """Function name -> n, for each name whose every definition returns
+    only tuple literals of n elements (like perfbench's ``_kb``)."""
+    found: dict[str, set] = {}
+    for fn in (n for t in trees for n in ast.walk(t)
+               if isinstance(n, ast.FunctionDef)):
+        found.setdefault(fn.name, set()).update(
+            _literal_len(r.value) for r in ast.walk(fn)
+            if isinstance(r, ast.Return))
+    return {name: next(iter(ns)) for name, ns in found.items()
+            if len(ns) == 1 and None not in ns}
+
+
+def _literal_len(value) -> int | None:
+    if isinstance(value, (ast.Tuple, ast.List)) and not any(
+            isinstance(e, ast.Starred) for e in value.elts):
+        return len(value.elts)
+    return None
+
+
+def _settings(call, target, enclosing, lengths):
     """(param, source) pairs a call sets on target; source is None for an
-    outright value, else the enclosing (target key, param) it forwards."""
+    outright value, else the enclosing (target key, param) it forwards.
+    A ``*`` argument sets as many positions as its tuple literal, or the
+    tuple every return of the function it calls (``lengths``), holds;
+    any other ``*`` argument sets every later position."""
     def source(value):
         if isinstance(value, ast.Name):
             for t in enclosing:
@@ -164,19 +192,43 @@ def _settings(call, target, enclosing):
                     break
         return None
 
-    for i, arg in enumerate(call.args):
+    i = 0
+    for arg in call.args:
         if isinstance(arg, ast.Starred):
-            for p in target.pos[i:]:
+            n = (lengths.get(_callee(arg.value))
+                 if isinstance(arg.value, ast.Call)
+                 else _literal_len(arg.value))
+            if n is None:
+                n = len(target.pos)
+            for p in target.pos[i:i + n]:
                 yield p, None
-            break
+            i += n
+            continue
         if i < len(target.pos):
             yield target.pos[i], source(arg)
+        i += 1
     for kw in call.keywords:
         if kw.arg is None:
             for p in target.names:
                 yield p, None
         elif kw.arg in target.names:
             yield kw.arg, source(kw.value)
+
+
+def test_settings_credit_a_starred_argument_with_its_length():
+    tree = ast.parse("def f(a, b=1, c=2, d=3):\n    pass\n"
+                     "def _kb():\n    return 1, 2\n")
+    target = _Target("m.f", tree.body[0], False)
+    lengths = _tuple_lengths([tree])
+
+    def params(src):
+        call = ast.parse(src).body[0].value
+        return sorted(p for p, _ in _settings(call, target, (), lengths))
+
+    assert params("f(a, *(1, 2))") == ["a", "b", "c"]
+    assert params("f(a, *_kb())") == ["a", "b", "c"]
+    assert params("f(*[1], 2)") == ["a", "b"]
+    assert params("f(a, *xs)") == ["a", "b", "c", "d"]
 
 
 def test_every_defaulted_kgre_parameter_is_set_by_a_surface():
@@ -187,13 +239,11 @@ def test_every_defaulted_kgre_parameter_is_set_by_a_surface():
                         if isinstance(stmt, (ast.FunctionDef, ast.ClassDef))]
     is_set: set[tuple[str, str]] = set()
     forwards: list[tuple[tuple[str, str], tuple[str, str]]] = []
+    lengths = _tuple_lengths(scopes)
     for scope in scopes:
         for call, outer in _calls(ast.Module([scope], []), by_node):
-            f = call.func
-            callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr",
-                                                                  None)
-            for target in by_name.get(callee, ()):
-                for param, src in _settings(call, target, outer):
+            for target in by_name.get(_callee(call), ()):
+                for param, src in _settings(call, target, outer, lengths):
                     if src is None:
                         is_set.add((target.key, param))
                     else:
